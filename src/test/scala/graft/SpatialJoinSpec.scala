@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.core.{Geom, GPolygon}
 import graft.operators.{KnnJoin, SpatialJoin}
 import graft.sources.Pages
 
@@ -34,6 +35,38 @@ class SpatialJoinSpec extends AnyFunSuite {
       assert(got.distinct.size === got.size, "duplicate (point, zone) pairs")
     }
     assert(expected.nonEmpty, "fixture should produce matches")
+  }
+
+  test("boundary-inclusive PIP join matches brute force, also on zone edges and vertices") {
+    val zs = zonesDF(40).cache()
+    // points of the 0.0001-degree lattice exactly on the zones' vertices and
+    // on their (axis-aligned) edges, where contains and intersects part ways
+    def lattice(v: Double): Double = math.rint(v * 1e4) / 1e4
+    val onEdges = Pages.zones(40).flatMap { case (_, wkt) =>
+      val r = Geom.fromWkt(wkt).asInstanceOf[GPolygon].exterior
+      (1 until r.numPoints).flatMap { i =>
+        val (x0, y0, x1, y1) = (r.x(i - 1), r.y(i - 1), r.x(i), r.y(i))
+        Seq((x0, y0), if (y0 == y1) (lattice((x0 + x1) / 2), y0) else (x0, lattice((y0 + y1) / 2)))
+      }
+    }
+    val latticeIds = onEdges.indices.map(_ + 1000000L)
+    val pts = points(3000, 5L).union(latticeIds.zip(onEdges)
+      .map { case (id, (x, y)) => (id, x, y) }.toDF("pid", "lon", "lat")).cache()
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select($"pid", $"zone_id").as[(Long, Long)].collect().sorted.toSeq
+    val expected = pairs(pts.crossJoin(zs).filter(gf.st_intersects_point($"geom", $"lon", $"lat")))
+    for (res <- Seq(4, 6, 9)) {
+      val got = pairs(SpatialJoin.pointIntersectsPolygon(pts, $"lon", $"lat", zs, $"geom", res))
+      assert(got === expected, s"res=$res")
+      assert(got.distinct.size === got.size, "duplicate (point, zone) pairs")
+    }
+    val onLattice = latticeIds.toSet
+    val touching = expected.filter(p => onLattice(p._1))
+    val contained = pairs(SpatialJoin.pointInPolygon(pts, $"lon", $"lat", zs, $"geom", 6))
+      .filter(p => onLattice(p._1))
+    assert(touching.map(_._1).distinct.size === onEdges.size, "every edge point touches its zone")
+    assert(contained.toSet.subsetOf(touching.toSet))
+    assert(contained.size < touching.size, "boundary points must separate the two predicates")
   }
 
   test("salted PIP join matches broadcast variant") {
