@@ -9,52 +9,32 @@ import org.apache.spark.sql.functions._
   * Dijkstra shortest path, `:196` ConnectedComponents) as iterative
   * DataFrame joins (Pregel-style message passing, AQE-planned).
   *
-  * Scale notes: each iteration is one join + aggregate on the edge list
-  * (shuffle on vertex id); `localCheckpoint` every few rounds truncates
-  * the lineage so plans stay small at high iteration counts.
+  * Scale notes: connected components delegate to the shared
+  * [[UnionFind]] kernel (hooking + pointer doubling, so rounds do not grow
+  * with the graph's diameter). The shortest-path relaxations are one
+  * join + aggregate on the edge list per iteration (shuffle on vertex
+  * id); `localCheckpoint` every few rounds truncates the lineage so plans
+  * stay small at high iteration counts.
   */
 object GraphOps {
 
-  /** Connected components by iterative min-label propagation.
-    * Converges in O(diameter) rounds.
+  /** Connected components: an adapter over [[UnionFind.roots]] (the
+    * `Dedup.clusters` shape) — every vertex of either edge column, with
+    * self-loop-only vertices kept as their own component.
     *
     * @param edges DataFrame with two long vertex columns (undirected)
-    * @return (vertex, component) — component = min vertex id reachable
+    * @return (vertex, comp) — comp = min vertex id reachable
     */
-  def connectedComponents(edges: DataFrame, src: Column, dst: Column,
-                          maxIter: Int = 50): DataFrame = {
-    val sym = edges.select(src.cast("long").as("u"), dst.cast("long").as("v"))
-      .union(edges.select(dst.cast("long").as("u"), src.cast("long").as("v")))
-      .distinct().cache()
-    var labels = sym.select(col("u").as("vertex"))
-      .union(sym.select(col("v").as("vertex"))).distinct()
-      .withColumn("comp", col("vertex")).cache()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // candidate labels: own + min neighbor label
-      val msgs = sym.join(labels, sym("v") === labels("vertex"))
-        .select(col("u").as("vertex"), col("comp"))
-      val newLabels = labels.select(col("vertex"), col("comp"))
-        .union(msgs)
-        .groupBy(col("vertex")).agg(min(col("comp")).as("comp"))
-        .ckpt()
-      val changed = newLabels.alias("n")
-        .join(labels.alias("o"), col("n.vertex") === col("o.vertex"))
-        .filter(col("n.comp") =!= col("o.comp")).limit(1).count()
-      labels.unpersist()
-      labels = newLabels
-      converged = changed == 0
-      iter += 1
-    }
-    sym.unpersist()
-    // same rule as kShortestPathsDistributed: a silent partial answer on a
-    // graph whose diameter exceeds maxIter is one component reported as
-    // several — fail loudly instead
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents: label propagation did not converge in " +
-        s"$maxIter rounds (graph diameter likely exceeds it); raise maxIter")
-    labels
+  def connectedComponents(edges: DataFrame, src: Column, dst: Column): DataFrame = {
+    val e = edges.select(src.cast("long").as("a"), dst.cast("long").as("b"))
+    val roots = UnionFind.roots(e).withColumnRenamed("gid", "vertex")
+    val out = e.select(col("a").as("vertex")).union(e.select(col("b").as("vertex")))
+      .distinct()
+      .join(roots, Seq("vertex"), "left")
+      .select(col("vertex"), coalesce(col("root"), col("vertex")).as("comp"))
+      .ckpt()
+    roots.unpersist(false)
+    out
   }
 
   /** K shortest loopless paths — Yen's algorithm over Dijkstra, the

@@ -2,6 +2,7 @@ package graft.raster
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.core.Ckpt.CkptOps
+import graft.operators.UnionFind
 
 /** Distributed strip-boundary component merge for the 2-phase connected-
   * components layout (polygonize, sieve).
@@ -13,13 +14,13 @@ import graft.core.Ckpt.CkptOps
   * k−1; each boundary group (two rows) emits only the DEDUPED global-id
   * equivalence pairs found along it.
   *
-  * The union-find over those pairs is two-mode:
-  *  - pairs ≤ `driverPairLimit`: collect and union-find on the driver
-  *    (one small job, zero extra shuffles — the common case);
-  *  - pairs  > `driverPairLimit` (salt-and-pepper noise is ~width/2 pairs
-  *    PER SEAM, so a 10⁶-px-wide raster in 10³ strips is ~5·10⁸ pairs —
-  *    driver OOM territory): [[graft.operators.UnionFind]] resolves roots
-  *    distributed (min-label propagation + pointer doubling), and the
+  * The union-find over those pairs follows the [[UnionFind]] mode policy:
+  *  - pairs under the driver pair limit: collected and resolved by
+  *    `UnionFind.driverRoots` (one small job, zero extra shuffles — the
+  *    common case);
+  *  - over it (salt-and-pepper noise is ~width/2 pairs PER SEAM, so a
+  *    10⁶-px-wide raster in 10³ strips is ~5·10⁸ pairs — driver OOM
+  *    territory): `UnionFind.roots` resolves roots distributed, and the
   *    per-strip root maps travel to consumers as extra [[Side]] rows in the
   *    same cogroup stream as the halos. The driver then never sees
   *    per-pixel-derived data at all (`lastDriverPairs == 0`).
@@ -101,23 +102,6 @@ object BoundaryMerge extends Serializable {
     */
   @volatile var lastDriverPairs: Long = -1
 
-  /** Above this many equivalence pairs the union-find moves off the driver.
-    * 4M pairs ≈ 64 MB driver-side — comfortably under default driver
-    * memory, far above anything a non-adversarial raster produces.
-    */
-  val DefaultDriverPairLimit: Long = 4000000L
-
-  /** Session-conf key overriding the caller's driverPairLimit. */
-  val DriverPairLimitKey = "spark.graft.boundary.driverPairLimit"
-
-  /** Overflow-safe take() cap for a driver-pair limit: clamp BEFORE the
-    * +1 so a Long.MaxValue limit cannot wrap, and keep the result below
-    * Int.MaxValue for take(). A take() that fills this cap may be
-    * truncated — callers must route to the distributed path then.
-    */
-  def takeCapFor(limit: Long): Int =
-    (math.min(math.max(limit, 0L), Int.MaxValue.toLong - 9L) + 1L).toInt
-
   /** Owner strip of a global id: largest k with base(k) ≤ gid. */
   @inline def ownerStrip(base: Array[Long], gid: Long): Int = {
     val pos = java.util.Arrays.binarySearch(base, gid)
@@ -128,8 +112,7 @@ object BoundaryMerge extends Serializable {
     * `summaries` is consumed by several actions — callers should persist it.
     */
   def merge(spark: SparkSession, summaries: Dataset[BoundarySummary],
-            w: Int, conn: Int,
-            driverPairLimit: Long = DefaultDriverPairLimit): Merged = {
+            w: Int, conn: Int): Merged = {
     import spark.implicits._
     val counts = summaries.map(s => (s.stripIdx, s.nIds)).collect().sortBy(_._1)
     val n = counts.length
@@ -184,81 +167,56 @@ object BoundaryMerge extends Serializable {
           out.result().iterator
         }
       }
-    // session-conf override (cluster tuning / test forcing)
-    val limit = spark.conf.get(DriverPairLimitKey, driverPairLimit.toString).toLong
-    // take(limit+1) keeps the common case at ONE job (no persist/count
-    // pre-pass); only the over-limit case pays a recompute of the pair
-    // lineage (whose `summaries` input the callers persist)
-    val takeCap = takeCapFor(limit)
-    val taken = pairsDs.take(takeCap)
-    if (taken.length < takeCap) {
-      // ---- driver mode: collect pairs, union-find in memory ----
-      val pairs = taken
-      lastDriverPairs = pairs.length.toLong
-
-      val parent = new scala.collection.mutable.HashMap[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      pairs.foreach { case (a, b) =>
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val roots: Map[Long, Long] = parent.keys.map(x => x -> find(x)).toMap
-      val rootsB = sc.broadcast(roots)
-
-      val side = summaries.map { s =>
-        val sBase = baseB.value(s.stripIdx)
-        val rm = rootsB.value
-        val g = new Array[Long](s.botIds.length)
-        var x = 0
-        while (x < g.length) {
-          val id = s.botIds(x)
-          g(x) = if (id == -1) -1L
-                 else { val gid = sBase + id; rm.getOrElse(gid, gid) }
-          x += 1
+    UnionFind.driverPairs(pairsDs) match {
+      case Some(pairs) =>
+        // ---- driver mode: pairs collected, union-find in memory ----
+        lastDriverPairs = pairs.length.toLong
+        val roots = UnionFind.driverRoots(pairs)
+        val rootsB = sc.broadcast(roots)
+        val side = summaries.map { s =>
+          val rm = rootsB.value
+          haloSide(s, baseB.value, gid => rm.getOrElse(gid, gid))
         }
-        Side(s.stripIdx + 1, s.botVals, g, null, null)
-      }
-      Merged(base, roots, side, pairs.length.toLong, distributed = false)
-    } else {
-      // ---- distributed mode: union-find as a Spark job; the driver never
-      // materializes pairs. Roots reach consumers as per-strip Side rows.
-      lastDriverPairs = 0L
-      val rootsDF = graft.operators.UnionFind.roots(pairsDs.toDF("a", "b"))
-      val rootRows: Dataset[Side] = rootsDF.as[(Long, Long)]
-        .groupByKey { case (gid, _) => ownerStrip(baseB.value, gid) }
-        .mapGroups { (k, it) =>
-          val gs = Array.newBuilder[Long]; val rs = Array.newBuilder[Long]
-          it.foreach { case (g, r) => gs += g; rs += r }
-          Side(k, null, null, gs.result(), rs.result())
-        }.ckpt() // consumed twice: halo resolution below + the side union
-      rootsDF.unpersist(false) // rolled into rootRows; drop the UnionFind cache
+        Merged(base, roots, side, pairs.length.toLong, distributed = false)
+      case None =>
+        // ---- distributed mode: union-find as a Spark job; the driver
+        // never materializes pairs. Roots reach consumers as per-strip
+        // Side rows.
+        lastDriverPairs = 0L
+        val rootsDF = UnionFind.roots(pairsDs.toDF("a", "b"))
+        val rootRows: Dataset[Side] = rootsDF.as[(Long, Long)]
+          .groupByKey { case (gid, _) => ownerStrip(baseB.value, gid) }
+          .mapGroups { (k, it) =>
+            val gs = Array.newBuilder[Long]; val rs = Array.newBuilder[Long]
+            it.foreach { case (g, r) => gs += g; rs += r }
+            Side(k, null, null, gs.result(), rs.result())
+          }.ckpt() // consumed twice: halo resolution below + the side union
+        rootsDF.unpersist(false) // rolled into rootRows; drop the UnionFind cache
 
-      val haloRows: Dataset[Side] = summaries.groupByKey(_.stripIdx)
-        .cogroup(rootRows.groupByKey(_.stripIdx)) { (_, sIt, rIt) =>
-          val rm = sideRootMap(rIt.toSeq)
-          sIt.map { s =>
-            val sBase = baseB.value(s.stripIdx)
-            val g = new Array[Long](s.botIds.length)
-            var x = 0
-            while (x < g.length) {
-              val id = s.botIds(x)
-              g(x) = if (id == -1) -1L
-                     else { val gid = sBase + id
-                            if (rm != null) rm.getOrElse(gid, gid) else gid }
-              x += 1
-            }
-            Side(s.stripIdx + 1, s.botVals, g, null, null)
+        val haloRows: Dataset[Side] = summaries.groupByKey(_.stripIdx)
+          .cogroup(rootRows.groupByKey(_.stripIdx)) { (_, sIt, rIt) =>
+            val rm = sideRootMap(rIt.toSeq)
+            sIt.map(s => haloSide(s, baseB.value,
+              if (rm == null) identity else gid => rm.getOrElse(gid, gid)))
           }
-        }
-      // exact pair count is not re-derived in distributed mode (it would
-      // cost another scan); -1 = "over the driver limit"
-      Merged(base, Map.empty, haloRows.union(rootRows), -1L, distributed = true)
+        // exact pair count is not re-derived in distributed mode (it would
+        // cost another scan); -1 = "over the driver limit"
+        Merged(base, Map.empty, haloRows.union(rootRows), -1L, distributed = true)
     }
+  }
+
+  /** Strip `s`'s bottom row as the halo of strip `s + 1`, ids resolved to
+    * global roots.
+    */
+  private def haloSide(s: BoundarySummary, base: Array[Long], root: Long => Long): Side = {
+    val sBase = base(s.stripIdx)
+    val g = new Array[Long](s.botIds.length)
+    var x = 0
+    while (x < g.length) {
+      val id = s.botIds(x)
+      g(x) = if (id == -1) -1L else root(sBase + id)
+      x += 1
+    }
+    Side(s.stripIdx + 1, s.botVals, g, null, null)
   }
 }

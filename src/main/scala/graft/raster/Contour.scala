@@ -3,6 +3,7 @@ package graft.raster
 import graft.core.Ckpt.CkptOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import graft.core.{GLine, GeoTransform}
+import graft.operators.UnionFind
 import graft.raster.Dem.DStrip
 import scala.collection.mutable
 
@@ -251,20 +252,28 @@ object Contour extends Serializable {
       }
     }.ckpt() // reused for boundary collection AND final merge
 
-    // seam-crossing chain endpoints — kept distributed; only a COUNT
-    // reaches the driver before choosing the union-find mode
-    val boundaryDs = chains.flatMap { c =>
+    // chain ids packed into a Long: level index | strip | local index
+    val lvlIdxB = spark.sparkContext.broadcast(lvls.zipWithIndex.toMap)
+    require(lvls.length <= (1 << 20), "contour: too many levels to pack")
+    def pack(c: StripChain): Long = {
+      require(c.stripIdx < (1 << 22) && c.localIdx < (1 << 22), "contour: pack overflow")
+      (lvlIdxB.value(c.level).toLong << 44) | (c.stripIdx.toLong << 22) | c.localIdx.toLong
+    }
+    // seam pairs: chains whose endpoints meet at the same seam point are
+    // equivalent. The UnionFind mode limit counts these pairs (a
+    // continental DEM with 100 levels has millions — never driver-collected
+    // then); the over-limit case recomputes from `chains`, checkpointed above
+    val pairsDs: Dataset[(Long, Long)] = chains.flatMap { c =>
       val n = c.xy.length / 2
       Seq((c.xy(0), c.xy(1)), (c.xy(2 * (n - 1)), c.xy(2 * (n - 1) + 1)))
         .filter { case (_, ey) => ey == math.floor(ey) + 0.5 } // on a row seam
-        .map { case (ex, ey) => (c.level, c.stripIdx, c.localIdx, ex, ey) }
+        .map { case (ex, ey) => (c.level, ex, ey, pack(c)) }
+    }.groupByKey(t => (t._1, t._2, t._3)).flatMapGroups { (_, it) =>
+      val ids = mutable.LinkedHashSet[Long]()
+      it.foreach(t => ids += t._4)
+      if (ids.size < 2) Iterator.empty
+      else ids.toSeq.sliding(2).map(p => (p(0), p(1))).toVector.iterator
     }
-    val limit = spark.conf.get(BoundaryMerge.DriverPairLimitKey,
-      BoundaryMerge.DefaultDriverPairLimit.toString).toLong
-    // take(limit+1) keeps the common case at one job; the over-limit case
-    // recomputes from `chains`, which is checkpointed above
-    val takeCap = BoundaryMerge.takeCapFor(limit)
-    val taken = boundaryDs.take(takeCap)
     val gtB = spark.sparkContext.broadcast(gt)
 
     def mergeGroup(level: Double, it: Iterator[StripChain]): Iterator[(Double, Array[Byte])] = {
@@ -281,67 +290,25 @@ object Contour extends Serializable {
       }
     }
 
-    val out =
-      if (taken.length < takeCap) {
-        // ---- driver mode: endpoints already taken, union-find in memory --
-        val boundary = taken
-        val parent = mutable.HashMap[(Double, Int, Int), (Double, Int, Int)]()
-        def find(x: (Double, Int, Int)): (Double, Int, Int) = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          r
-        }
-        def union(a: (Double, Int, Int), b: (Double, Int, Int)): Unit = {
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) parent(if (Ordering[(Double, Int, Int)].gt(ra, rb)) ra else rb) =
-            if (Ordering[(Double, Int, Int)].gt(ra, rb)) rb else ra
-        }
-        boundary.groupBy { case (level, _, _, ex, ey) => (level, ex, ey) }.values.foreach { grp =>
-          val ids = grp.map { case (level, si, li, _, _) => (level, si, li) }.distinct
-          ids.sliding(2).foreach { pair => if (pair.length == 2) union(pair(0), pair(1)) }
-        }
-        val rootOf: Map[(Double, Int, Int), (Double, Int, Int)] =
-          boundary.map { case (level, si, li, _, _) =>
-            val k = (level, si, li); k -> find(k)
-          }.toMap
-        val rootB = spark.sparkContext.broadcast(rootOf)
-
-        chains.groupByKey { c =>
-          val k = (c.level, c.stripIdx, c.localIdx)
-          rootB.value.getOrElse(k, k)
-        }.flatMapGroups { (key, it) => mergeGroup(key._1, it) }
-      } else {
-        // ---- distributed mode: chain ids packed into a Long, equivalence
-        // pairs per seam point, UnionFind as a Spark job, roots joined back
-        // (a continental DEM with 100 levels has millions of endpoint
-        // tuples — never driver-collected here)
-        val lvlIdxB = spark.sparkContext.broadcast(
-          lvls.zipWithIndex.toMap)
-        require(lvls.length <= (1 << 20), "contour: too many levels to pack")
-        def pack(level: Double, si: Int, li: Int): Long = {
-          require(si < (1 << 22) && li < (1 << 22), "contour: pack overflow")
-          (lvlIdxB.value(level).toLong << 44) | (si.toLong << 22) | li.toLong
-        }
-        val pairsDf = boundaryDs.groupByKey(t => (t._1, t._4, t._5))
-          .flatMapGroups { (_, it) =>
-            val ids = mutable.LinkedHashSet[Long]()
-            it.foreach(t => ids += pack(t._1, t._2, t._3))
-            if (ids.size < 2) Iterator.empty
-            else ids.toSeq.sliding(2).map(p => (p(0), p(1))).toVector.iterator
-          }.toDF("a", "b")
-        val rootsDF = graft.operators.UnionFind.roots(pairsDf)
-          .withColumnRenamed("gid", "pid")
-        val keyed = chains.map(c => (pack(c.level, c.stripIdx, c.localIdx), c))
-          .toDF("pid", "c")
+    // key every chain by its component root: a broadcast map (driver mode)
+    // or a join against the distributed roots
+    val keyed: Dataset[(Long, StripChain)] = UnionFind.driverPairs(pairsDs) match {
+      case Some(pairs) =>
+        val rootB = spark.sparkContext.broadcast(UnionFind.driverRoots(pairs))
+        chains.map { c => val k = pack(c); (rootB.value.getOrElse(k, k), c) }
+      case None =>
         import org.apache.spark.sql.functions.{coalesce, col}
-        val withRoot = keyed.join(rootsDF, Seq("pid"), "left")
-          .select(coalesce(col("root"), col("pid")).as("gkey"), col("c"))
+        val rootsDF = UnionFind.roots(pairsDs.toDF("a", "b"))
+          .withColumnRenamed("gid", "pid")
+        chains.map(c => (pack(c), c)).toDF("pid", "c")
+          .join(rootsDF, Seq("pid"), "left")
+          .select(coalesce(col("root"), col("pid")), col("c"))
           .as[(Long, StripChain)]
-        withRoot.groupByKey(_._1).flatMapGroups { (_, it) =>
-          val ms = it.toSeq
-          mergeGroup(ms.head._2.level, ms.iterator.map(_._2))
-        }
-      }
+    }
+    val out = keyed.groupByKey(_._1).flatMapGroups { (_, it) =>
+      val ms = it.toSeq
+      mergeGroup(ms.head._2.level, ms.iterator.map(_._2))
+    }
     out.toDF("level", "wkb")
   }
 

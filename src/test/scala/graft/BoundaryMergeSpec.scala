@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.UnionFind
 import graft.raster.{BoundaryMerge, Polygonize, RasterStrips, Sieve, StripScan}
 import graft.raster.Overview.IStrip
 import graft.raster.RasterStrips.ValueStrip
@@ -82,14 +83,14 @@ class BoundaryMergeSpec extends AnyFunSuite {
         r.getAs[Array[Byte]](1).map("%02x".format(_)).mkString)).toSeq.sorted
     val viaDriver = canon(RasterStrips.polygonize(spark, strips(), Wd, Hd, 4, gt))
     assert(BoundaryMerge.lastDriverPairs === 3L * Wd) // one pair per column per seam
-    spark.conf.set(BoundaryMerge.DriverPairLimitKey, "0")
+    spark.conf.set(UnionFind.DriverPairLimitKey, "0")
     try {
       val viaDist = canon(RasterStrips.polygonize(spark, strips(), Wd, Hd, 4, gt))
       assert(BoundaryMerge.lastDriverPairs === 0L,
         "distributed path must not collect pairs to the driver")
       assert(viaDist.length === Wd) // every column its own component
       assert(viaDist === viaDriver)
-    } finally spark.conf.unset(BoundaryMerge.DriverPairLimitKey)
+    } finally spark.conf.unset(UnionFind.DriverPairLimitKey)
   }
 
   test("distributed union-find path: sieve matches serial, both rewrite paths") {
@@ -100,7 +101,7 @@ class BoundaryMergeSpec extends AnyFunSuite {
       if (x % 10 < 2) 7 else x % 10
     }
     val expect = Sieve.sieveLocal(vals, Wd, Hd, 10, 4)
-    spark.conf.set(BoundaryMerge.DriverPairLimitKey, "0")
+    spark.conf.set(UnionFind.DriverPairLimitKey, "0")
     try {
       for (bcastLimit <- Seq(0L, 4000000L)) {
         val strips = (0 until 3).map { i =>
@@ -111,7 +112,7 @@ class BoundaryMergeSpec extends AnyFunSuite {
         assert(BoundaryMerge.lastDriverPairs === 0L)
         assert(got.toSeq === expect.toSeq, s"bcastRewriteLimit=$bcastLimit")
       }
-    } finally spark.conf.unset(BoundaryMerge.DriverPairLimitKey)
+    } finally spark.conf.unset(UnionFind.DriverPairLimitKey)
   }
 
   test("UnionFind.roots matches a serial union-find on a random graph") {
@@ -131,6 +132,20 @@ class BoundaryMergeSpec extends AnyFunSuite {
     val got = graft.operators.UnionFind.roots(edges.toDF("a", "b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === expect)
+    assert(UnionFind.driverRoots(edges) === expect)
+  }
+
+  test("UnionFind.roots on a shuffled-id 100x100 grid converges under the default cap") {
+    // random ids defeat id-order luck: plain min-label propagation with
+    // pointer doubling needs ~80 rounds here, hooking p(a) needs ~7
+    val side = 100
+    val ids = new scala.util.Random(11).shuffle((0L until side * side).toVector)
+    val edges = for (y <- 0 until side; x <- 0 until side;
+                     (dx, dy) <- Seq((1, 0), (0, 1)) if x + dx < side && y + dy < side)
+      yield (ids(y * side + x), ids((y + dy) * side + x + dx))
+    val got = UnionFind.roots(edges.toDF("a", "b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === (1L until side * side).map(_ -> 0L).toMap) // serial answer
   }
 
   test("UnionFind.roots on empty and self-loop-only edges is empty") {

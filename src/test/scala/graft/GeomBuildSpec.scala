@@ -58,6 +58,22 @@ class GeomBuildSpec extends AnyFunSuite {
     val cc = graft.operators.GraphOps.connectedComponents(edges, $"u", $"v")
       .as[(Long, Long)].collect().toMap
     assert(cc(1L) === 1L && cc(4L) === 1L && cc(11L) === 10L)
+    // a self-loop-only vertex is its own component; duplicate and reversed
+    // edges change nothing
+    val extra = Seq((7L, 7L), (2L, 1L), (1L, 2L), (11L, 10L)).toDF("u", "v")
+    val cc2 = graft.operators.GraphOps.connectedComponents(
+        edges.select($"u", $"v").union(extra), $"u", $"v")
+      .as[(Long, Long)].collect()
+    assert(cc2.toMap === cc + (7L -> 7L))
+    assert(cc2.length === cc.size + 1)
+    // a 10^4-vertex path with shuffled ids is one component labeled with
+    // its min id (min-label propagation would need ~10^4 rounds)
+    val ids = new scala.util.Random(5).shuffle((100L until 10100L).toVector)
+    val path = ids.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("u", "v")
+    val pcc = graft.operators.GraphOps.connectedComponents(path, $"u", $"v")
+      .as[(Long, Long)].collect()
+    assert(pcc.length === 10000)
+    assert(pcc.forall(_._2 == 100L))
     // shortest paths from 1 over symmetric closure
     val sym = edges.union(edges.select($"v", $"u", $"w"))
     val sp = graft.operators.GraphOps.shortestPaths(sym, $"u", $"v", $"w", 1L)

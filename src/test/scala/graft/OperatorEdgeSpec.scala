@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{Ann, Dedup, GraphOps, KnnJoin, Multimodal, TextOps}
+import graft.operators.{Ann, Dedup, GraphOps, KnnJoin, Multimodal, TextOps, UnionFind}
 
 /** Operator edge-case regressions from the round-4 operators review. */
 class OperatorEdgeSpec extends AnyFunSuite {
@@ -47,8 +47,7 @@ class OperatorEdgeSpec extends AnyFunSuite {
     val ok = GraphOps.connectedComponents(chain, col("u"), col("v"))
     assert(ok.select(countDistinct(col("comp"))).as[Long].head() == 1L)
     assertThrows[IllegalStateException](
-      GraphOps.connectedComponents(chain, col("u"), col("v"), maxIter = 2)
-        .count())
+      UnionFind.roots(chain.toDF("a", "b"), maxRounds = 1).count())
   }
 
   test("kShortestPaths prices multigraph hops by the min parallel edge") {
