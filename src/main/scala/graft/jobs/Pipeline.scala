@@ -17,12 +17,12 @@ import graft.operators.SpatialJoin
   *    pages (url-hash — stable across runs and cluster sizes); each batch
   *    runs as one fully-parallel Spark job writing `out/batch=<b>/`, then
   *    commits a `_lineage/batch-<b>.json` record with input/output counts
-  *    and an order-insensitive result checksum;
+  *    and an order-insensitive result checksum, folded from its part records;
   *  - WITHIN a batch, rows carry a deterministic partition id and each
-  *    write task durably commits its own partitions
-  *    (`_lineage/batch-<b>/part-<p>.json`, see [[runBatch]]), so a job
-  *    killed mid-batch resumes from the first uncommitted PARTITION, not
-  *    the batch start.
+  *    write task durably commits its own partitions, each with its rows
+  *    and checksum (`_lineage/batch-<b>/part-<p>.json`, see [[runBatch]]),
+  *    so a job killed mid-batch resumes from the first uncommitted
+  *    PARTITION, not the batch start.
   * A restarted job lists committed records and skips them — the
   * reference's chunked processing loops
   * (`/root/reference/gdal/alg/gdalrasterize.cpp:655-706`,
@@ -101,14 +101,27 @@ object Pipeline {
   }
 
   /** Committed output partitions of a batch: `_lineage/batch-<b>/part-<p>.json`. */
-  def committedParts(spark: SparkSession, cfg: Config, b: Int): Set[Int] = {
+  def committedParts(spark: SparkSession, cfg: Config, b: Int): Set[Int] =
+    partRecords(spark, cfg, b).keySet
+
+  /** pid → (rows, checksum) of the batch's part records. A record without
+    * either key (written by an older build) throws instead of folding in as 0.
+    */
+  private def partRecords(spark: SparkSession, cfg: Config, b: Int): Map[Int, (Long, Long)] = {
     val fs = new Path(cfg.outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = new Path(s"${lineageDir(cfg)}/batch-$b")
-    if (!fs.exists(dir)) Set.empty
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .collect { case n if n.startsWith("part-") && n.endsWith(".json") =>
-        n.stripPrefix("part-").stripSuffix(".json").toInt
-      }.toSet
+    if (!fs.exists(dir)) Map.empty
+    else fs.listStatus(dir).map(_.getPath)
+      .collect { case p if p.getName.startsWith("part-") && p.getName.endsWith(".json") =>
+        val in = fs.open(p)
+        val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+        def field(key: String): Long = s""""$key":(-?\\d+)""".r.findFirstMatchIn(json)
+          .map(_.group(1).toLong)
+          .getOrElse(throw new IllegalStateException(
+            s"""part record $p has no "$key" key: $json"""))
+        p.getName.stripPrefix("part-").stripSuffix(".json").toInt ->
+          (field("rows"), field("checksum"))
+      }.toMap
   }
 
   /** One batch, committed at PARTITION granularity: rows get a
@@ -121,8 +134,8 @@ object Pipeline {
     * scan before the shuffle, and their files are never rewritten.
     *
     * The input-page count is observed from the same scan (no second count
-    * job); output stats come from re-reading the just-written batch
-    * parquet (small, local to the batch).
+    * job); output stats sum and XOR the part records, including those of
+    * an earlier, killed attempt, so no Spark job runs after the write.
     */
   private def runBatch(spark: SparkSession, batchPages: DataFrame, zones: DataFrame,
                        cfg: Config, b: Int): BatchResult = {
@@ -141,8 +154,10 @@ object Pipeline {
     val conf = new TaskParquet.SerConf(spark.sparkContext.hadoopConfiguration)
     val bconf = spark.sparkContext.broadcast(conf)
     val failAfter = cfg.failAfterParts
-    val pidIdx = schema.length // __pid is the last column
+    val pidIdx = schema.length // __pid, then __h, follow the output columns
+    // hashed after the shuffle, so the shuffle does not carry it
     pending.repartition(cfg.nParts, col("__pid"))
+      .withColumn("__h", xxhash64(col("url"), col("cell"), col("zone_id")))
       .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
         if (it.hasNext) {
           val hconf = bconf.value.conf
@@ -151,7 +166,8 @@ object Pipeline {
           fs.mkdirs(new Path(batchDir)); fs.mkdirs(new Path(partLineDir))
           val attempt = java.util.UUID.randomUUID().toString.take(8)
           // hash collisions can land several pids in one task: one
-          // streaming writer per pid, commit each pid independently
+          // streaming writer and (rows, checksum) stat per pid, commit
+          // each pid independently
           val writers = scala.collection.mutable.HashMap
             .empty[Int, (Path, TaskParquet.RowFileWriter, Array[Long])]
           // on ANY failure mid-partition, close and delete every open tmp
@@ -164,11 +180,12 @@ object Pipeline {
             val (_, w, stat) = writers.getOrElseUpdate(pid, {
               val tmp = new Path(s"$batchDir/.part-$pid-$attempt.tmp")
               (tmp, new TaskParquet.RowFileWriter(hconf, tmp, schema, mt),
-                Array(0L))
+                Array(0L, 0L))
             })
-            // strip __pid: rebuild the row view without the last field
-            w.add(org.apache.spark.sql.Row.fromSeq(row.toSeq.dropRight(1)))
+            // strip __pid and __h: rebuild the row view without the last two fields
+            w.add(org.apache.spark.sql.Row.fromSeq(row.toSeq.dropRight(2)))
             stat(0) += 1
+            stat(1) ^= row.getLong(pidIdx + 1)
           }
           writers.toSeq.sortBy(_._1).foreach { case (pid, (tmp, w, stat)) =>
             w.close()
@@ -181,7 +198,8 @@ object Pipeline {
             val recTmp = new Path(s"$partLineDir/.part-$pid-$attempt.tmp")
             val rec = new Path(s"$partLineDir/part-$pid.json")
             val os = fs.create(recTmp, true)
-            os.write(s"""{"batch":$b,"part":$pid,"rows":${stat(0)}}""".getBytes("UTF-8"))
+            os.write(s"""{"batch":$b,"part":$pid,"rows":${stat(0)},"checksum":${stat(1)}}"""
+              .getBytes("UTF-8"))
             os.close()
             if (!fs.rename(recTmp, rec) && !fs.exists(rec))
               throw new java.io.IOException(s"lineage commit failed for $rec")
@@ -201,18 +219,8 @@ object Pipeline {
         }
       }
     val inCount = obs.get("n").asInstanceOf[Long]
-    val fs = new Path(cfg.outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = if (fs.exists(new Path(batchDir)))
-      fs.listStatus(new Path(batchDir)).map(_.getPath.toString)
-        .filter(_.endsWith(".parquet")).sorted
-    else Array.empty[String]
-    if (files.isEmpty) BatchResult(b, inCount, 0L, 0L)
-    else {
-      val stats = spark.read.parquet(files.toIndexedSeq: _*).agg(
-        count(lit(1)),
-        coalesce(bit_xor(xxhash64(col("url"), col("cell"), col("zone_id"))), lit(0L))).head()
-      BatchResult(b, inCount, stats.getLong(0), stats.getLong(1))
-    }
+    val parts = partRecords(spark, cfg, b).values
+    BatchResult(b, inCount, parts.map(_._1).sum, parts.map(_._2).foldLeft(0L)(_ ^ _))
   }
 
   private def commitLoop(spark: SparkSession, cfg: Config,

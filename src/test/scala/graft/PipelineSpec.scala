@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.jobs.Pipeline
 import graft.sources.Pages
@@ -11,6 +13,34 @@ class PipelineSpec extends AnyFunSuite {
 
   private def zones = Pages.zones(12).toDF("zone_id", "wkt")
     .withColumn("geom", gf.st_geomfromtext($"wkt")).select($"zone_id", $"geom")
+
+  /** The integer fields of one lineage JSON record. */
+  private def record(path: String): Map[String, Long] =
+    """"(\w+)":(-?\d+)""".r
+      .findAllMatchIn(new String(Files.readAllBytes(Paths.get(path)), "UTF-8"))
+      .map(m => m.group(1) -> m.group(2).toLong).toMap
+
+  /** (rows, checksum) as a lineage record states them, recomputed from `df`. */
+  private def stats(df: DataFrame): (Long, Long) = {
+    val r = df.agg(count(lit(1)),
+      coalesce(bit_xor(xxhash64($"url", $"cell", $"zone_id")), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** Every batch record of a finished `Pipeline.run` equals a re-read of
+    * the batch's parquet and a read-only transform of the batch's pages.
+    */
+  private def assertBatchRecordsMatch(pages: DataFrame, cfg: Pipeline.Config): Unit =
+    (0 until cfg.nBatches).foreach { b =>
+      val rec = record(s"${cfg.outDir}/_lineage/batch-$b.json")
+      val dir = s"${cfg.outDir}/batch=$b"
+      val onDisk = if (Files.exists(Paths.get(dir))) stats(spark.read.parquet(dir)) else (0L, 0L)
+      val batchPages = pages.filter(pmod(xxhash64($"url"), lit(cfg.nBatches)) === b)
+      assert((rec("out_rows"), rec("checksum")) === onDisk, s"batch $b record vs its parquet")
+      assert(stats(Pipeline.transform(batchPages, zones, cfg)) === onDisk,
+        s"batch $b parquet vs transform")
+      assert(onDisk._1 > 0, s"batch $b wrote no rows")
+    }
 
   test("pipeline resumes from lineage after injected failure; output identical") {
     val pages = Pages.synth(spark, 4000L).cache()
@@ -124,5 +154,96 @@ class PipelineSpec extends AnyFunSuite {
     // lineage in-counts cover every input page exactly once across batches
     val totIn = Pipeline.committedBatches(spark, cfgF) // 3 batches committed
     assert(totIn.size === 3)
+  }
+
+  test("lineage records equal a re-read of the written parquet and a read-only transform") {
+    val pages = Pages.synth(spark, 4000L).cache()
+    val dir = Files.createTempDirectory("graft-pipe-stats").toString
+    val cfg = Pipeline.Config(outDir = dir, nBatches = 2, nParts = 16)
+    val res = Pipeline.run(spark, pages, zones, cfg)
+    assertBatchRecordsMatch(pages, cfg)
+    res.foreach { r =>
+      val rec = record(s"$dir/_lineage/batch-${r.batch}.json")
+      assert((r.outRows, r.checksum) === (rec("out_rows"), rec("checksum")))
+    }
+    pages.unpersist()
+  }
+
+  test("lineage after a mid-batch kill counts the killed attempt's parts") {
+    val pages = Pages.synth(spark, 4000L).cache()
+    val dir = Files.createTempDirectory("graft-pipe-kstats").toString
+    val cfg = Pipeline.Config(outDir = dir, nBatches = 2, nParts = 16, failAfterParts = 5)
+    graft.jobs.PartKill.committed.set(0)
+    intercept[org.apache.spark.SparkException] { Pipeline.run(spark, pages, zones, cfg) }
+    val killed = Pipeline.committedParts(spark, cfg, 0)
+    assert(killed.nonEmpty && killed.size < 16, s"kill left parts $killed")
+    graft.jobs.PartKill.committed.set(0)
+    Pipeline.run(spark, pages, zones, cfg.copy(failAfterParts = -1))
+    assertBatchRecordsMatch(pages, cfg)
+    pages.unpersist()
+  }
+
+  test("every part record equals a re-read of its own part file") {
+    val nParts = 64
+    val pages = Pages.synth(spark, 4000L)
+    val dir = Files.createTempDirectory("graft-pipe-parts").toString
+    Pipeline.run(spark, pages, zones, Pipeline.Config(outDir = dir, nBatches = 1, nParts = nParts))
+    def names(d: String, suffix: String) =
+      new java.io.File(d).list().filter(n => n.startsWith("part-") && n.endsWith(suffix))
+        .map(_.stripSuffix(suffix)).toSet
+    val parts = names(s"$dir/_lineage/batch-0", ".json")
+    assert(parts === names(s"$dir/batch=0", ".parquet"))
+    // repartition(nParts, __pid) hashes the int pid: some write task must
+    // have committed several pids, or per-task stats would pass too
+    val tasks = parts.toSeq.map(_.stripPrefix("part-").toInt).toDF("p")
+      .select(pmod(hash($"p"), lit(nParts))).distinct().count()
+    assert(tasks < parts.size, s"each of ${parts.size} pids had its own write task")
+    parts.foreach { p =>
+      val rec = record(s"$dir/_lineage/batch-0/$p.json")
+      assert((rec("rows"), rec("checksum")) === stats(spark.read.parquet(s"$dir/batch=0/$p.parquet")),
+        s"$p record vs its parquet")
+    }
+  }
+
+  test("a part record without checksum throws on resume instead of folding in as 0") {
+    val pages = Pages.synth(spark, 1500L)
+    val dir = Files.createTempDirectory("graft-pipe-old").toString
+    val cfg = Pipeline.Config(outDir = dir, nBatches = 2, nParts = 8)
+    Pipeline.run(spark, pages, zones, cfg)
+    // batch 1 becomes partly committed, one of its parts in the format
+    // written before part records carried a checksum
+    Files.delete(Paths.get(s"$dir/_lineage/batch-1.json"))
+    val p = Pipeline.committedParts(spark, cfg, 1).min
+    val rec = Paths.get(s"$dir/_lineage/batch-1/part-$p.json")
+    Files.write(rec, s"""{"batch":1,"part":$p,"rows":${record(rec.toString)("rows")}}""".getBytes("UTF-8"))
+    Files.delete(Paths.get(s"$dir/_lineage/batch-1/.part-$p.json.crc")) // now stale
+    val e = intercept[IllegalStateException] { Pipeline.run(spark, pages, zones, cfg) }
+    assert(e.getMessage.contains(s"part-$p.json") && e.getMessage.contains("\"checksum\""),
+      e.getMessage)
+    intercept[IllegalStateException] { Pipeline.committedParts(spark, cfg, 1) }
+    assert(!Files.exists(Paths.get(s"$dir/_lineage/batch-1.json")))
+  }
+
+  test("tools/check_lineage.py accepts a pipeline output and names a tampered part record") {
+    val dir = Files.createTempDirectory("graft-pipe-check").toString
+    Pipeline.run(spark, Pages.synth(spark, 1500L), zones,
+      Pipeline.Config(outDir = dir, nBatches = 2, nParts = 8))
+    def check(): (Int, String) = try {
+      val p = new ProcessBuilder("python3", "tools/check_lineage.py", dir)
+        .redirectErrorStream(true).start()
+      val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
+      (p.waitFor(), out)
+    } catch { case _: java.io.IOException => cancel("python3 not available") }
+    val (ok, okOut) = check()
+    if (okOut.contains("No module named")) cancel(s"check_lineage.py needs pyarrow: $okOut")
+    assert(ok === 0, okOut)
+    val part = new java.io.File(s"$dir/_lineage/batch-0").list().filter(_.endsWith(".json")).min
+    val rec = Paths.get(s"$dir/_lineage/batch-0/$part")
+    val r = record(rec.toString)
+    Files.write(rec, s"""{"batch":0,"part":${r("part")},"rows":${r("rows") + 1},"checksum":${r("checksum")}}"""
+      .getBytes("UTF-8"))
+    val (bad, badOut) = check()
+    assert(bad !== 0, badOut)
+    assert(badOut.contains(part), badOut)
   }
 }
