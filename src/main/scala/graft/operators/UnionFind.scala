@@ -75,7 +75,10 @@ object UnionFind {
       val ra = find(a); val rb = find(b)
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    parent.keys.iterator.map(x => x -> find(x)).toMap
+    // snapshot the keys: find() path-compresses into `parent`, and an
+    // update of an existing key can still resize the table under a live
+    // iterator, which then skips keys
+    parent.keys.toArray.map(x => x -> find(x)).toMap
   }
 
   /** @param edges DataFrame with two long columns `a`, `b`

@@ -18,9 +18,11 @@ import scala.collection.mutable
   *
   * Distribution note: the marching-squares cell pass is strip-parallel
   * (same halo-row pattern as [[Dem.apply3x3]]); chains stitch per strip
-  * and merge across strips by shared endpoints — the same groupBy-and-
-  * coalesce layout as [[RasterStrips.polygonize]] Phase D. The local
-  * kernel below is the per-strip unit.
+  * and merge across strips by shared endpoints: chains are grouped by
+  * component root and stitched again. Unlike [[RasterStrips.polygonize]]
+  * Phase D, which replays unit edges in the sequential kernel's order,
+  * this stitches whole per-strip chains. The local kernel below is the
+  * per-strip unit.
   */
 object Contour extends Serializable {
 

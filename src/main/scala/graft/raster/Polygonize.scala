@@ -15,10 +15,13 @@ import scala.collection.mutable.ArrayBuffer
   * [107,123,115,115,140,148,123,140,156,100,101,102,103] and the DN=156
   * hole-bearing polygon WKT (`autotest/alg/polygonize.py:70-86`).
   *
-  * The distributed strip variant lives in [[RasterStrips]]; it reuses
-  * [[Polygonize.Enumerator]] per strip and merges across strip boundaries
-  * with a driver-side union-find (boundary rows only), then groups segments
-  * by global polygon id and coalesces rings with the same [[RPoly]] logic.
+  * Pixel edges are walked and rings built here only: [[addEdges]] reports
+  * each unit edge to a sink and [[RPoly]] assembles rings. The distributed
+  * strip variant, [[RasterStrips.polygonize]], runs [[Enumerator]] per
+  * strip, resolves components across strip seams through
+  * [[BoundaryMerge]], feeds [[addEdges]] global ids, and replays each
+  * polygon's edges into an [[RPoly]] in this kernel's emission order, so
+  * every polygon it returns is byte-identical to this kernel's.
   */
 object Polygonize {
 
@@ -134,6 +137,12 @@ object Polygonize {
     var lastLineUpdated: Int = -1
     val strings = new ArrayBuffer[ArrayBuffer[Int]](4)
 
+    /** Add the unit pixel edge that [[addEdges]] reports at (x, y): the
+      * segment (x, y)–(x+1, y) if horizontal, (x+1, y)–(x+1, y+1) if not.
+      */
+    def addEdge(x: Int, y: Int, vertical: Boolean): Unit =
+      if (vertical) addSegment(x + 1, y, x + 1, y + 1) else addSegment(x, y, x + 1, y)
+
     def addSegment(x1_0: Int, y1_0: Int, x2_0: Int, y2_0: Int): Unit = {
       var x1 = x1_0; var y1 = y1_0; var x2 = x2_0; var y2 = y2_0
       lastLineUpdated = math.max(y1, y2)
@@ -219,40 +228,40 @@ object Polygonize {
     }
   }
 
-  /** AddEdges port (`polygonize.cpp:268-330`): compare pixel (iX-1, iY) to
-    * neighbor above and to the right; emit shared edges into both polygons.
-    * `thisId`/`lastId` are border-padded rows (length n+2, -1 borders),
-    * already mapped through nothing — the final-id mapping is applied here
-    * via `idMap` (the first-pass map) and the RPoly pool keyed by final id.
+  /** Receiver of [[addEdges]]: one unit pixel edge of polygon `id`, whose
+    * pixels hold `value`. See [[RPoly.addEdge]] for the edge's segment.
     */
-  def addEdges(thisId: Array[Int], lastId: Array[Int], idMap: Array[Int],
-               polyValue: Array[Int], pool: Array[RPoly], iX: Int, iY: Int): Unit = {
-    var nThisId = thisId(iX)
-    var nRightId = thisId(iX + 1)
-    var nPreviousId = lastId(iX)
-    val iXReal = iX - 1
-    if (nThisId != -1) nThisId = idMap(nThisId)
-    if (nRightId != -1) nRightId = idMap(nRightId)
-    if (nPreviousId != -1) nPreviousId = idMap(nPreviousId)
-    if (nThisId != nPreviousId) {
-      if (nThisId != -1) {
-        if (pool(nThisId) == null) pool(nThisId) = new RPoly(polyValue(nThisId))
-        pool(nThisId).addSegment(iXReal, iY, iXReal + 1, iY)
+  trait EdgeSink {
+    def edge(id: Long, value: Int, x: Int, y: Int, vertical: Boolean): Unit
+  }
+
+  /** AddEdges port (`polygonize.cpp:268-330`) over line `iY`: compare each
+    * pixel (iX-1, iY) to its neighbours above and to the right, and report
+    * every edge between two different polygons to both of them, for each
+    * iX the horizontal edge before the vertical one. `thisId`/`lastId` are
+    * border-padded rows (length w+2, -1 for nodata and the borders) of
+    * already-resolved polygon ids; `thisVal`/`lastVal` are the matching
+    * unpadded pixel rows, read only where the id is not -1. The closing
+    * pass below the last line passes an all -1 `thisId`.
+    */
+  def addEdges(thisId: Array[Long], lastId: Array[Long],
+               thisVal: Array[Int], lastVal: Array[Int],
+               w: Int, iY: Int, sink: EdgeSink): Unit = {
+    var iX = 0
+    while (iX < w + 1) {
+      val nThisId = thisId(iX)
+      val nRightId = thisId(iX + 1)
+      val nPreviousId = lastId(iX)
+      val iXReal = iX - 1
+      if (nThisId != nPreviousId) {
+        if (nThisId != -1L) sink.edge(nThisId, thisVal(iXReal), iXReal, iY, vertical = false)
+        if (nPreviousId != -1L) sink.edge(nPreviousId, lastVal(iXReal), iXReal, iY, vertical = false)
       }
-      if (nPreviousId != -1) {
-        if (pool(nPreviousId) == null) pool(nPreviousId) = new RPoly(polyValue(nPreviousId))
-        pool(nPreviousId).addSegment(iXReal, iY, iXReal + 1, iY)
+      if (nThisId != nRightId) {
+        if (nThisId != -1L) sink.edge(nThisId, thisVal(iXReal), iXReal, iY, vertical = true)
+        if (nRightId != -1L) sink.edge(nRightId, thisVal(iXReal + 1), iXReal, iY, vertical = true)
       }
-    }
-    if (nThisId != nRightId) {
-      if (nThisId != -1) {
-        if (pool(nThisId) == null) pool(nThisId) = new RPoly(polyValue(nThisId))
-        pool(nThisId).addSegment(iXReal + 1, iY, iXReal + 1, iY + 1)
-      }
-      if (nRightId != -1) {
-        if (pool(nRightId) == null) pool(nRightId) = new RPoly(polyValue(nRightId))
-        pool(nRightId).addSegment(iXReal + 1, iY, iXReal + 1, iY + 1)
-      }
+      iX += 1
     }
   }
 
@@ -276,51 +285,53 @@ object Polygonize {
     }
     first.completeMerges()
 
-    // pass 2: collect edges with a fresh enumerator (same raw id sequence)
+    // pass 2: a fresh enumerator gives the same raw id sequence; resolve
+    // each line's raw ids through the pass-1 map and collect its edges
     val second = new Enumerator(connectedness)
     val pool = new Array[RPoly](first.nNextPolygonId)
+    val sink: EdgeSink = (id, value, x, y, vertical) => {
+      var p = pool(id.toInt)
+      if (p == null) { p = new RPoly(value); pool(id.toInt) = p }
+      p.addEdge(x, y, vertical)
+    }
     val out = Vector.newBuilder[(Int, GPolygon)]
-    val lastIdB = Array.fill(w + 2)(-1)
-    val thisIdB = Array.fill(w + 2)(-1)
-    var lastB = lastIdB; var thisB = thisIdB
+    def flush(i: Int): Unit = {
+      pool(i).coalesce()
+      out += ((pool(i).value, pool(i).toPolygon(gt)))
+      pool(i) = null
+    }
+    var lastResolved = Array.fill(w + 2)(-1L)
+    var thisResolved = Array.fill(w + 2)(-1L)
     lastRow = null
     iY = 0
     while (iY <= h) {
-      if (iY == h) {
-        java.util.Arrays.fill(thisB, -1)
-      } else {
-        val row = java.util.Arrays.copyOfRange(vals, iY * w, (iY + 1) * w)
-        second.processLine(lastRow, row, lastB, thisB, 1, 1, w)
-        thisB(0) = -1; thisB(w + 1) = -1
-        lastRow = row
+      val row = if (iY == h) null else java.util.Arrays.copyOfRange(vals, iY * w, (iY + 1) * w)
+      if (row == null) java.util.Arrays.fill(thisResolved, -1L)
+      else {
+        second.processLine(lastRow, row, lastId, thisId, 0, 0, w)
+        var x = 0
+        while (x < w) {
+          thisResolved(x + 1) = if (thisId(x) == -1) -1L else first.polyIdMap(thisId(x))
+          x += 1
+        }
       }
-      var iX = 0
-      while (iX < w + 1) {
-        addEdges(thisB, lastB, first.polyIdMap, first.polyValue, pool, iX, iY)
-        iX += 1
-      }
+      addEdges(thisResolved, lastResolved, row, lastRow, w, iY, sink)
       // periodic flush of polygons finished at least 2 lines ago
       if (iY % 8 == 7) {
         var i = 0
         while (i < second.nNextPolygonId) {
-          if (pool(i) != null && pool(i).lastLineUpdated < iY - 1) {
-            pool(i).coalesce()
-            out += ((pool(i).value, pool(i).toPolygon(gt)))
-            pool(i) = null
-          }
+          if (pool(i) != null && pool(i).lastLineUpdated < iY - 1) flush(i)
           i += 1
         }
       }
-      val t = lastB; lastB = thisB; thisB = t
+      val t = lastId; lastId = thisId; thisId = t
+      val tr = lastResolved; lastResolved = thisResolved; thisResolved = tr
+      lastRow = row
       iY += 1
     }
     var i = 0
     while (i < second.nNextPolygonId) {
-      if (pool(i) != null) {
-        pool(i).coalesce()
-        out += ((pool(i).value, pool(i).toPolygon(gt)))
-        pool(i) = null
-      }
+      if (pool(i) != null) flush(i)
       i += 1
     }
     out.result()

@@ -26,9 +26,11 @@ import graft.core.{Geom, GeoTransform}
   *  - polygonize runs the sequential enumerator per strip, matches
   *    components across strip boundaries in an adjacent-boundary shuffle
   *    ([[BoundaryMerge]]: the driver collects only deduped equivalence
-  *    pairs, O(#boundary components), never pixel rows), then groups edge
-  *    segments by global polygon id — the classic 2-phase distributed
-  *    connected-components layout.
+  *    pairs, O(#boundary components), never pixel rows), then groups unit
+  *    pixel edges by global polygon id and replays them into the
+  *    sequential kernel's ring builder — the classic 2-phase distributed
+  *    connected-components layout, with output byte-identical to
+  *    [[Polygonize.polygonize]].
   */
 object RasterStrips extends Serializable {
 
@@ -114,7 +116,11 @@ object RasterStrips extends Serializable {
     */
   final case class ValueStrip(stripIdx: Int, yOff: Int, height: Int, vals: Array[Int])
 
-  final case class SegOut(globalId: Long, value: Int, x1: Int, y1: Int, x2: Int, y2: Int)
+  /** One unit pixel edge of global polygon `gid`, as [[Polygonize.addEdges]]
+    * reports it: `x` is its iXReal, `y` the global line (`h` for the
+    * closing pass below the last row).
+    */
+  final case class Edge(gid: Long, value: Int, y: Int, x: Int, vertical: Boolean)
 
   /** Run pass-1 locally over a strip; return (enumerator, per-row final ids
     * for top and bottom rows).
@@ -141,9 +147,11 @@ object RasterStrips extends Serializable {
   }
 
   /** Distributed polygonize over value strips → DataFrame(value: Int,
-    * wkb: Array[Byte]). Geometry set matches [[Polygonize.polygonize]]
-    * (ring vertex order may start at a different vertex; ring content and
-    * hole structure are identical).
+    * wkb: Array[Byte]). For any strip height, the (value, WKB) multiset
+    * equals [[Polygonize.polygonize]]'s byte for byte: Phase C ships unit
+    * pixel edges keyed by global polygon id, and Phase D replays each
+    * polygon's edges into an [[Polygonize.RPoly]] in the sequential
+    * kernel's emission order. Only the order of the rows differs.
     */
   def polygonize(spark: SparkSession, strips0: Dataset[ValueStrip], w: Int, h: Int,
                  connectedness: Int, gt: GeoTransform): DataFrame = {
@@ -170,11 +178,11 @@ object RasterStrips extends Serializable {
     val rootsB = spark.sparkContext.broadcast(merged.roots)
     val baseB = spark.sparkContext.broadcast(merged.base)
 
-    // Phase C: per-strip segment extraction with global ids; the previous
+    // Phase C: per-strip edge extraction with global ids; the previous
     // strip's bottom-row halo (and, in distributed mode, the strip's own
     // root map) arrives via cogroup, not a driver broadcast
     val lastStripIdx = merged.base.length - 2
-    val segs = strips.groupByKey(_.stripIdx)
+    val edges = strips.groupByKey(_.stripIdx)
       .cogroup(merged.side.groupByKey(_.stripIdx)) { (_, sIt, sideIt) =>
       var haloVals: Array[Int] = null; var haloGids: Array[Long] = null
       val sides = sideIt.toSeq
@@ -182,70 +190,37 @@ object RasterStrips extends Serializable {
         if (sd.haloVals != null) { haloVals = sd.haloVals; haloGids = sd.haloGids }
       }
       val localRoots = BoundaryMerge.sideRootMap(sides)
-      val halo = if (haloVals != null) Some((haloVals, haloGids)) else None
       sIt.flatMap { s =>
       val myBase = baseB.value(s.stripIdx)
       val rootMap = rootsB.value
-      @inline def global(localFinal: Int): Long =
-        BoundaryMerge.lookup(localRoots, rootMap, myBase + localFinal)
       val (en1, _, _) = localPass1(s, w, conn)
-      // second pass over the strip, reference AddEdges layout with halo row
+      // second pass over the strip: raw ids → local final (first-pass
+      // map) → global root, then the shared AddEdges walk
       val second = new Polygonize.Enumerator(conn)
-      val pool = new scala.collection.mutable.HashMap[Long, Polygonize.RPoly]
-
-      val lastIdG = Array.fill[Long](w + 2)(-1L)
-      val thisIdG = Array.fill[Long](w + 2)(-1L)
-      var lastG = lastIdG; var thisG = thisIdG
-      val thisIdLocal = Array.fill(w + 2)(-1)
-      var lastRow: Array[Int] = null
-      // halo: previous strip's bottom row (values + global ids)
-      halo.foreach { case (hVals, hGids) =>
-        var x = 0
-        while (x < w) { lastG(x + 1) = hGids(x); x += 1 }
-        lastRow = hVals
-      }
-      val lastIdLocal = Array.fill(w + 2)(-1)
+      val buf = Vector.newBuilder[Edge]
+      val sink: Polygonize.EdgeSink =
+        (gid, value, x, y, vertical) => buf += Edge(gid, value, y, x, vertical)
+      var lastRaw = new Array[Int](w); var thisRaw = new Array[Int](w)
+      var lastG = Array.fill(w + 2)(-1L); var thisG = Array.fill(w + 2)(-1L)
+      // the halo row (previous strip's bottom row, global root ids) sits
+      // above row 0: the edges between the two strips are emitted here
+      var lastRow = haloVals
+      if (haloGids != null) System.arraycopy(haloGids, 0, lastG, 1, w)
       var prevLocalRow: Array[Int] = null
-
-      def emitEdges(thisRowG: Array[Long], lastRowG: Array[Long], yGlobal: Int,
-                    thisVals: Array[Int], lastVals: Array[Int]): Unit = {
-        var iX = 0
-        while (iX < w + 1) {
-          val nThis = thisRowG(iX)
-          val nRight = thisRowG(iX + 1)
-          val nPrev = lastRowG(iX)
-          val iXReal = iX - 1
-          @inline def poly(id: Long, v: Int): Polygonize.RPoly =
-            pool.getOrElseUpdate(id, new Polygonize.RPoly(v))
-          if (nThis != nPrev) {
-            if (nThis != -1L) poly(nThis, thisVals(iXReal max 0)).addSegment(iXReal, yGlobal, iXReal + 1, yGlobal)
-            if (nPrev != -1L) poly(nPrev, lastVals(iXReal max 0)).addSegment(iXReal, yGlobal, iXReal + 1, yGlobal)
-          }
-          if (nThis != nRight) {
-            if (nThis != -1L) poly(nThis, thisVals(iXReal max 0)).addSegment(iXReal + 1, yGlobal, iXReal + 1, yGlobal + 1)
-            if (nRight != -1L) poly(nRight, if (iXReal + 1 < w) thisVals(iXReal + 1) else 0).addSegment(iXReal + 1, yGlobal, iXReal + 1, yGlobal + 1)
-          }
-          iX += 1
-        }
-      }
-
       var r = 0
       while (r < s.height) {
         val row = java.util.Arrays.copyOfRange(s.vals, r * w, (r + 1) * w)
-        second.processLine(prevLocalRow, row, lastIdLocal, thisIdLocal, 1, 1, w)
-        thisIdLocal(0) = -1; thisIdLocal(w + 1) = -1
-        // map local raw ids → local final (first-pass map) → global root
+        second.processLine(prevLocalRow, row, lastRaw, thisRaw, 0, 0, w)
         var x = 0
         while (x < w) {
-          val raw = thisIdLocal(x + 1)
-          thisG(x + 1) = if (raw == -1) -1L else global(en1.polyIdMap(raw))
+          val raw = thisRaw(x)
+          thisG(x + 1) = if (raw == -1) -1L
+            else BoundaryMerge.lookup(localRoots, rootMap, myBase + en1.polyIdMap(raw))
           x += 1
         }
-        thisG(0) = -1L; thisG(w + 1) = -1L
-        emitEdges(thisG, lastG, s.yOff + r, row, if (lastRow == null) row else lastRow)
-        // swap
+        Polygonize.addEdges(thisG, lastG, row, lastRow, w, s.yOff + r, sink)
+        val tR = lastRaw; lastRaw = thisRaw; thisRaw = tR
         val tG = lastG; lastG = thisG; thisG = tG
-        System.arraycopy(thisIdLocal, 0, lastIdLocal, 0, w + 2)
         prevLocalRow = row
         lastRow = row
         r += 1
@@ -254,28 +229,24 @@ object RasterStrips extends Serializable {
       // raster (otherwise the next strip's halo pass emits this boundary)
       if (s.stripIdx == lastStripIdx) {
         java.util.Arrays.fill(thisG, -1L)
-        emitEdges(thisG, lastG, s.yOff + s.height, lastRow, lastRow)
+        Polygonize.addEdges(thisG, lastG, null, lastRow, w, s.yOff + s.height, sink)
       }
-      // flush all partial polygons as segment strings
-      pool.iterator.flatMap { case (gid, rp) =>
-        rp.strings.iterator.flatMap { str =>
-          val n = str.length / 2
-          (1 until n).iterator.map { i =>
-            SegOut(gid, rp.value, str(2 * (i - 1)), str(2 * (i - 1) + 1), str(2 * i), str(2 * i + 1))
-          }
-        }
-      }.toVector
+      buf.result()
       }
     }
 
-    // Phase D: group segments by polygon, coalesce rings, emit WKB
-    val out = segs.groupByKey(_.globalId)
+    // Phase D: replay each polygon's edges in the sequential kernel's
+    // emission order. (y, x, horizontal before vertical) is unique per
+    // polygon and is the order in which Polygonize.polygonize calls
+    // addSegment; its periodic flush only takes finished polygons, so the
+    // rings come out byte-identical.
+    val out = edges.groupByKey(_.gid)
       .mapGroups { (_, it) =>
-        val all = it.toArray.sortBy(s => (s.y1, s.x1, s.y2, s.x2))
-        val rp = new Polygonize.RPoly(all(0).value)
-        all.foreach(s => rp.addSegment(s.x1, s.y1, s.x2, s.y2))
+        val es = it.toArray.sortBy(e => (e.y, e.x, e.vertical))
+        val rp = new Polygonize.RPoly(es(0).value)
+        es.foreach(e => rp.addEdge(e.x, e.y, e.vertical))
         rp.coalesce()
-        (all(0).value, Geom.toWkb(rp.toPolygon(gt)))
+        (rp.value, Geom.toWkb(rp.toPolygon(gt)))
       }
       .toDF("value", "wkb")
       .ckpt() // materialize, then release the strip cache

@@ -115,24 +115,44 @@ class BoundaryMergeSpec extends AnyFunSuite {
     } finally spark.conf.unset(UnionFind.DriverPairLimitKey)
   }
 
-  test("UnionFind.roots matches a serial union-find on a random graph") {
-    val rnd = new scala.util.Random(7)
-    val n = 400
-    val edges = (0 until 600).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      .filter(e => e._1 != e._2)
-    // serial reference
+  /** Serial reference for the union-find contract over ids in [0, n):
+    * gid → component minimum, for every gid that is not its own minimum.
+    */
+  private def serialRoots(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
     edges.foreach { case (a, b) =>
       val ra = find(a.toInt); val rb = find(b.toInt)
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    val expect = (0 until n).map(v => v.toLong -> find(v).toLong)
+    (0 until n).map(v => v.toLong -> find(v).toLong)
       .filter(t => t._1 != t._2).toMap
+  }
+
+  test("UnionFind.roots matches a serial union-find on a random graph") {
+    val rnd = new scala.util.Random(7)
+    val n = 400
+    val edges = (0 until 600).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      .filter(e => e._1 != e._2)
+    val expect = serialRoots(n, edges)
     val got = graft.operators.UnionFind.roots(edges.toDF("a", "b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === expect)
     assert(UnionFind.driverRoots(edges) === expect)
+  }
+
+  test("UnionFind.driverRoots matches a serial union-find on seeded small pair sets") {
+    // iterating the parent map while find() compresses into it skipped 6 of
+    // these 11 roots: an update of an existing key can resize the table
+    val pinned = Seq((4, 1), (20, 26), (21, 19), (11, 14), (25, 16), (7, 14),
+      (20, 22), (15, 22), (0, 13), (26, 23), (11, 24)).map { case (a, b) => (a.toLong, b.toLong) }
+    assert(UnionFind.driverRoots(pinned) === serialRoots(27, pinned))
+    val rnd = new scala.util.Random(5)
+    for (k <- 0 until 3000) {
+      val n = 2 + rnd.nextInt(40)
+      val pairs = Seq.fill(1 + rnd.nextInt(24))((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      assert(UnionFind.driverRoots(pairs) === serialRoots(n, pairs), s"set $k: $pairs")
+    }
   }
 
   test("UnionFind.roots on a shuffled-id 100x100 grid converges under the default cap") {

@@ -1,12 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.{Geom, GeoTransform, GLine, GPolygon}
+import graft.core.{Geom, GeoTransform}
 import graft.raster._
 import graft.raster.RasterStrips.{RasterSpec => RSpec, ShapeRow, ValueStrip}
 
-/** Distributed strip execution matches the single-node kernels bit-for-bit
-  * (checksums) / set-for-set (polygonize geometries).
+/** Distributed strip execution matches the single-node kernels bit for bit:
+  * checksums, and polygonize's (value, WKB) multisets.
   */
 class RasterStripsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -55,55 +55,57 @@ class RasterStripsSpec extends AnyFunSuite {
     156, 156, 156, 103, 103)
   private val gt = GeoTransform(440720, 60, 0, 3751440, 0, -60)
 
-  /** Normalize a polygon for set comparison: each ring → set of unit
-    * pixel-grid edges (collinear runs decomposed, orientation dropped).
-    */
-  private def normalize(p: GPolygon): Set[Set[(Int, Int, Int, Int)]] = {
-    val inv = gt.inverse.get
-    p.rings.map { r =>
-      val edges = scala.collection.mutable.Set[(Int, Int, Int, Int)]()
-      var i = 1
-      while (i < r.numPoints) {
-        var ax = math.round(inv.geoX(r.x(i - 1), r.y(i - 1))).toInt
-        var ay = math.round(inv.geoY(r.x(i - 1), r.y(i - 1))).toInt
-        val bx = math.round(inv.geoX(r.x(i), r.y(i))).toInt
-        val by = math.round(inv.geoY(r.x(i), r.y(i))).toInt
-        val sx = Integer.signum(bx - ax); val sy = Integer.signum(by - ay)
-        while (ax != bx || ay != by) {
-          val nx = ax + sx; val ny = ay + sy
-          val e = if (ax < nx || (ax == nx && ay <= ny)) (ax, ay, nx, ny) else (nx, ny, ax, ay)
-          edges += e
-          ax = nx; ay = ny
-        }
-        i += 1
-      }
-      edges.toSet
-    }.toSet
-  }
-
-  private def stripsOf(vals: Array[Int], stripH: Int): Seq[ValueStrip] = {
-    (0 until H by stripH).zipWithIndex.map { case (y0, idx) =>
-      val hh = math.min(stripH, H - y0)
-      ValueStrip(idx, y0, hh, java.util.Arrays.copyOfRange(vals, y0 * W, (y0 + hh) * W))
+  private def stripsOf(vals: Array[Int], w: Int, h: Int, stripH: Int): Seq[ValueStrip] = {
+    (0 until h by stripH).zipWithIndex.map { case (y0, idx) =>
+      val hh = math.min(stripH, h - y0)
+      ValueStrip(idx, y0, hh, java.util.Arrays.copyOfRange(vals, y0 * w, (y0 + hh) * w))
     }
   }
 
-  private def check(vals: Array[Int], conn: Int, stripH: Int): Unit = {
-    val expected = Polygonize.polygonize(vals, W, H, conn, gt)
-      .map { case (v, p) => (v, normalize(p)) }.toSet
-    val got = RasterStrips.polygonize(spark, stripsOf(vals, stripH).toDS(), W, H, conn, gt)
+  private def hex(wkb: Array[Byte]): String = wkb.map("%02x".format(_)).mkString
+
+  /** The distributed (value, WKB hex) multiset equals the sequential
+    * kernel's byte for byte.
+    */
+  private def check(vals: Array[Int], w: Int, h: Int, conn: Int, stripH: Int,
+                    what: String = ""): Unit = {
+    val expected = Polygonize.polygonize(vals, w, h, conn, gt)
+      .map { case (v, p) => (v, hex(Geom.toWkb(p))) }.sorted
+    val got = RasterStrips.polygonize(spark, stripsOf(vals, w, h, stripH).toDS(), w, h, conn, gt)
       .collect()
-      .map(r => (r.getInt(0), normalize(Geom.fromWkb(r.getAs[Array[Byte]](1)).asInstanceOf[GPolygon])))
-      .toSet
-    assert(got === expected, s"conn=$conn stripH=$stripH")
+      .map(r => (r.getInt(0), hex(r.getAs[Array[Byte]](1))))
+      .toSeq.sorted
+    assert(got === expected, s"$what conn=$conn stripH=$stripH")
   }
 
   test("distributed polygonize matches single-node kernel (masked, 4-conn)") {
     val masked = grid.map(v => if (v == 132) Polygonize.NoDataMarker else v)
-    for (stripH <- Seq(2, 3, 7)) check(masked, 4, stripH)
+    for (stripH <- Seq(2, 3, 7)) check(masked, W, H, 4, stripH)
   }
 
   test("distributed polygonize matches single-node kernel (unmasked, 4+8 conn)") {
-    for (conn <- Seq(4, 8); stripH <- Seq(2, 4, 7)) check(grid, conn, stripH)
+    for (conn <- Seq(4, 8); stripH <- Seq(2, 4, 7)) check(grid, W, H, conn, stripH)
+  }
+
+  test("distributed polygonize keeps a ring pinched at a corner byte-identical") {
+    // the two 1-pixels touch only at (2, 2): one 8-connected polygon whose
+    // ring visits that vertex twice, inside a 0-polygon pinched there too
+    val pinch = Array(
+      0, 0, 0, 0,
+      0, 1, 0, 0,
+      0, 0, 1, 0,
+      0, 0, 0, 0)
+    for (conn <- Seq(4, 8); stripH <- Seq(1, 2, 4)) check(pinch, 4, 4, conn, stripH, "pinch")
+  }
+
+  test("distributed polygonize equals the single-node kernel on seeded random rasters") {
+    val rnd = new scala.util.Random(20261018)
+    for (k <- 0 until 12) {
+      val w = 6 + rnd.nextInt(11); val h = 6 + rnd.nextInt(11)
+      val vals = Array.fill(w * h)(
+        if (rnd.nextDouble() < 0.05) Polygonize.NoDataMarker else rnd.nextInt(3))
+      for (conn <- Seq(4, 8); stripH <- Seq(1, 3, h))
+        check(vals, w, h, conn, stripH, s"raster $k (${w}x$h)")
+    }
   }
 }

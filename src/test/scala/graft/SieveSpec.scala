@@ -54,4 +54,21 @@ class SieveSpec extends AnyFunSuite {
       assert(got.toSeq === expect.toSeq, s"conn=$conn stripH=$stripH")
     }
   }
+
+  test("distributed sieve matches the local port across strip seams on seeded rasters") {
+    val w = 13; val h = 10
+    val rnd = new scala.util.Random(3)
+    for (k <- 0 until 12) {
+      val src = Array.fill(w * h)(rnd.nextInt(3))
+      for (conn <- Seq(4, 8); stripH <- Seq(1, 2)) {
+        val expect = Sieve.sieveLocal(src, w, h, 3, conn)
+        val strips = (0 until h by stripH).zipWithIndex.map { case (y0, i) =>
+          IStrip(i, y0, stripH, w, java.util.Arrays.copyOfRange(src, y0 * w, (y0 + stripH) * w))
+        }.toDS()
+        val got = Sieve.sieve(spark, strips, w, h, 3, conn)
+          .collect().sortBy(_.yOff).flatMap(_.vals)
+        assert(got.toSeq === expect.toSeq, s"raster $k conn=$conn stripH=$stripH")
+      }
+    }
+  }
 }
