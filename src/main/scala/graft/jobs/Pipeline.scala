@@ -13,16 +13,19 @@ import graft.operators.SpatialJoin
   * records.
   *
   * Lineage model, two levels:
-  *  - the input is split into `nBatches` deterministic hash-batches of
-  *    pages (url-hash — stable across runs and cluster sizes); each batch
-  *    runs as one fully-parallel Spark job writing `out/batch=<b>/`, then
-  *    commits a `_lineage/batch-<b>.json` record with input/output counts
-  *    and an order-insensitive result checksum, folded from its part records;
-  *  - WITHIN a batch, rows carry a deterministic partition id and each
-  *    write task durably commits its own partitions, each with its rows
-  *    and checksum (`_lineage/batch-<b>/part-<p>.json`, see [[runBatch]]),
-  *    so a job killed mid-batch resumes from the first uncommitted
-  *    PARTITION, not the batch start.
+  *  - the input is split into `nBatches` deterministic batches of pages
+  *    (url-hash classes, or every `nBatches`-th input file — stable across
+  *    runs and cluster sizes), the unit of lineage, resume and output
+  *    layout: a batch writes `out/batch=<b>/` and commits a
+  *    `_lineage/batch-<b>.json` record with input/output counts and an
+  *    order-insensitive result checksum, folded from its part records;
+  *  - all pending batches of a run go through ONE fully-parallel Spark
+  *    job: the batch is a column and the leading key of the write shuffle,
+  *    rows carry a deterministic partition id, and each write task durably
+  *    commits its one (batch, partition) with its rows and checksum
+  *    (`_lineage/batch-<b>/part-<p>.json`, see [[runBatches]]), so a job
+  *    killed mid-run resumes from the first uncommitted PARTITION, not the
+  *    batch start.
   * A restarted job lists committed records and skips them — the
   * reference's chunked processing loops
   * (`/root/reference/gdal/alg/gdalrasterize.cpp:655-706`,
@@ -57,22 +60,28 @@ object Pipeline {
       failAfterBatch: Int = -1, // test hook: throw after N committed batches
       failAfterParts: Int = -1) // test hook: kill mid-batch after N partition commits
 
-  /** Transform one page batch: extract coords, assign cells + tiles, join
-    * zones. Pure projection of `text`/`url` — never rewritten.
+  /** The batch tag of a run's input: carried to the write, never written. */
+  private val Batch = "__batch"
+
+  /** Transform pages: extract coords, assign cells + tiles, join zones.
+    * Pure projection of `text`/`url` — never rewritten. A `__batch` tag on
+    * `pages` (a run's input) rides along as the last output column.
     */
   def transform(pages: DataFrame, zones: DataFrame, cfg: Config): DataFrame = {
+    val tag = pages.columns.filter(_ == Batch).map(col).toSeq
     val coords = pages
-      .select(col("url"), col("warc_ts"), col("lang"), col("text"),
-        posexplode(gf.geo_extract(col("text"))).as(Seq("mention_idx", "c")))
-      .select(col("url"), col("warc_ts"), col("lang"), col("text"),
-        col("mention_idx"), col("c.lon").as("lon"), col("c.lat").as("lat"))
+      .select(Seq(col("url"), col("warc_ts"), col("lang"), col("text"),
+        posexplode(gf.geo_extract(col("text"))).as(Seq("mention_idx", "c"))) ++ tag: _*)
+      .select(Seq(col("url"), col("warc_ts"), col("lang"), col("text"),
+        col("mention_idx"), col("c.lon").as("lon"), col("c.lat").as("lat")) ++ tag: _*)
     val joined = SpatialJoin.pointInPolygon(coords, col("lon"), col("lat"),
       zones, col("geom"), cfg.cellRes)
-    joined
+    val out = joined
       .withColumn("cell", gf.cell_of(col("lon"), col("lat"), cfg.cellRes))
       .withColumn("tile_x", floor(((col("lon") + 180.0) / cfg.tileDeg) / cfg.tilePx).cast("long"))
       .withColumn("tile_y", floor(((lit(90.0) - col("lat")) / cfg.tileDeg) / cfg.tilePx).cast("long"))
       .drop("geom", "wkt")
+    if (tag.isEmpty) out else out.select(out.columns.filter(_ != Batch).map(col) ++ tag: _*)
   }
 
   private def lineageDir(cfg: Config) = s"${cfg.outDir}/_lineage"
@@ -124,157 +133,156 @@ object Pipeline {
       }.toMap
   }
 
-  /** One batch, committed at PARTITION granularity: rows get a
-    * deterministic partition id (url+mention hash — stable across runs
-    * and cluster sizes), and each WRITE TASK makes its partitions durable
-    * itself (parquet tmp file → rename → `part-<p>.json` lineage record
-    * via [[TaskParquet]]) instead of waiting for Spark's job-level
-    * committer. A job killed mid-batch therefore restarts from the first
-    * UNCOMMITTED partition: committed partitions are filtered out of the
-    * scan before the shuffle, and their files are never rewritten.
+  /** Every pending batch of a run as ONE Spark job, committed at
+    * PARTITION granularity. `tagged` carries each page's batch in `__batch`;
+    * rows get a deterministic partition id (url+mention hash — stable
+    * across runs and cluster sizes), and the write shuffle is batch-major
+    * on direct partition ids (`slot · nParts + pid`, `slot` the batch's rank
+    * among `pending`), so each WRITE TASK holds exactly one (batch, pid)
+    * and makes it durable itself (parquet tmp file → rename →
+    * `part-<p>.json` lineage record via [[TaskParquet]]) instead of waiting
+    * for Spark's job-level committer. Tasks launch in index order, so the
+    * first pending batch commits first. A job killed mid-run therefore
+    * restarts from the first UNCOMMITTED partition: committed (batch, pid)
+    * keys are filtered out before the shuffle, and their files are never
+    * rewritten.
     *
-    * The input-page count is observed from the same scan (no second count
-    * job); output stats sum and XOR the part records, including those of
-    * an earlier, killed attempt, so no Spark job runs after the write.
+    * One observation on the scan counts every pending batch's input pages
+    * (no second count job); after the job each batch's output stats sum
+    * and XOR its part records, including those of an earlier, killed
+    * attempt, and the batch records commit in batch order.
     */
-  private def runBatch(spark: SparkSession, batchPages: DataFrame, zones: DataFrame,
-                       cfg: Config, b: Int): BatchResult = {
-    val batchDir = s"${cfg.outDir}/batch=$b"
-    val partLineDir = s"${lineageDir(cfg)}/batch-$b"
-    val done = committedParts(spark, cfg, b)
-    val obs = org.apache.spark.sql.Observation(s"graft_pipe_in_${b}_${done.size}")
-    val observed = batchPages.observe(obs, count(lit(1)).as("n"))
-    val out = transform(observed, zones, cfg)
+  private def runBatches(spark: SparkSession, tagged: DataFrame, zones: DataFrame,
+                         cfg: Config, pending: Seq[Int]): Seq[BatchResult] = {
+    val nParts = cfg.nParts
+    val done = pending.flatMap(b => committedParts(spark, cfg, b).map(b * nParts + _))
+    val obs = org.apache.spark.sql.Observation("graft_pipe_in")
+    val inPages = pending.map(b => count(when(col(Batch) === b, 1)).as(s"n$b"))
+    val out = transform(tagged.observe(obs, inPages.head, inPages.tail: _*), zones, cfg)
       .withColumn("__pid",
-        pmod(xxhash64(col("url"), col("mention_idx")), lit(cfg.nParts)).cast("int"))
-    val pending =
-      if (done.isEmpty) out
-      else out.filter(!col("__pid").isInCollection(done))
-    val schema = pending.drop("__pid").schema
+        pmod(xxhash64(col("url"), col("mention_idx")), lit(nParts)).cast("int"))
+    val key = col(Batch) * nParts + col("__pid")
+    val toWrite = if (done.isEmpty) out else out.filter(!key.isInCollection(done))
+    val schema = toWrite.drop(Batch, "__pid").schema
+    val slot = array_position(lit(pending.toArray), col(Batch)) - 1
     val conf = new TaskParquet.SerConf(spark.sparkContext.hadoopConfiguration)
     val bconf = spark.sparkContext.broadcast(conf)
-    val failAfter = cfg.failAfterParts
-    val pidIdx = schema.length // __pid, then __h, follow the output columns
+    val (outDir, partLineRoot, failAfter) = (cfg.outDir, lineageDir(cfg), cfg.failAfterParts)
+    val tagIdx = schema.length // __batch, __pid, then __h follow the output columns
     // hashed after the shuffle, so the shuffle does not carry it
-    pending.repartition(cfg.nParts, col("__pid"))
+    toWrite.repartitionById(pending.size * nParts, (slot * nParts + col("__pid")).cast("int"))
       .withColumn("__h", xxhash64(col("url"), col("cell"), col("zone_id")))
       .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
         if (it.hasNext) {
+          val rows = it.buffered
+          val (b, pid) = (rows.head.getInt(tagIdx), rows.head.getInt(tagIdx + 1))
           val hconf = bconf.value.conf
-          val mt = TaskParquet.messageType(schema) // MessageType is not Serializable
+          val batchDir = s"$outDir/batch=$b"
+          val partLineDir = s"$partLineRoot/batch-$b"
           val fs = new Path(batchDir).getFileSystem(hconf)
           fs.mkdirs(new Path(batchDir)); fs.mkdirs(new Path(partLineDir))
           val attempt = java.util.UUID.randomUUID().toString.take(8)
-          // hash collisions can land several pids in one task: one
-          // streaming writer and (rows, checksum) stat per pid, commit
-          // each pid independently
-          val writers = scala.collection.mutable.HashMap
-            .empty[Int, (Path, TaskParquet.RowFileWriter, Array[Long])]
-          // on ANY failure mid-partition, close and delete every open tmp
-          // writer — leaked parquet-mr writers hold buffers and file
-          // handles across task retries
+          val tmp = new Path(s"$batchDir/.part-$pid-$attempt.tmp")
+          // MessageType is not Serializable: built in the task
+          val w = new TaskParquet.RowFileWriter(hconf, tmp, schema, TaskParquet.messageType(schema))
+          // on ANY failure mid-partition, close and delete the tmp writer —
+          // a leaked parquet-mr writer holds buffers and file handles across
+          // task retries
           var committed = false
           try {
-          it.foreach { row =>
-            val pid = row.getInt(pidIdx)
-            val (_, w, stat) = writers.getOrElseUpdate(pid, {
-              val tmp = new Path(s"$batchDir/.part-$pid-$attempt.tmp")
-              (tmp, new TaskParquet.RowFileWriter(hconf, tmp, schema, mt),
-                Array(0L, 0L))
-            })
-            // strip __pid and __h: rebuild the row view without the last two fields
-            w.add(org.apache.spark.sql.Row.fromSeq(row.toSeq.dropRight(2)))
-            stat(0) += 1
-            stat(1) ^= row.getLong(pidIdx + 1)
-          }
-          writers.toSeq.sortBy(_._1).foreach { case (pid, (tmp, w, stat)) =>
+            var n, checksum = 0L
+            rows.foreach { row =>
+              if (row.getInt(tagIdx) != b || row.getInt(tagIdx + 1) != pid)
+                throw new IllegalStateException(s"write task of (batch $b, part $pid) got a row of another part")
+              w.add(row) // reads only the output columns; the tags trail
+              n += 1
+              checksum ^= row.getLong(tagIdx + 2)
+            }
             w.close()
             val fin = new Path(s"$batchDir/part-$pid.parquet")
             // a racing retry may have won: its output is equivalent
             if (!fs.rename(tmp, fin) && !fs.exists(fin))
               throw new java.io.IOException(s"commit failed for $fin")
-            if (fs.exists(new Path(s"$batchDir/.part-$pid-$attempt.tmp")))
-              fs.delete(new Path(s"$batchDir/.part-$pid-$attempt.tmp"), false)
+            if (fs.exists(tmp)) fs.delete(tmp, false)
             val recTmp = new Path(s"$partLineDir/.part-$pid-$attempt.tmp")
             val rec = new Path(s"$partLineDir/part-$pid.json")
             val os = fs.create(recTmp, true)
-            os.write(s"""{"batch":$b,"part":$pid,"rows":${stat(0)},"checksum":${stat(1)}}"""
+            os.write(s"""{"batch":$b,"part":$pid,"rows":$n,"checksum":$checksum}"""
               .getBytes("UTF-8"))
             os.close()
             if (!fs.rename(recTmp, rec) && !fs.exists(rec))
               throw new java.io.IOException(s"lineage commit failed for $rec")
-            val k = PartKill.committed.incrementAndGet()
-            if (failAfter >= 0 && k > failAfter)
-              throw new RuntimeException(
-                s"injected failure after $k partition commits (test hook)")
-          }
-          committed = true
+            committed = true
           } finally {
-            if (!committed) writers.valuesIterator.foreach { case (tmp, w, _) =>
+            if (!committed) {
               try w.close() catch { case _: Throwable => () }
               try { if (fs.exists(tmp)) fs.delete(tmp, false) }
               catch { case _: Throwable => () }
             }
           }
+          val k = PartKill.committed.incrementAndGet()
+          if (failAfter >= 0 && k > failAfter)
+            throw new RuntimeException(
+              s"injected failure after $k partition commits (test hook)")
         }
       }
-    val inCount = obs.get("n").asInstanceOf[Long]
-    val parts = partRecords(spark, cfg, b).values
-    BatchResult(b, inCount, parts.map(_._1).sum, parts.map(_._2).foldLeft(0L)(_ ^ _))
-  }
-
-  private def commitLoop(spark: SparkSession, cfg: Config,
-                         batchSource: Int => DataFrame, zones: DataFrame): Seq[BatchResult] = {
-    val done = committedBatches(spark, cfg)
-    val results = Seq.newBuilder[BatchResult]
-    var committed = 0
-    for (b <- 0 until cfg.nBatches if !done.contains(b)) {
-      val r = runBatch(spark, batchSource(b), zones, cfg, b)
+    val counts = obs.get
+    pending.zipWithIndex.map { case (b, i) =>
+      val parts = partRecords(spark, cfg, b).values
+      val r = BatchResult(b, counts(s"n$b").asInstanceOf[Long],
+        parts.map(_._1).sum, parts.map(_._2).foldLeft(0L)(_ ^ _))
       commitLineage(spark, cfg, r)
-      results += r
-      committed += 1
-      if (cfg.failAfterBatch >= 0 && committed > cfg.failAfterBatch)
+      if (cfg.failAfterBatch >= 0 && i + 1 > cfg.failAfterBatch)
         throw new RuntimeException(s"injected failure after batch $b (test hook)")
+      r
     }
-    results.result()
   }
 
   /** Run (or resume) the pipeline over an arbitrary DataFrame input.
-    * Batches are stable url-hash classes; each batch job scans the input
-    * once (total nBatches scans — use [[runOnPath]] for file inputs, which
-    * scans the whole input exactly once across all batches).
+    * Batches are stable url-hash classes, tagged on the rows; one job
+    * scans the input once for every pending batch (use [[runOnPath]] for
+    * file inputs, which opens only the pending batches' files).
     */
   def run(spark: SparkSession, pages: DataFrame, zones: DataFrame,
-          cfg: Config): Seq[BatchResult] =
-    commitLoop(spark, cfg,
-      b => pages.filter(pmod(xxhash64(col("url")), lit(cfg.nBatches)) === b), zones)
+          cfg: Config): Seq[BatchResult] = {
+    val pending = (0 until cfg.nBatches).filterNot(committedBatches(spark, cfg))
+    val tagged = pages.withColumn(Batch, pmod(xxhash64(col("url")), lit(cfg.nBatches)).cast("int"))
+    if (pending.isEmpty) Nil
+    else runBatches(spark, tagged.filter(col(Batch).isin(pending: _*)), zones, cfg, pending)
+  }
 
-  /** Run (or resume) over a parquet directory: batch = contiguous range of
-    * the sorted file list, so the full input is read exactly ONCE per run
-    * (each batch job opens only its own files — no per-batch full scans).
-    * File-list order is deterministic, so restarts and different cluster
-    * sizes see identical batches.
+  /** Run (or resume) over a parquet directory: batch = every
+    * `nBatches`-th file of the sorted file list, so the full input is read
+    * exactly ONCE per run, by one job that unions the pending batches' file
+    * scans, each tagged with its batch (batches already committed are not
+    * read at all). File-list order is deterministic, so restarts and
+    * different cluster sizes see identical batches.
     */
   def runOnPath(spark: SparkSession, inputPath: String, zones: DataFrame,
                 cfg: Config): Seq[BatchResult] = {
     val fs = new Path(inputPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // recursive: PageTable.write produces a ts_day=...-partitioned layout,
-    // so a flat listStatus would see only directories and find no files
-    val files = {
-      val it = fs.listFiles(new Path(inputPath), true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) buf += it.next().getPath.toString
-      buf.filter(p => p.endsWith(".parquet") && !p.contains("/_")).sorted.toArray
+    // recursive: PageTable.write produces a ts_day=...-partitioned layout.
+    // A listStatus walk, not listFiles: its LocatedFileStatus copies each
+    // file's permission, which the local file system reads by forking a
+    // process per file (~150 ms for 16 files, more than a batch's planning)
+    def leaves(dir: Path): Seq[String] = fs.listStatus(dir).toSeq.flatMap { st =>
+      if (st.isDirectory) leaves(st.getPath) else Seq(st.getPath.toString)
     }
+    val files = leaves(new Path(inputPath))
+      .filter(p => p.endsWith(".parquet") && !p.contains("/_")).sorted.toArray
     require(files.nonEmpty, s"no parquet files under $inputPath")
-    val perBatch: Array[Array[String]] =
-      Array.tabulate(cfg.nBatches)(b => files.zipWithIndex.collect {
-        case (f, i) if i % cfg.nBatches == b => f
-      })
-    commitLoop(spark, cfg,
-      b => if (perBatch(b).isEmpty)
-        spark.read.parquet(files.head).limit(0)
-      else spark.read.parquet(perBatch(b): _*), zones)
+    val pending = (0 until cfg.nBatches).filterNot(committedBatches(spark, cfg))
+    if (pending.isEmpty) Nil
+    else {
+      // one schema inference (a Spark job of its own) for every batch's scan
+      val read = spark.read.schema(spark.read.parquet(files.head).schema)
+      val scans = pending.map { b =>
+        val own = files.indices.collect { case i if i % cfg.nBatches == b => files(i) }
+        val scan = if (own.isEmpty) read.parquet(files.head).limit(0) else read.parquet(own: _*)
+        scan.withColumn(Batch, lit(b))
+      }
+      runBatches(spark, scans.reduce(_ union _), zones, cfg, pending)
+    }
   }
 
   /** Read back the full (resumed) output. A batch whose every page had

@@ -24,7 +24,8 @@ import graft.gf
   *    it (BroadcastHashJoin; no shuffle of the page table at all);
   *  - with a huge polygon side, the same plan degrades to a shuffled hash
   *    join on `cell`, where AQE skew-join splitting plus optional explicit
-  *    salting (`salted`) handles dense cells;
+  *    salting (`pointInPolygonSalted`, `nSalt` join keys per cell) handles
+  *    dense cells;
   *  - the exact PIP runs as a whole-stage-codegen expression that reads
   *    each candidate's polygon WKB in place (`GeoRt.containsPoint`).
   */
@@ -52,16 +53,25 @@ object SpatialJoin {
                              broadcastPolys: Boolean = true): DataFrame =
     pointJoin(points, lon, lat, polys, geom, res, broadcastPolys, gf.st_intersects_point)
 
-  /** The one point-join plan, with `pred(geom, lon, lat)` as its post-filter. */
+  /** The one point-join plan, with `pred(geom, lon, lat)` as its post-filter.
+    * With `nSalt` > 1 (SURVEY.md §4 #18) each (poly, cell) pair is
+    * replicated `nSalt` times and each point joins the replica its
+    * coordinates hash to, so a dense cell spreads over `nSalt` join keys.
+    */
   private def pointJoin(points: DataFrame, lon: Column, lat: Column, polys: DataFrame,
                         geom: Column, res: Int, broadcastPolys: Boolean,
-                        pred: (Column, Column, Column) => Column): DataFrame = {
-    val polyCells0 = polys.withColumn("__cell", explode(gf.cells_covering(geom, res)))
+                        pred: (Column, Column, Column) => Column, nSalt: Int = 1): DataFrame = {
+    val cells = polys.withColumn("__cell", explode(gf.cells_covering(geom, res)))
+    val polyCells0 =
+      if (nSalt == 1) cells else cells.withColumn("__salt", explode(lit((0 until nSalt).toArray)))
     val polyCells = if (broadcastPolys) broadcast(polyCells0) else polyCells0
-    val pts = points.withColumn("__pcell", gf.cell_of(lon, lat, res))
-    pts.join(polyCells, pts("__pcell") === polyCells("__cell"))
+    val pts0 = points.withColumn("__pcell", gf.cell_of(lon, lat, res))
+    val pts = if (nSalt == 1) pts0 else pts0.withColumn("__psalt", pmod(hash(lon, lat), lit(nSalt)))
+    val onCell = pts("__pcell") === polyCells("__cell")
+    pts.join(polyCells,
+        if (nSalt == 1) onCell else onCell && pts("__psalt") === polyCells("__salt"))
       .filter(pred(geom, lon, lat))
-      .drop("__cell", "__pcell")
+      .drop("__cell", "__pcell", "__salt", "__psalt")
   }
 
   /** Geometry-geometry join (the layer-algebra shape: per-pair exact
@@ -147,23 +157,13 @@ object SpatialJoin {
       .select(col("__lk").as("left_key"), col("wkb"))
   }
 
-  /** Salted shuffled variant for a large polygon side with dense cells
-    * (SURVEY.md §4 #18): points pick a deterministic salt from their
-    * coordinates; each (poly, cell) pair is replicated `nSalt` times. Use
-    * when neither side broadcasts and one cell dominates.
+  /** Salted shuffled variant for a large polygon side with dense cells:
+    * [[pointInPolygon]] without the broadcast, with `nSalt` join keys per
+    * cell. Use when neither side broadcasts and one cell dominates.
     */
   def pointInPolygonSalted(points: DataFrame, lon: Column, lat: Column,
                            polys: DataFrame, geom: Column, res: Int,
-                           nSalt: Int): DataFrame = {
-    val polyCells = polys
-      .withColumn("__cell", explode(gf.cells_covering(geom, res)))
-      .withColumn("__salt", explode(lit((0 until nSalt).toArray)))
-    val pts = points
-      .withColumn("__pcell", gf.cell_of(lon, lat, res))
-      .withColumn("__psalt", pmod(hash(lon, lat), lit(nSalt)))
-    pts.join(polyCells,
-        pts("__pcell") === polyCells("__cell") && pts("__psalt") === polyCells("__salt"))
-      .filter(gf.st_contains_point(geom, lon, lat))
-      .drop("__cell", "__pcell", "__salt", "__psalt")
-  }
+                           nSalt: Int): DataFrame =
+    pointJoin(points, lon, lat, polys, geom, res, broadcastPolys = false,
+      gf.st_contains_point, nSalt)
 }

@@ -7,6 +7,10 @@ import org.apache.spark.sql.functions._
   * geo_extract → cell → PIP join → tile assignment) on the SAME
   * deterministic input at two parallelism levels — local[8] vs local[32]
   * as the sandbox proxy for N vs 4N executors (no real cluster here).
+  * The measured job is the full lineage-committing `Pipeline.run`
+  * (parquet write plus lineage records, one scan-shuffle-write job per
+  * run), which carries the `text` column end to end: a count-based run
+  * would let Spark prune it.
   * Reports throughput at both levels and the scaling efficiency
   * `throughput(32) / (4 × throughput(8))`, target ≥ 0.8
   * (BASELINE.json.north_rule).
@@ -17,7 +21,8 @@ import org.apache.spark.sql.functions._
   * then the median of 3 measured runs counts. Identical output row counts
   * across levels are asserted.
   *
-  * Run: sbt -batch "runMain graft.tools.ScalingBench [nPages] [levels]"
+  * Run: sbt -batch "runMain graft.tools.ScalingBench [nPages] [cpus]" (no
+  * cpus: both levels in one JVM), or "probe" for the hardware ceilings.
   */
 object ScalingBench {
 
@@ -42,20 +47,9 @@ object ScalingBench {
       .withColumn("geom", graft.gf.st_geomfromtext($"wkt")).select($"zone_id", $"geom")
   }
 
-  private def timedRun(spark: SparkSession, pagesPath: String): (Double, Long) = {
-    val pages = spark.read.parquet(pagesPath)
-    val cfg = graft.jobs.Pipeline.Config(outDir = "", nBatches = 1)
-    val t0 = System.nanoTime()
-    val rows = graft.jobs.Pipeline.transform(pages, zonesOf(spark), cfg).count()
-    ((System.nanoTime() - t0) / 1e9, rows)
-  }
-
-  /** The lineage-committing job: full Pipeline.run (parquet write + per-
-    * batch lineage record), carrying the text column end to end — the
-    * honest flagship (the count-based run lets Spark prune `text`).
-    */
-  private def timedRunWrite(spark: SparkSession, pagesPath: String,
-                            runId: Long): (Double, Long) = {
+  /** One timed `Pipeline.run` into a fresh output directory: (seconds, rows). */
+  private def timedRun(spark: SparkSession, pagesPath: String,
+                       runId: Long): (Double, Long) = {
     // SPARK_GRAFT_WRITE_DIR=/dev/shm/... isolates the engine from the
     // sandbox's single shared disk (a real cluster has per-executor disks)
     val outBase = sys.env.getOrElse("SPARK_GRAFT_WRITE_DIR", "/tmp/graft_scaling_out")
@@ -154,12 +148,11 @@ object ScalingBench {
       boot.stop()
     }
 
-    // single-level mode: "<nPages> <cpus> [write]" — run ONE level in THIS
+    // single-level mode: "<nPages> <cpus>" — run ONE level in THIS
     // JVM so both levels get identical fresh-JVM treatment (warm-up
     // profile, JIT code cache). A wrapper invokes the JVM once per level.
     val singleLevel = if (args.length > 1) Some(args(1).toInt) else None
     val levels = singleLevel.map(Seq(_)).getOrElse(Seq(8, 32))
-    val writeMode = args.length > 2 && args(2) == "write"
 
     // warmup seconds per level: JIT maturity tracks wall-clock, so a
     // fixed-count warmup would under-warm the faster level. Tunable so a
@@ -173,9 +166,7 @@ object ScalingBench {
       val gaugeBefore = memPerThreadSpeed(8)
       val spark = session(cpus)
       var runId = 0L
-      def onceTimed(): (Double, Long) =
-        if (writeMode) { runId += 1; timedRunWrite(spark, pagesPath, runId) }
-        else timedRun(spark, pagesPath)
+      def onceTimed(): (Double, Long) = { runId += 1; timedRun(spark, pagesPath, runId) }
       val warmStart = System.nanoTime()
       var warmRuns = 0
       while (warmRuns < 3 || (System.nanoTime() - warmStart) < warmupSec * 1e9) {
@@ -190,7 +181,7 @@ object ScalingBench {
       val sec = runs.map(_._1).min // best (steady-state throughput claim)
       val tput = nPages / sec
       println(f"[scaling] local[$cpus%2d]: best $sec%7.2f s  $tput%10.0f pages/s  (runs: ${runs.map(r => f"${r._1}%.2f").mkString(", ")}; $rows rows; dram8 gauge ${gaugeBefore / 1e6}%.0f→${gaugeAfter / 1e6}%.0f Mw/s)")
-      println(f"""{"metric":"level_throughput","mode":"${if (writeMode) "write" else "count"}","cpus":$cpus,"pages":$nPages,"sec":$sec%.2f,"pages_per_sec":$tput%.0f,"out_rows":$rows,"dram8_before":${gaugeBefore}%.0f,"dram8_after":${gaugeAfter}%.0f}""")
+      println(f"""{"metric":"level_throughput","mode":"write","cpus":$cpus,"pages":$nPages,"sec":$sec%.2f,"pages_per_sec":$tput%.0f,"out_rows":$rows,"dram8_before":${gaugeBefore}%.0f,"dram8_after":${gaugeAfter}%.0f}""")
       (cpus, sec, tput, rows)
     }
     assert(results.map(_._4).distinct.size == 1, "outputs differ across parallelism levels!")

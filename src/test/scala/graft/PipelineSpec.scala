@@ -4,8 +4,9 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.jobs.Pipeline
-import graft.sources.Pages
+import graft.sources.{Pages, PageTable}
 
 class PipelineSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -245,5 +246,115 @@ class PipelineSpec extends AnyFunSuite {
     val (bad, badOut) = check()
     assert(bad !== 0, badOut)
     assert(badOut.contains(part), badOut)
+  }
+
+  /** Every lineage record (batch and part) under `dir`, relative path → bytes. */
+  private def lineageRecords(dir: String): Map[String, Seq[Byte]] = {
+    val root = Paths.get(s"$dir/_lineage")
+    val it = Files.walk(root).iterator()
+    val recs = Map.newBuilder[String, Seq[Byte]]
+    while (it.hasNext) {
+      val p = it.next()
+      if (Files.isRegularFile(p) && p.getFileName.toString.endsWith(".json") &&
+          !p.getFileName.toString.startsWith("."))
+        recs += root.relativize(p).toString -> Files.readAllBytes(p).toSeq
+    }
+    recs.result()
+  }
+
+  /** Spark jobs started while `f` runs. Listener events arrive in order, so
+    * once a marker job's start is seen, every job of `f` has been counted.
+    */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.spec.marker") != null)
+          drained.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setLocalProperty("graft.spec.marker", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.marker", null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener queue not drained")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a run takes as many Spark jobs for 4 batches as for 1") {
+    val pages = Pages.synth(spark, 4000L).cache()
+    pages.count()
+    def jobs(nBatches: Int): Int = {
+      val dir = Files.createTempDirectory(s"graft-pipe-jobs$nBatches").toString
+      jobsOf(Pipeline.run(spark, pages, zones, Pipeline.Config(outDir = dir, nBatches = nBatches, nParts = 8)))
+    }
+    val one = jobs(1)
+    assert(one > 0)
+    assert(jobs(4) === one, "jobs of a 4-batch run vs a 1-batch run")
+    pages.unpersist()
+  }
+
+  test("a kill past batch 0's parts resumes with batch 0's record; no part file rewritten") {
+    val pages = Pages.synth(spark, 4000L).cache()
+    val dirA = Files.createTempDirectory("graft-pipe-xa").toString
+    val dirB = Files.createTempDirectory("graft-pipe-xb").toString
+    val cfgA = Pipeline.Config(outDir = dirA, nBatches = 2, nParts = 16)
+    Pipeline.run(spark, pages, zones, cfgA)
+    val (parts0, parts1) = (Pipeline.committedParts(spark, cfgA, 0), Pipeline.committedParts(spark, cfgA, 1))
+    assert(parts1.size >= 4, s"batch 1 has too few parts to kill inside it: $parts1")
+
+    // dies inside batch 1, after batch 0's last part and half of batch 1's
+    val cfgB = cfgA.copy(outDir = dirB, failAfterParts = parts0.size + parts1.size / 2)
+    graft.jobs.PartKill.committed.set(0)
+    intercept[org.apache.spark.SparkException] { Pipeline.run(spark, pages, zones, cfgB) }
+    assert(Pipeline.committedBatches(spark, cfgB).isEmpty, "no batch record yet")
+    assert(Pipeline.committedParts(spark, cfgB, 0) === parts0, "every batch-0 part is committed")
+    val killed1 = Pipeline.committedParts(spark, cfgB, 1)
+    assert(killed1.size < parts1.size, s"batch 1 should be partly committed: $killed1")
+
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    def mtimes(): Map[String, Long] = (parts0.map(0 -> _) ++ killed1.map(1 -> _)).toSeq.map {
+      case (b, p) =>
+        val f = new org.apache.hadoop.fs.Path(s"$dirB/batch=$b/part-$p.parquet")
+        (s"$b/$p", fs.getFileStatus(f).getModificationTime)
+    }.toMap
+    val before = mtimes()
+    graft.jobs.PartKill.committed.set(0)
+    val res = Pipeline.run(spark, pages, zones, cfgB.copy(failAfterParts = -1))
+    assert(res.map(_.batch) === Seq(0, 1))
+    assert(mtimes() === before, "restart rewrote already-committed partitions")
+    assert(lineageRecords(dirB) === lineageRecords(dirA), "lineage records vs a straight run's")
+    pages.unpersist()
+  }
+
+  test("runOnPath: each batch record's in_pages equals the row count of its files") {
+    val inDir = Files.createTempDirectory("graft-pipe-pin").toString
+    PageTable.write(Pages.synth(spark, 3000L), inDir)
+    val dir = Files.createTempDirectory("graft-pipe-pout").toString
+    val cfg = Pipeline.Config(outDir = dir, nBatches = 3, nParts = 8)
+    Pipeline.runOnPath(spark, inDir, zones, cfg)
+    // the pipeline's batching: every nBatches-th file of the sorted list
+    val files = {
+      val it = Files.walk(Paths.get(inDir)).iterator()
+      val b = Seq.newBuilder[String]
+      while (it.hasNext) {
+        val p = it.next().toString
+        if (p.endsWith(".parquet") && !p.contains("/_")) b += p
+      }
+      b.result().sorted
+    }
+    assert(files.size > cfg.nBatches)
+    val inPages = (0 until cfg.nBatches).map { b =>
+      val own = files.indices.filter(_ % cfg.nBatches == b).map(files)
+      val expect = spark.read.parquet(own: _*).count()
+      val rec = record(s"$dir/_lineage/batch-$b.json")
+      assert(rec("in_pages") === expect, s"batch $b in_pages")
+      expect
+    }
+    assert(inPages.sum === 3000L)
   }
 }
