@@ -293,7 +293,7 @@ object SparkEntry {
       val qs = Seq((0L, 2.35, 48.85), (1L, -122.4, 37.78), (2L, 151.2, -33.86),
         (3L, 0.01, 0.01), (4L, 139.69, 35.68)).toDF("qid", "qlon", "qlat")
       KnnJoin(pts, col("lon"), col("lat"), qs, col("qid"), col("qlon"), col("qlat"),
-          k = 5, res = 7, initialRing = 2, tieBreak = Seq(col("pid")))
+          k = 5, res = 7, tieBreak = Seq(col("pid")))
         .select(col("qid"), col("pid"), col("dist"))
     }),
     "q_tile_assign" -> ((s, d) => {

@@ -3,8 +3,8 @@ package graft.core
 import org.apache.spark.sql.Dataset
 
 /** Checkpoint-policy switch for the iterative / multi-consumer operators
-  * (minhash banding, knn ring expansion, sieve pointer-doubling, contour
-  * chain merge, graph relaxation rounds).
+  * (minhash banding, sieve pointer-doubling, contour chain merge, graph
+  * relaxation rounds).
   *
   * Default is `localCheckpoint(eager = true)`: blocks live on executors
   * only — fastest on a healthy cluster and on local[N], but NOT
@@ -24,7 +24,7 @@ import org.apache.spark.sql.Dataset
   *
   * STORAGE NOTE (reliable mode): Spark never deletes reliable checkpoint
   * files on unpersist — each iteration of a Ckpt'd loop (sieve pointer
-  * doubling, knn rounds, union-find rounds) leaves one working-set copy in
+  * doubling, union-find rounds) leaves one working-set copy in
   * the checkpoint dir until the application exits. Launch with
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (must be set
   * BEFORE the context starts) to let the ContextCleaner reap checkpoints

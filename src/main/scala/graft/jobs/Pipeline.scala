@@ -150,12 +150,16 @@ object Pipeline {
     * One observation on the scan counts every pending batch's input pages
     * (no second count job); after the job each batch's output stats sum
     * and XOR its part records, including those of an earlier, killed
-    * attempt, and the batch records commit in batch order.
+    * attempt, and the batch records commit in batch order, once the temp
+    * files a killed attempt left in a resumed batch are deleted.
     */
   private def runBatches(spark: SparkSession, tagged: DataFrame, zones: DataFrame,
                          cfg: Config, pending: Seq[Int]): Seq[BatchResult] = {
     val nParts = cfg.nParts
-    val done = pending.flatMap(b => committedParts(spark, cfg, b).map(b * nParts + _))
+    val fs = new Path(cfg.outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // only a batch a killed attempt got to holds parts or temp files
+    val resumed = pending.filter(b => fs.exists(new Path(s"${lineageDir(cfg)}/batch-$b")))
+    val done = resumed.flatMap(b => committedParts(spark, cfg, b).map(b * nParts + _))
     val obs = org.apache.spark.sql.Observation("graft_pipe_in")
     val inPages = pending.map(b => count(when(col(Batch) === b, 1)).as(s"n$b"))
     val out = transform(tagged.observe(obs, inPages.head, inPages.tail: _*), zones, cfg)
@@ -227,6 +231,8 @@ object Pipeline {
         }
       }
     val counts = obs.get
+    for (b <- resumed; dir <- Seq(s"$outDir/batch=$b", s"$partLineRoot/batch-$b");
+         st <- fs.globStatus(new Path(s"$dir/.part-*.tmp"))) fs.delete(st.getPath, false)
     pending.zipWithIndex.map { case (b, i) =>
       val parts = partRecords(spark, cfg, b).values
       val r = BatchResult(b, counts(s"n$b").asInstanceOf[Long],

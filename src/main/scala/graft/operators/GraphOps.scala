@@ -18,6 +18,8 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
+  private val log = org.apache.logging.log4j.LogManager.getLogger("graft.operators.GraphOps")
+
   /** Connected components: an adapter over [[UnionFind.roots]] (the
     * `Dedup.clusters` shape) — every vertex of either edge column, with
     * self-loop-only vertices kept as their own component.
@@ -56,7 +58,7 @@ object GraphOps {
     // above it, degrade to [[kShortestPathsDistributed]] — same Yen
     // semantics, edges never leave the executors.
     if (edges.count() > maxEdges) {
-      System.err.println(s"[kShortestPaths] edge list exceeds the in-memory " +
+      log.warn(s"kShortestPaths: edge list exceeds the in-memory " +
         s"cap ($maxEdges); using the distributed spur search (slower per " +
         "path, unbounded scale)")
       return kShortestPathsDistributed(edges, src, dst, weight, from, to, k)

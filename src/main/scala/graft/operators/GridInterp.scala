@@ -14,7 +14,7 @@ import graft.gf
   *    (`gdalgrid.cpp:265` GDALGridInverseDistanceToAPowerNearestNeighbor):
   *    weight = 1/(r²)^(p/2) over the k closest samples within a radius,
   *    exact-hit short-circuit, nodata below minPoints — the quadtree
-  *    search is replaced by the cell-ring kNN join.
+  *    search is replaced by the one-pass cell-bucketed kNN join.
   */
 object GridInterp {
 
@@ -41,7 +41,7 @@ object GridInterp {
                          minPoints: Int = 1, noData: Double = 0.0): DataFrame = {
     val pts = points.withColumn("__v", value)
     val knn = KnnJoin(pts, lon, lat, queries, qid, qlon, qlat, k, res,
-      initialRing = 2, tieBreak = Seq(lon, lat))
+      tieBreak = Seq(lon, lat))
     // weight 1/(r2)^(p/2); exact hits (r2 ~ 0) take the sample value
     // directly (reference threshold 1e-13 on r², gdalgrid.cpp:341)
     val r2 = col("dist") * col("dist")
@@ -68,20 +68,10 @@ object GridInterp {
                                 queries: DataFrame, qid: Column, qlon: Column, qlat: Column,
                                 radius1: Double, radius2: Double, angle: Double,
                                 res: Int): DataFrame = {
-    val n = graft.index.CellGrid.cellsPerAxis(res)
     val rmax = math.max(radius1, radius2)
-    @inline def ixExpr(c: Column, lo: Double, span: Double): Column =
-      least(greatest(floor((c + lo) / span * n), lit(0.0)), lit((n - 1).toDouble)).cast("long")
-    val q = queries.select(qid.cast("long").as("__qid"),
-        qlon.cast("double").as("__qlon"), qlat.cast("double").as("__qlat"))
-      .withColumn("__cx0", ixExpr(col("__qlon") - rmax, 180.0, 360.0))
-      .withColumn("__cx1", ixExpr(col("__qlon") + rmax, 180.0, 360.0))
-      .withColumn("__cy0", ixExpr(col("__qlat") - rmax, 90.0, 180.0))
-      .withColumn("__cy1", ixExpr(col("__qlat") + rmax, 90.0, 180.0))
-      .withColumn("__cx", explode(sequence(col("__cx0"), col("__cx1"))))
-      .withColumn("__cy", explode(sequence(col("__cy0"), col("__cy1"))))
-      .withColumn("__qcell", lit(res.toLong << 52) + col("__cx") * (1L << 26) + col("__cy"))
-      .select(col("__qid"), col("__qlon"), col("__qlat"), col("__qcell"))
+    val q = new KnnJoin.CellBox(col("__qlon"), col("__qlat"), lit(rmax), res)
+      .explodeCells(queries.select(qid.cast("long").as("__qid"),
+        qlon.cast("double").as("__qlon"), qlat.cast("double").as("__qlat")), "__qcell")
     val pts = points.select(lon.cast("double").as("__px"),
         lat.cast("double").as("__py"), value.cast("double").as("__v"))
       .withColumn("__pcell", gf.cell_of(col("__px"), col("__py"), res))
@@ -201,11 +191,11 @@ object GridInterp {
     * strictly inside B's coordinate box, no un-gathered sample can invade
     * the circle, so the triangle is in the GLOBAL Delaunay triangulation
     * and the interpolated value is exact — not an approximation.
-    * Unverified queries re-run at double the halo (the KnnJoin
-    * ring-expansion pattern: the driver sees per-round COUNTS, never
-    * samples); once B covers the whole extent the local triangulation IS
-    * the global one, so termination is guaranteed. Queries outside the
-    * sample envelope are outside the hull and short-circuit to noData.
+    * Unverified queries re-run at double the halo (only per-round
+    * COUNTS leave the executors, never samples); once B covers the whole
+    * extent the local triangulation IS the global one, so termination is
+    * guaranteed. Queries outside the sample envelope are outside the hull
+    * and short-circuit to noData.
     *
     * Work per query cell is bounded by local density, not total sample
     * count — on a 1000-executor cluster each cell group triangulates only

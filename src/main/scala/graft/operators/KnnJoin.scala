@@ -1,149 +1,143 @@
 package graft.operators
 
-import graft.core.Ckpt.CkptOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.gf
 import graft.index.CellGrid
 
-/** kNN join via cell-ring expansion — the distributed re-expression of the
-  * reference's expanding quadtree radius search
-  * (`/root/reference/gdal/alg/gdalgrid.cpp:265-385`
-  * GDALGridInverseDistanceToAPowerNearestNeighbor grows its AOI until
-  * nMaxPoints are found; quadtree search `gdal/port/cpl_quad_tree.cpp:682`).
+/** Exact kNN join over cell buckets — the distributed re-expression of
+  * the reference's expanding quadtree radius search
+  * (`gdal/alg/gdalgrid.cpp:265-385`; quadtree search
+  * `gdal/port/cpl_quad_tree.cpp:682`), in one pass over a proved radius:
+  *  1. one aggregate counts the points of [-180,180]×[-90,90] per cell at
+  *     h = min(res, 10) into a broadcast (2^h+1)² summed-area table;
+  *  2. per query (a map; queries are never collected): r0 is the smallest
+  *     Chebyshev radius whose box of h-cells around the query's — clamped,
+  *     not wrapped — holds ≥ k counted points (binary search), and d the
+  *     distance to that box's farthest lon/lat corner plus [[Slack]]
+  *     (∞ when fewer than k points are counted);
+  *  3. the query equi-joins the points of the `res` cells that cover
+  *     [qlon ± d] × [qlat ± d], clamped and not wrapped, as the planar
+  *     distance does not wrap. A query with d = ∞, or whose box spans more
+  *     cells than there are points, takes every point in a broadcast
+  *     cross join, which AQE drops when no query takes it;
+  *  4. one `row_number` window by (dist, tieBreak…) keeps k per query.
   *
-  * Algorithm (driver-coordinated, candidates stay distributed):
-  *  1. r ← r0; candidate cells = disk(query cell, r) for every query
-  *     (queries are small and broadcast; points carry one cell id).
-  *  2. equi-join points to (query, cell) pairs; per query keep top-k by
-  *     planar distance (window).
-  *  3. correctness check: the k-th neighbor distance must be ≤ the
-  *     guaranteed-covered radius of ring r (r cells in the narrower axis);
-  *     queries that fail (or found < k) re-run with a doubled ring.
-  *
-  * The guarantee: a disk of Chebyshev radius r around the query's cell
-  * covers every point within `r * min(cellW, cellH)` planar degrees of the
-  * query point, so once the k-th candidate is closer than that bound no
-  * uncovered point can beat it.
+  * Proof: the box holds ≥ k points, all within d (a rectangle's farthest
+  * point from the query is a corner), so the k-th neighbour is at ≤ d.
+  * Every point within that distance, ties included, lies in the square of
+  * step 3 and buckets into one of its cells: `cell_of` is monotone and
+  * clamps like the square, out-of-domain points included (step 1 skips
+  * them, as their clamped cell bounds no distance). So the window sees a
+  * superset of the global top-k. The slack covers the rounding of the
+  * corner distance, of the bucketing and of the planar distance (about
+  * 1e-13° at these magnitudes).
   */
 object KnnJoin {
 
+  /** Added to every proved radius; see the proof above. */
+  private val Slack = 1e-9
+
   /** @param points DataFrame with (idCols..., lon, lat)
-    * @param queries small DataFrame with (qid, qlon, qlat)
+    * @param queries DataFrame with (qid, qlon, qlat); it stays distributed
     * @param k neighbors per query
-    * @param res cell resolution for bucketing
+    * @param res cell resolution of the candidate join
+    * @param tieBreak order among equal distances (default: lon, lat)
     * @return points columns + qid + dist, exactly k rows per query (fewer
     *         if the whole dataset has < k points)
     */
   def apply(points: DataFrame, lon: Column, lat: Column,
             queries: DataFrame, qid: Column, qlon: Column, qlat: Column,
-            k: Int, res: Int, initialRing: Int = 1, maxRing: Int = 1 << 20,
-            tieBreak: Seq[Column] = Nil): DataFrame = {
-    val n = CellGrid.cellsPerAxis(res)
-    val cellW = 360.0 / n
-    val cellH = 180.0 / n
-    val safePerRing = math.min(cellW, cellH)
+            k: Int, res: Int, tieBreak: Seq[Column] = Nil): DataFrame = {
+    val h = math.min(res, 10) // at most 4^10 cells: a table of 8 MiB
+    val w = (1 << h) + 1
+    // points per h-cell; out-of-domain and null points count as cell -1
+    val inDomain = lon.between(-180.0, 180.0) && lat.between(-90.0, 90.0)
+    val counts = points.groupBy(when(inDomain, gf.cell_of(lon, lat, h)).otherwise(-1L))
+      .count().collect().map(r => (r.getLong(0), r.getLong(1)))
+    // sat(y·w + x) = counted points in the h-cells [0, x) × [0, y)
+    val sat = new Array[Long](w * w)
+    for ((c, m) <- counts if c >= 0) sat((CellGrid.iy(c).toInt + 1) * w + CellGrid.ix(c).toInt + 1) = m
+    for (y <- 1 until w; x <- 1 until w)
+      sat(y * w + x) += sat((y - 1) * w + x) + sat(y * w + x - 1) - sat((y - 1) * w + x - 1)
+    val table = points.sparkSession.sparkContext.broadcast(sat)
+    val radius = udf((x: Double, y: Double) => provedRadius(table.value, h, k, x, y))
 
-    val pts = points.withColumn("__pcell", gf.cell_of(lon, lat, res))
-
-    // DataFrame-driven iteration: the pending query set stays distributed;
-    // the only per-round driver value is its count. Converged queries leave
-    // via an anti-join; rounds double the candidate ring.
-    var pending = queries.select(qid.cast("long").as("__qid"),
+    val q = queries.select(qid.cast("long").as("__qid"),
         qlon.cast("double").as("__qlon"), qlat.cast("double").as("__qlat"))
-      .ckpt()
-    var nPending = pending.count()
-    require(nPending > 0, "knn: no queries")
-    var ring = initialRing
-    var acc: DataFrame = null
-    val roundCaches = Seq.newBuilder[DataFrame]
+      .withColumn("__d", radius(col("__qlon"), col("__qlat")))
+    val box = new CellBox(col("__qlon"), col("__qlat"), col("__d"), res)
+    val sweep = col("__d").isNull || col("__d") === Double.PositiveInfinity ||
+      box.size > counts.iterator.map(_._2).sum
+    val pts = points.withColumn("__pcell", gf.cell_of(lon, lat, res))
+    val cand = pts.join(box.explodeCells(q.filter(!sweep), "__qcell"),
+        col("__pcell") === col("__qcell"))
+      .drop("__qcell")
+      .unionByName(pts.crossJoin(broadcast(q.filter(sweep))))
+    // plain products (not pow): bit-identical across engines for oracles
+    val dist = sqrt((lon - col("__qlon")) * (lon - col("__qlon")) +
+      (lat - col("__qlat")) * (lat - col("__qlat")))
+    val tb = if (tieBreak.nonEmpty) tieBreak else Seq(lon, lat)
+    cand
+      .withColumn("__dist", dist)
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(col("__qid")).orderBy(col("__dist") +: tb: _*)))
+      .filter(col("__rn") <= k)
+      .drop("__rn", "__pcell", "__qlon", "__qlat", "__d")
+      .withColumnRenamed("__qid", "qid")
+      .withColumnRenamed("__dist", "dist")
+  }
 
-    while (nPending > 0) {
-      // once the disk spans the grid (or the caller's ring budget is
-      // exhausted) stop pruning and brute-force the remaining stragglers —
-      // the loop then ALWAYS terminates with every query answered, with
-      // fewer than k rows when the whole dataset has fewer than k points
-      // (the old ring<=maxRing guard instead threw 'did not converge' on
-      // an empty points side, or whenever res made n exceed maxRing)
-      val wholeGrid = ring >= n || ring > maxRing
-      if (wholeGrid && ring < n)
-        // a small user-supplied maxRing degrades to a full scan of the
-        // points side per straggler — loud, mirroring kShortestPaths
-        System.err.println(s"knn: maxRing=$maxRing exhausted at ring=$ring " +
-          s"before convergence — brute-force sweep over ALL points for " +
-          s"$nPending remaining queries (raise maxRing to keep pruning)")
-      // candidate cells of the disk: explode dx/dy, wrap x, clamp y —
-      // mirror of CellGrid.disk as pure column arithmetic
-      def diskPairs = pending
-        .withColumn("__cx", least(greatest(
-          floor((col("__qlon") + 180.0) / 360.0 * n), lit(0.0)), lit((n - 1).toDouble)).cast("long"))
-        .withColumn("__cy", least(greatest(
-          floor((col("__qlat") + 90.0) / 180.0 * n), lit(0.0)), lit((n - 1).toDouble)).cast("long"))
-        .withColumn("__dx", explode(sequence(lit(-ring), lit(ring))))
-        .withColumn("__dy", explode(sequence(lit(-ring), lit(ring))))
-        .withColumn("__ny", col("__cy") + col("__dy"))
-        .filter(col("__ny") >= 0 && col("__ny") < n)
-        .withColumn("__qcell",
-          lit(res.toLong << 52) + pmod(col("__cx") + col("__dx"), lit(n)) * (1L << 26) + col("__ny"))
-        .select(col("__qid"), col("__qlon"), col("__qlat"), col("__qcell"))
-      // longitude wrap can alias distinct dx to the same cell once the
-      // ring spans the grid — dedupe only then (extra shuffle otherwise)
-      def pairsDeduped =
-        if (2L * ring + 1 > n) diskPairs.dropDuplicates("__qid", "__qcell") else diskPairs
-
-      val cand =
-        if (wholeGrid) pts.crossJoin(pending) // exact final sweep
-        else pts.join(pairsDeduped, pts("__pcell") === col("__qcell"))
-      // plain products (not pow): bit-identical across engines for oracles
-      val dist = sqrt((lon - col("__qlon")) * (lon - col("__qlon")) +
-        (lat - col("__qlat")) * (lat - col("__qlat")))
-      val tb = if (tieBreak.nonEmpty) tieBreak else Seq(lon, lat)
-      val ranked = cand
-        .withColumn("__dist", dist)
-        .withColumn("__rn", row_number().over(
-          Window.partitionBy(col("__qid")).orderBy(col("__dist") +: tb: _*)))
-        .filter(col("__rn") <= k)
-        .persist() // reused for convergence stats AND output (lazy: the
-                   // pending count below populates it in the same job wave)
-      roundCaches += ranked
-
-      val safeRadius = ring * safePerRing
-      // a query is done when its k-th candidate provably cannot be beaten
-      // by a point in an unsearched cell; on the brute-force sweep EVERY
-      // pending query is done (including ones with zero candidates)
-      val doneQ =
-        if (wholeGrid) pending.select(col("__qid"))
-        else ranked.groupBy(col("__qid"))
-          .agg(count(lit(1)).as("__n"), max(col("__dist")).as("__maxd"))
-          .filter(col("__n") >= k && col("__maxd") <= safeRadius)
-          .select(col("__qid"))
-
-      val part = ranked.join(doneQ.withColumnRenamed("__qid", "__dqid"),
-          col("__qid") === col("__dqid"), "leftsemi")
-        .drop("__rn", "__pcell", "__qcell", "__qlon", "__qlat")
-        .withColumnRenamed("__qid", "qid")
-        .withColumnRenamed("__dist", "dist")
-      acc = if (acc == null) part else acc.unionByName(part)
-
-      pending = pending.join(doneQ, Seq("__qid"), "left_anti").ckpt()
-      nPending = pending.count()
-      ring *= 2
+  /** Step 2 for a query at (x, y), given the summed-area table `sat` of
+    * the h-cell counts.
+    */
+  private def provedRadius(sat: Array[Long], h: Int, k: Int, x: Double, y: Double): Double = {
+    val (n, w) = (1 << h, (1 << h) + 1)
+    if (sat(w * w - 1) < k || x.isNaN || y.isNaN) return Double.PositiveInfinity
+    val (cx, cy) = (CellGrid.lonToIx(x, h).toInt, CellGrid.latToIy(y, h).toInt)
+    // h-cells [x0, x1) × [y0, y1) of the clamped box of radius r
+    def box(r: Int) = (math.max(0, cx - r), math.min(n, cx + r + 1),
+      math.max(0, cy - r), math.min(n, cy + r + 1))
+    def count(r: Int) = box(r) match {
+      case (x0, x1, y0, y1) => sat(y1 * w + x1) - sat(y0 * w + x1) - sat(y1 * w + x0) + sat(y0 * w + x0)
     }
-    require(nPending == 0, s"knn did not converge for $nPending queries")
-    // materialize the (small) result, then free every round cache so a
-    // long session doesn't accumulate executor-memory pressure
-    val out = acc.ckpt()
-    roundCaches.result().foreach(_.unpersist(false))
-    out
+    var (lo, hi) = (0, n - 1) // radius n - 1 covers the grid
+    while (lo < hi) { val mid = (lo + hi) >>> 1; if (count(mid) >= k) hi = mid else lo = mid + 1 }
+    val (x0, x1, y0, y1) = box(lo)
+    def far(v: Double, i0: Int, i1: Int, lo: Double, span: Double) =
+      math.max(math.abs(v - (lo + span * i0 / n)), math.abs(v - (lo + span * i1 / n)))
+    val (dx, dy) = (far(x, x0, x1, -180.0, 360.0), far(y, y0, y1, -90.0, 180.0))
+    math.sqrt(dx * dx + dy * dy) + Slack
+  }
+
+  /** The `res` cells that cover the square [x − r, x + r] × [y − r, y + r]
+    * by `cell_of`'s bucketing, clamped to the grid and not wrapped in
+    * longitude: the kNN candidates and [[GridInterp]]'s search ellipses.
+    */
+  private[operators] final class CellBox(x: Column, y: Column, r: Column, res: Int) {
+    private val n = CellGrid.cellsPerAxis(res)
+    private def ix(c: Column, lo: Double, span: Double): Column =
+      least(greatest(floor((c + lo) / span * n), lit(0.0)), lit((n - 1).toDouble)).cast("long")
+    private val (x0, x1, y0, y1) =
+      (ix(x - r, 180.0, 360.0), ix(x + r, 180.0, 360.0), ix(y - r, 90.0, 180.0), ix(y + r, 90.0, 180.0))
+
+    def size: Column = (x1 - x0 + 1) * (y1 - y0 + 1)
+
+    /** `df` with one row per covered cell, its id in column `name`. */
+    def explodeCells(df: DataFrame, name: String): DataFrame = df
+      .withColumn("__cx", explode(sequence(x0, x1)))
+      .withColumn("__cy", explode(sequence(y0, y1)))
+      .withColumn(name, lit(res.toLong << 52) + col("__cx") * (1L << 26) + col("__cy"))
+      .drop("__cx", "__cy")
   }
 
   /** Exact kNN via a per-partition k-d tree (the north-star variant):
     * every partition builds a local tree once, answers all queries with
     * branch-and-bound, and the per-partition top-k lists merge globally —
     * one pass over the points, no candidate shuffle (only P×Q×k rows move).
-    * Right when the query set is broadcastable; the ring-expansion variant
-    * above is the path for huge query sets (it never scans points outside
+    * Right when the query set is broadcastable; the cell-bucketed variant
+    * above is the path for huge query sets (it never joins points outside
     * candidate cells).
     */
   def kdTree(points: DataFrame, id: Column, lon: Column, lat: Column,
@@ -177,20 +171,22 @@ object KnnJoin {
   }
 
   /** Brute-force reference implementation (cross join + window) — the
-    * oracle for the cell-ring variant and the right plan when the point
-    * set is tiny.
+    * oracle for the cell-bucketed variant and the right plan when the point
+    * set is tiny. Ties order by `tieBreak` (default: lon, lat), as in
+    * [[apply]].
     */
   def bruteForce(points: DataFrame, lon: Column, lat: Column,
                  queries: DataFrame, qid: Column, qlon: Column, qlat: Column,
-                 k: Int): DataFrame = {
+                 k: Int, tieBreak: Seq[Column] = Nil): DataFrame = {
     val q = queries.select(qid.cast("long").as("qid"),
       qlon.cast("double").as("qlon"), qlat.cast("double").as("qlat"))
     val dist = sqrt((lon - col("qlon")) * (lon - col("qlon")) +
       (lat - col("qlat")) * (lat - col("qlat")))
+    val tb = if (tieBreak.nonEmpty) tieBreak else Seq(lon, lat)
     points.crossJoin(broadcast(q))
       .withColumn("dist", dist)
       .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist"), lon, lat)))
+        Window.partitionBy(col("qid")).orderBy(col("dist") +: tb: _*)))
       .filter(col("__rn") <= k)
       .drop("__rn", "qlon", "qlat")
   }

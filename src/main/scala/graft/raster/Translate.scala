@@ -17,6 +17,8 @@ import graft.raster.Overview.IStrip
   */
 object Translate {
 
+  private val log = org.apache.logging.log4j.LogManager.getLogger("graft.raster.Translate")
+
   /** GDALCopyWords double→Byte: clamp(v+0.5, 0, 255), truncate. */
   def toByte(v: Double): Int = {
     val s = v + 0.5
@@ -81,7 +83,7 @@ object Translate {
     require(x0 + w > 0 && x0 < srcW,
       s"srcWin: x window [$x0, ${x0 + w}) falls completely outside raster width $srcW")
     if (x0 < 0 || x0 + w > srcW)
-      System.err.println(s"[srcWin] window [$x0,${x0 + w}) partially outside " +
+      log.warn(s"srcWin: window [$x0,${x0 + w}) partially outside " +
         s"raster width $srcW; out-of-extent pixels are zero-filled. Going on however.")
     strips.flatMap { s =>
       val top = math.max(s.yOff, y0)
@@ -137,8 +139,8 @@ object Translate {
       f"-projwin: computed source window $wx0%.1f $wy0%.1f $ww%.1f $wh%.1f " +
         s"falls completely outside raster extent (${srcW}x$srcH)")
     if (wx0 < 0 || wy0 < 0 || wx0 + ww > srcW || wy0 + wh > srcH)
-      System.err.println(
-        f"[translate] Warning: computed -srcwin $wx0%.1f $wy0%.1f $ww%.1f " +
+      log.warn(
+        f"projWin: computed -srcwin $wx0%.1f $wy0%.1f $ww%.1f " +
           f"$wh%.1f falls partially outside raster extent. Going on however.")
     val ow = math.ceil(ww - 0.001).toInt
     val oh = math.ceil(wh - 0.001).toInt

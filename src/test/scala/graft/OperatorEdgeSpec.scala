@@ -34,10 +34,10 @@ class OperatorEdgeSpec extends AnyFunSuite {
     val r1 = KnnJoin(three, col("lon"), col("lat"),
       qs, col("qid"), col("qlon"), col("qlat"), k = 5, res = 6)
     assert(r1.count() == 3) // all points, ordered; fewer than k
-    // high res where n exceeds the default maxRing budget still finishes
+    // high res: the proved box spans more cells than there are points,
+    // so the query takes the sweep over every point
     val r2 = KnnJoin(three, col("lon"), col("lat"),
-      qs, col("qid"), col("qlon"), col("qlat"), k = 2, res = 22,
-      maxRing = 64)
+      qs, col("qid"), col("qlon"), col("qlat"), k = 2, res = 22)
     assert(r2.select("id").as[Long].collect().toSet == Set(1L, 2L))
   }
 

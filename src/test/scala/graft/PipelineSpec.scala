@@ -248,6 +248,29 @@ class PipelineSpec extends AnyFunSuite {
     assert(badOut.contains(part), badOut)
   }
 
+  test("a resume deletes the temp files a killed attempt left behind") {
+    val pages = Pages.synth(spark, 1500L)
+    val dir = Files.createTempDirectory("graft-pipe-tmp").toString
+    val cfg = Pipeline.Config(outDir = dir, nBatches = 2, nParts = 8, failAfterParts = 3)
+    graft.jobs.PartKill.committed.set(0)
+    intercept[org.apache.spark.SparkException] { Pipeline.run(spark, pages, zones, cfg) }
+    assert(Pipeline.committedBatches(spark, cfg).isEmpty, "no batch record yet")
+    // what a JVM killed mid-write leaves: a parquet and a part-record temp file
+    val left = Seq(s"$dir/batch=0/.part-7-0badf00d.tmp", s"$dir/_lineage/batch-0/.part-7-0badf00d.tmp")
+    left.foreach(p => Files.write(Paths.get(p), "partial".getBytes("UTF-8")))
+    graft.jobs.PartKill.committed.set(0)
+    Pipeline.run(spark, pages, zones, cfg.copy(failAfterParts = -1))
+    left.foreach(p => assert(!Files.exists(Paths.get(p)), s"$p survived the resume"))
+    val (code, out) = try {
+      val p = new ProcessBuilder("python3", "tools/check_lineage.py", dir)
+        .redirectErrorStream(true).start()
+      val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
+      (p.waitFor(), out)
+    } catch { case _: java.io.IOException => cancel("python3 not available") }
+    if (out.contains("No module named")) cancel(s"check_lineage.py needs pyarrow: $out")
+    assert(code === 0, out)
+  }
+
   /** Every lineage record (batch and part) under `dir`, relative path → bytes. */
   private def lineageRecords(dir: String): Map[String, Seq[Byte]] = {
     val root = Paths.get(s"$dir/_lineage")

@@ -42,6 +42,26 @@ class TranslateSpec extends AnyFunSuite {
     assert(out === expect)
   }
 
+  test("a partly outside srcwin logs a log4j warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Level, String)]()
+    val appender = new AbstractAppender("translate-spec", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add((e.getLevel, e.getMessage.getFormattedMessage))
+    }
+    appender.start()
+    val logger = LogManager.getLogger("graft.raster.Translate").asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try Translate.srcWin(strips(2), 3, 0, 4, 2).count()
+    finally { logger.removeAppender(appender); appender.stop() }
+    val warned = seen.toArray(Array.empty[(Level, String)]).toSeq
+    assert(warned.exists { case (l, m) => l == Level.WARN && m.contains("partially outside raster width 5") },
+      warned.toString)
+  }
+
   test("resizeNearest matches the (dst+0.5)*src/dst sampling rule both ways") {
     def local(dw: Int, dh: Int): Seq[Int] =
       for (y <- 0 until dh; x <- 0 until dw) yield
