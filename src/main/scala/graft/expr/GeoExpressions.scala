@@ -304,10 +304,11 @@ case class CellsCovering(left: Expression, right: Expression)
   * `gdal/ogr/ogr_geocoding.cpp:1379` OGRGeocode; no network, pure grammar).
   * Never modifies its input (per-row invariant: `text` stays byte-identical).
   *
-  * Grammar (case-sensitive, whitespace-tolerant between tokens):
-  *   1. "<lat>N|S <lon>E|W"      e.g. "48.8584N 2.2945E"
-  *   2. "lat=<f> lon=<f>"        e.g. "lat=-12.5 lon=130.85"
-  *   3. "geo:<lat>,<lon>"        e.g. "geo:37.786971,-122.399677"
+  * Grammar (case-sensitive), with NUM = `[-+]?\d{1,3}(?:\.\d+)?`,
+  * `\d` = `[0-9]` and `\s` = `[ \t\n\x0B\f\r]`:
+  *   1. `NUM[NS]\s+NUM[EW]`      e.g. "48.8584N 2.2945E"
+  *   2. `lat=NUM\s+lon=NUM`      e.g. "lat=-12.5 lon=130.85"
+  *   3. `geo:NUM,NUM`            e.g. "geo:37.786971,-122.399677"
   */
 case class GeoExtract(child: Expression)
     extends UnaryExpression {
@@ -324,18 +325,26 @@ case class GeoExtract(child: Expression)
   override def prettyName: String = "geo_extract"
 }
 
+/** One hand-written matcher per grammar form, each scanning the text the
+  * way `java.util.regex.Matcher.find` scans for that form's pattern: it
+  * takes the leftmost match start; after any match, including one the
+  * boundary guards reject, it resumes at that match's end, otherwise at
+  * start + 1. Every piece matches greedily and never backtracks, which
+  * finds the same matches as the pattern: each greedy piece (`[-+]?`,
+  * `\d{1,3}`, `(?:\.\d+)?`, `\s+`) is followed by a piece that rejects
+  * everything a backtrack could hand it (a digit, a `.` or whitespace),
+  * and a form's last NUM has no follow piece, so its longest match is the
+  * match. GeoExtractSpec checks this against the patterns.
+  *
+  * Mentions are emitted form 1's matches first, then form 2's, then form
+  * 3's, each left to right (`mention_idx`, and through it the flagship's
+  * partition ids and lineage checksums, depend on this order). A match is
+  * kept when the guards pass and the coordinates are in range.
+  */
 object GeoExtract {
-  private val NUM = "[-+]?\\d{1,3}(?:\\.\\d+)?"
-  private val P1 = java.util.regex.Pattern.compile(s"($NUM)([NS])\\s+($NUM)([EW])")
-  private val P2 = java.util.regex.Pattern.compile(s"lat=($NUM)\\s+lon=($NUM)")
-  private val P3 = java.util.regex.Pattern.compile(s"geo:($NUM),($NUM)")
-
-  // Boundary guards as MANUAL char checks on each (rare) match instead of
-  // regex lookarounds: a match must not start inside a longer number/word
+  // Boundary guards: a match must not start inside a longer number/word
   // ("id 1085.5N" must not yield 85.5N; "splat=1" must not yield lat=1)
-  // and the hemisphere letter must end a token ("12.5Now" is prose).
-  // Lookbehinds in the patterns cost ~3x on the per-page scan — this
-  // expression is the flagship pipeline's hot path.
+  // and a hemisphere letter must end a token ("12.5N 3Eat" is prose).
   @inline private def okBefore(s: String, start: Int): Boolean = {
     if (start == 0) true
     else {
@@ -346,49 +355,95 @@ object GeoExtract {
   @inline private def okAfter(s: String, end: Int): Boolean =
     end >= s.length || !Character.isLetterOrDigit(s.charAt(end))
 
-  /** Reused per-thread matchers: this expression runs once per page in the
-    * flagship pipeline; matcher reuse keeps the 32-thread allocation rate
-    * off the GC (the reference's prepared-filter reuse idea,
-    * `gdal/ogr/ogrsf_frmts/generic/ogrlayer.cpp:1296`, applied to text).
-    */
-  private val tls = new ThreadLocal[(java.util.regex.Matcher, java.util.regex.Matcher,
-      java.util.regex.Matcher, scala.collection.mutable.ArrayBuffer[Any])] {
-    override def initialValue() = (P1.matcher(""), P2.matcher(""), P3.matcher(""),
-      new scala.collection.mutable.ArrayBuffer[Any](4))
+  @inline private def isDigit(s: String, i: Int): Boolean =
+    i < s.length && { val c = s.charAt(i); c >= '0' && c <= '9' }
+  @inline private def isSpace(s: String, i: Int): Boolean =
+    i < s.length && { val c = s.charAt(i); c == ' ' || (c >= '\t' && c <= '\r') }
+  @inline private def isNumChar(c: Char): Boolean =
+    (c >= '0' && c <= '9') || c == '.' || c == '-' || c == '+'
+  @inline private def isChar(s: String, i: Int, a: Char, b: Char): Boolean =
+    i < s.length && { val c = s.charAt(i); c == a || c == b }
+
+  /** End of the NUM that starts at `i`, or -1. */
+  private def num(s: String, i: Int): Int = {
+    var j = if (isChar(s, i, '-', '+')) i + 1 else i
+    val d = j
+    while (j - d < 3 && isDigit(s, j)) j += 1
+    if (j == d) -1
+    else if (s.length > j && s.charAt(j) == '.' && isDigit(s, j + 1)) {
+      j += 2
+      while (isDigit(s, j)) j += 1
+      j
+    } else j
   }
+
+  /** End of the `\s+` run that starts at `i`, or -1. */
+  private def spaces(s: String, i: Int): Int = {
+    var j = i
+    while (isSpace(s, j)) j += 1
+    if (j == i) -1 else j
+  }
+
+  private def parse(s: String, from: Int, to: Int): Double =
+    java.lang.Double.parseDouble(s.substring(from, to))
 
   /** Codegen entry: UTF8String in, Catalyst ArrayData of (lat,lon) out. */
   def extractArrayData(text: UTF8String): GenericArrayData = {
-    val (m1, m2, m3, buf) = tls.get()
-    buf.clear()
     val s = text.toString
-    m1.reset(s)
-    while (m1.find()) {
-      if (okBefore(s, m1.start) && okAfter(s, m1.end(2)) && okAfter(s, m1.end(4))) {
-        // hemisphere letters denote the sign of the MAGNITUDE: "-12.5S"
-        // must stay south, not double-negate to +12.5
-        val lat = math.abs(java.lang.Double.parseDouble(m1.group(1))) *
-          (if (m1.group(2) == "S") -1 else 1)
-        val lon = math.abs(java.lang.Double.parseDouble(m1.group(3))) *
-          (if (m1.group(4) == "W") -1 else 1)
-        if (valid(lat, lon)) buf += InternalRow(lat, lon)
+    val buf = new scala.collection.mutable.ArrayBuffer[Any](2)
+    def emit(lat: Double, lon: Double): Unit =
+      if (lat >= -90 && lat <= 90 && lon >= -180 && lon <= 180) buf += InternalRow(lat, lon)
+
+    // form 1: NUM[NS]\s+NUM[EW]. A NUM holds no letter, so the N/S of a
+    // match starting at i is the first letter after i, and i lies in the
+    // run of NUM chars right before it. Walk the N/S letters left to right
+    // (indexOf), and take the leftmost start in the letter's run whose NUM
+    // ends at the letter: the first letter that has one gives the leftmost
+    // match. The run never reaches into an earlier match, which ends with
+    // its E/W letter.
+    var atN = s.indexOf('N')
+    var atS = s.indexOf('S')
+    while (atN >= 0 || atS >= 0) {
+      val k = if (atS < 0 || (atN >= 0 && atN < atS)) atN else atS
+      val b = spaces(s, k + 1)
+      val c = if (b >= 0) num(s, b) else -1
+      var i = k
+      if (c >= 0 && isChar(s, c, 'E', 'W')) { // s(c) is E/W
+        while (i > 0 && isNumChar(s.charAt(i - 1))) i -= 1
+        while (i < k && num(s, i) != k) i += 1
       }
+      val next = if (i < k) {
+        if (okBefore(s, i) && okAfter(s, k + 1) && okAfter(s, c + 1)) {
+          // hemisphere letters denote the sign of the MAGNITUDE: "-12.5S"
+          // must stay south, not double-negate to +12.5
+          emit(math.abs(parse(s, i, k)) * (if (s.charAt(k) == 'S') -1 else 1),
+            math.abs(parse(s, b, c)) * (if (s.charAt(c) == 'W') -1 else 1))
+        }
+        c + 1
+      } else k + 1
+      if (atN >= 0 && atN < next) atN = s.indexOf('N', next)
+      if (atS >= 0 && atS < next) atS = s.indexOf('S', next)
     }
-    m2.reset(s)
-    while (m2.find()) {
-      if (okBefore(s, m2.start)) {
-        val lat = java.lang.Double.parseDouble(m2.group(1))
-        val lon = java.lang.Double.parseDouble(m2.group(2))
-        if (valid(lat, lon)) buf += InternalRow(lat, lon)
-      }
+    // form 2: lat=NUM\s+lon=NUM
+    var j = s.indexOf("lat=")
+    while (j >= 0) {
+      val a = num(s, j + 4)
+      val b = if (a >= 0) spaces(s, a) else -1
+      val c = if (b >= 0 && s.startsWith("lon=", b)) num(s, b + 4) else -1
+      if (c >= 0) {
+        if (okBefore(s, j)) emit(parse(s, j + 4, a), parse(s, b + 4, c))
+        j = s.indexOf("lat=", c)
+      } else j = s.indexOf("lat=", j + 1)
     }
-    m3.reset(s)
-    while (m3.find()) {
-      if (okBefore(s, m3.start)) {
-        val lat = java.lang.Double.parseDouble(m3.group(1))
-        val lon = java.lang.Double.parseDouble(m3.group(2))
-        if (valid(lat, lon)) buf += InternalRow(lat, lon)
-      }
+    // form 3: geo:NUM,NUM
+    j = s.indexOf("geo:")
+    while (j >= 0) {
+      val a = num(s, j + 4)
+      val c = if (a >= 0 && s.startsWith(",", a)) num(s, a + 1) else -1
+      if (c >= 0) {
+        if (okBefore(s, j)) emit(parse(s, j + 4, a), parse(s, a + 1, c))
+        j = s.indexOf("geo:", c)
+      } else j = s.indexOf("geo:", j + 1)
     }
     new GenericArrayData(buf.toArray)
   }
@@ -401,9 +456,6 @@ object GeoExtract {
       (r.getDouble(0), r.getDouble(1))
     }.toArray
   }
-
-  @inline private def valid(lat: Double, lon: Double): Boolean =
-    lat >= -90 && lat <= 90 && lon >= -180 && lon <= 180
 }
 
 /** Boolean overlay runtime over WKB, multipolygon-aware. op: 0 =

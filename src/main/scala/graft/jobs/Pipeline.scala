@@ -2,7 +2,12 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import graft.gf
 import graft.operators.SpatialJoin
@@ -73,15 +78,16 @@ object Pipeline {
       .select(Seq(col("url"), col("warc_ts"), col("lang"), col("text"),
         posexplode(gf.geo_extract(col("text"))).as(Seq("mention_idx", "c"))) ++ tag: _*)
       .select(Seq(col("url"), col("warc_ts"), col("lang"), col("text"),
-        col("mention_idx"), col("c.lon").as("lon"), col("c.lat").as("lat")) ++ tag: _*)
+        col("mention_idx"), col("c.lon").as("lon"), col("c.lat").as("lat"),
+        gf.cell_of(col("c.lon"), col("c.lat"), cfg.cellRes).as("cell")) ++ tag: _*)
+    // the join buckets on the mention's own cell, which the output keeps
     val joined = SpatialJoin.pointInPolygon(coords, col("lon"), col("lat"),
-      zones, col("geom"), cfg.cellRes)
-    val out = joined
-      .withColumn("cell", gf.cell_of(col("lon"), col("lat"), cfg.cellRes))
+      zones, col("geom"), cfg.cellRes, pointCell = Some("cell"))
       .withColumn("tile_x", floor(((col("lon") + 180.0) / cfg.tileDeg) / cfg.tilePx).cast("long"))
       .withColumn("tile_y", floor(((lit(90.0) - col("lat")) / cfg.tileDeg) / cfg.tilePx).cast("long"))
       .drop("geom", "wkt")
-    if (tag.isEmpty) out else out.select(out.columns.filter(_ != Batch).map(col) ++ tag: _*)
+    val last = Seq("cell", "tile_x", "tile_y")
+    joined.select((joined.columns.toSeq.filterNot((last :+ Batch).contains) ++ last).map(col) ++ tag: _*)
   }
 
   private def lineageDir(cfg: Config) = s"${cfg.outDir}/_lineage"
@@ -280,8 +286,7 @@ object Pipeline {
     val pending = (0 until cfg.nBatches).filterNot(committedBatches(spark, cfg))
     if (pending.isEmpty) Nil
     else {
-      // one schema inference (a Spark job of its own) for every batch's scan
-      val read = spark.read.schema(spark.read.parquet(files.head).schema)
+      val read = spark.read.schema(footerSchema(spark, files.head))
       val scans = pending.map { b =>
         val own = files.indices.collect { case i if i % cfg.nBatches == b => files(i) }
         val scan = if (own.isEmpty) read.parquet(files.head).limit(0) else read.parquet(own: _*)
@@ -289,6 +294,27 @@ object Pipeline {
       }
       runBatches(spark, scans.reduce(_ union _), zones, cfg, pending)
     }
+  }
+
+  /** The schema `spark.read.parquet(file)` infers, read from the file's
+    * footer on the driver instead of by a Spark job: Spark's row metadata
+    * when the footer has it, the parquet-to-Spark converter of the
+    * session's settings otherwise, every field nullable as the reader
+    * makes it.
+    */
+  private[graft] def footerSchema(spark: SparkSession, file: String): StructType = {
+    val path = new Path(file)
+    val in = ParquetFileReader.open(HadoopInputFile.fromPath(path, spark.sparkContext.hadoopConfiguration))
+    val footer = try in.getFooter finally in.close()
+    nullable(ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
+      new ParquetToSparkSchemaConverter(SQLConf.get))).asInstanceOf[StructType]
+  }
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   /** Read back the full (resumed) output. A batch whose every page had

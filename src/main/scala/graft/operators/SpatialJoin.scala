@@ -39,11 +39,15 @@ object SpatialJoin {
     * @param geom the WKB column of `polys`
     * @param res cell resolution (higher = tighter polyfill, more cells)
     * @param broadcastPolys force-broadcast the exploded polygon side
+    * @param pointCell a column of `points` that holds `cell_of(lon, lat, res)`:
+    *                  the join buckets on it, and it stays in the output
     */
   def pointInPolygon(points: DataFrame, lon: Column, lat: Column,
                      polys: DataFrame, geom: Column, res: Int,
-                     broadcastPolys: Boolean = true): DataFrame =
-    pointJoin(points, lon, lat, polys, geom, res, broadcastPolys, gf.st_contains_point)
+                     broadcastPolys: Boolean = true,
+                     pointCell: Option[String] = None): DataFrame =
+    pointJoin(points, lon, lat, polys, geom, res, broadcastPolys, gf.st_contains_point,
+      pointCell = pointCell)
 
   /** Boundary-inclusive variant (st_intersects semantics,
     * `gdal/ogr/ogrcurvepolygon.cpp:705-716`).
@@ -60,14 +64,15 @@ object SpatialJoin {
     */
   private def pointJoin(points: DataFrame, lon: Column, lat: Column, polys: DataFrame,
                         geom: Column, res: Int, broadcastPolys: Boolean,
-                        pred: (Column, Column, Column) => Column, nSalt: Int = 1): DataFrame = {
+                        pred: (Column, Column, Column) => Column, nSalt: Int = 1,
+                        pointCell: Option[String] = None): DataFrame = {
     val cells = polys.withColumn("__cell", explode(gf.cells_covering(geom, res)))
     val polyCells0 =
       if (nSalt == 1) cells else cells.withColumn("__salt", explode(lit((0 until nSalt).toArray)))
     val polyCells = if (broadcastPolys) broadcast(polyCells0) else polyCells0
-    val pts0 = points.withColumn("__pcell", gf.cell_of(lon, lat, res))
+    val pts0 = if (pointCell.isDefined) points else points.withColumn("__pcell", gf.cell_of(lon, lat, res))
     val pts = if (nSalt == 1) pts0 else pts0.withColumn("__psalt", pmod(hash(lon, lat), lit(nSalt)))
-    val onCell = pts("__pcell") === polyCells("__cell")
+    val onCell = pts(pointCell.getOrElse("__pcell")) === polyCells("__cell")
     pts.join(polyCells,
         if (nSalt == 1) onCell else onCell && pts("__psalt") === polyCells("__salt"))
       .filter(pred(geom, lon, lat))

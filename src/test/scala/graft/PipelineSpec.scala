@@ -285,6 +285,17 @@ class PipelineSpec extends AnyFunSuite {
     recs.result()
   }
 
+  /** The parquet files under `dir`, sorted, as `Pipeline.runOnPath` lists them. */
+  private def parquetFiles(dir: String): Seq[String] = {
+    val it = Files.walk(Paths.get(dir)).iterator()
+    val b = Seq.newBuilder[String]
+    while (it.hasNext) {
+      val p = it.next().toString
+      if (p.endsWith(".parquet") && !p.contains("/_")) b += p
+    }
+    b.result().sorted
+  }
+
   /** Spark jobs started while `f` runs. Listener events arrive in order, so
     * once a marker job's start is seen, every job of `f` has been counted.
     */
@@ -319,6 +330,29 @@ class PipelineSpec extends AnyFunSuite {
     assert(one > 0)
     assert(jobs(4) === one, "jobs of a 4-batch run vs a 1-batch run")
     pages.unpersist()
+  }
+
+  test("runOnPath reads its input schema from a parquet footer: one Spark job fewer") {
+    val inDir = Files.createTempDirectory("graft-pipe-schema").toString
+    PageTable.write(Pages.synth(spark, 2000L), inDir)
+    val files = parquetFiles(inDir)
+    var inferred, footer: org.apache.spark.sql.types.StructType = null
+    assert(jobsOf { inferred = spark.read.parquet(files.head).schema } === 1, "Spark's schema inference")
+    assert(jobsOf { footer = Pipeline.footerSchema(spark, files.head) } === 0, "footer read")
+    assert(footer === inferred)
+    assert(footer.fields.forall(_.nullable))
+
+    // the same run over a reader that is handed the schema takes as many jobs
+    val cfg = Pipeline.Config(outDir = Files.createTempDirectory("graft-pipe-schema-a").toString,
+      nBatches = 1, nParts = 4)
+    val onPath = jobsOf(Pipeline.runOnPath(spark, inDir, zones, cfg))
+    val schemaGiven = jobsOf(Pipeline.run(spark, spark.read.schema(inferred).parquet(files: _*), zones,
+      cfg.copy(outDir = Files.createTempDirectory("graft-pipe-schema-b").toString)))
+    assert(onPath === schemaGiven, "jobs of runOnPath vs a run over a schema-given reader")
+
+    // part files carry no Spark row metadata: the converter path
+    val part = parquetFiles(cfg.outDir).head
+    assert(Pipeline.footerSchema(spark, part) === spark.read.parquet(part).schema)
   }
 
   test("a kill past batch 0's parts resumes with batch 0's record; no part file rewritten") {
@@ -361,15 +395,7 @@ class PipelineSpec extends AnyFunSuite {
     val cfg = Pipeline.Config(outDir = dir, nBatches = 3, nParts = 8)
     Pipeline.runOnPath(spark, inDir, zones, cfg)
     // the pipeline's batching: every nBatches-th file of the sorted list
-    val files = {
-      val it = Files.walk(Paths.get(inDir)).iterator()
-      val b = Seq.newBuilder[String]
-      while (it.hasNext) {
-        val p = it.next().toString
-        if (p.endsWith(".parquet") && !p.contains("/_")) b += p
-      }
-      b.result().sorted
-    }
+    val files = parquetFiles(inDir)
     assert(files.size > cfg.nBatches)
     val inPages = (0 until cfg.nBatches).map { b =>
       val own = files.indices.filter(_ % cfg.nBatches == b).map(files)
