@@ -5,96 +5,83 @@ import graft.core.Ckpt.CkptOps
 import graft.operators.UnionFind
 
 /** Distributed strip-boundary component merge for the 2-phase connected-
-  * components layout (polygonize, sieve).
+  * components layout (polygonize, sieve): labelled strips in, resolved
+  * strips out.
   *
-  * The naive layout collects every strip's top and bottom pixel rows to
-  * the driver (O(strips × width) driver memory — gigabytes on a 10⁶-px-wide
-  * raster). Here the boundary matching itself runs in a shuffle: strip k
+  * Each consumer labels its strips once ([[Polygonize.label]]) and hands
+  * them to [[merge]]. The boundary matching runs in a shuffle: strip k
   * contributes its bottom row to boundary k and its top row to boundary
   * k−1; each boundary group (two rows) emits only the DEDUPED global-id
-  * equivalence pairs found along it.
+  * equivalence pairs found along it. The driver sees one id count per
+  * strip and, in driver mode, those pairs — never pixel rows.
   *
-  * The union-find over those pairs follows the [[UnionFind]] mode policy:
-  *  - pairs under the driver pair limit: collected and resolved by
-  *    `UnionFind.driverRoots` (one small job, zero extra shuffles — the
-  *    common case);
-  *  - over it (salt-and-pepper noise is ~width/2 pairs PER SEAM, so a
-  *    10⁶-px-wide raster in 10³ strips is ~5·10⁸ pairs — driver OOM
-  *    territory): `UnionFind.roots` resolves roots distributed, and the
-  *    per-strip root maps travel to consumers as extra [[Side]] rows in the
-  *    same cogroup stream as the halos. The driver then never sees
-  *    per-pixel-derived data at all (`lastDriverPairs == 0`).
+  * The union-find over the pairs follows the [[UnionFind]] mode policy:
+  *  - driver mode (pairs under the driver pair limit): the pairs are
+  *    collected and resolved by `UnionFind.driverRoots`, and the roots map
+  *    is broadcast;
+  *  - distributed mode (over it: salt-and-pepper noise is ~width/2 pairs
+  *    PER SEAM, so a 10⁶-px-wide raster in 10³ strips is ~5·10⁸ pairs —
+  *    driver OOM territory): `UnionFind.roots` resolves roots as a Spark
+  *    job, and each strip's (gid → root) entries travel to it as [[Side]]
+  *    root rows. The driver never sees per-pixel-derived data
+  *    (`lastDriverPairs == 0`).
   *
-  * The "previous strip's bottom row" halo that downstream passes need is
-  * likewise a Dataset keyed by the consuming strip's index (cogroup it
-  * with the strips), not a driver-built broadcast map of full rows.
+  * Either way the result is one Dataset of [[ResolvedStrip]]s, each with
+  * the global root of every local id and the previous strip's bottom row
+  * as its halo, so consumers map over strips and never look at the mode.
   */
 object BoundaryMerge extends Serializable {
 
-  /** Per-strip boundary summary from the local CC pass: local component
-    * count plus the top/bottom pixel rows with their final local ids.
+  private val log = org.apache.logging.log4j.LogManager.getLogger("graft.raster.BoundaryMerge")
+
+  /** Rows [yOff, yOff+height) of a raster, labelled by one
+    * [[Polygonize.label]] pass.
+    */
+  final case class LabelledStrip(stripIdx: Int, yOff: Int, height: Int,
+                                 labels: Polygonize.Labels)
+
+  /** A labelled strip with its components resolved across strip seams.
+    * `roots(id)` is the global root id of local id `id` (the component's
+    * smallest global id). The halo is the bottom row of strip
+    * `stripIdx − 1`: its pixel values and global root ids (-1 for
+    * nodata); both are null for strip 0.
+    */
+  final case class ResolvedStrip(stripIdx: Int, yOff: Int, height: Int,
+                                 labels: Polygonize.Labels, roots: Array[Long],
+                                 haloVals: Array[Int], haloRoots: Array[Long]) {
+    /** Global root id of pixel `p` (row-major within the strip), -1 for nodata. */
+    def root(p: Int): Long = if (labels.ids(p) == -1) -1L else roots(labels.ids(p))
+  }
+
+  /** Per-strip boundary summary: local id count plus the top/bottom pixel
+    * rows with their final local ids.
     */
   final case class BoundarySummary(
       stripIdx: Int, nIds: Int,
       topVals: Array[Int], topIds: Array[Int],
       botVals: Array[Int], botIds: Array[Int])
 
-  /** Per-strip side-channel row, keyed by the CONSUMING strip. Exactly one
-    * of the two payloads is set:
-    *  - halo rows (`haloVals != null`): the bottom pixel row of strip
-    *    `stripIdx − 1` with global ROOT ids — what the strip below needs;
-    *  - root rows (`rootGids != null`, distributed mode only): the
-    *    (gid → root) entries for stripIdx's OWN global ids, replacing the
-    *    driver/broadcast roots map.
+  /** Side-channel row of [[merge]], keyed by the strip that consumes it.
+    * Exactly one of the two payloads is set:
+    *  - halo row (`haloVals != null`): the bottom pixel row of strip
+    *    `stripIdx − 1` with global root ids;
+    *  - root row (`rootGids != null`, distributed mode only): the
+    *    (gid → root) entries for stripIdx's own non-root global ids.
     */
   final case class Side(stripIdx: Int,
-                        haloVals: Array[Int], haloGids: Array[Long],
+                        haloVals: Array[Int], haloRoots: Array[Long],
                         rootGids: Array[Long], rootRoots: Array[Long])
 
-  /** @param base   prefix-sum of per-strip local component counts
-    *               (base(k) = first global id of strip k); length nStrips+1
-    * @param roots  union-find results (non-root gids only); EMPTY in
-    *               distributed mode — consumers must resolve via [[Side]]
-    *               root rows then (`root(gid)` below does both)
-    * @param side   halo rows (+ root rows in distributed mode), keyed by
-    *               consuming strip (lazy, distributed)
-    * @param nPairs number of equivalence pairs found along all boundaries
-    * @param distributed true when the union-find ran as a Spark job and
-    *               `roots` is intentionally empty
+  /** @param base   prefix-sum of per-strip local id counts (base(k) = first
+    *               global id of strip k); length nStrips+1
+    * @param strips every strip, resolved (lazy, distributed)
+    * @param caches what `strips` reads from merge's own caches (the
+    *               distributed mode's root rows)
     */
-  final case class Merged(base: Array[Long], roots: Map[Long, Long],
-                          side: Dataset[Side], nPairs: Long,
-                          distributed: Boolean)
-
-  /** Resolve a gid against per-strip root arrays (distributed mode) or a
-    * broadcast map (driver mode) — exactly one source is populated.
-    */
-  @inline def lookup(localRoots: scala.collection.Map[Long, Long],
-                     bcast: Map[Long, Long], gid: Long): Long =
-    if (localRoots != null) localRoots.getOrElse(gid, gid)
-    else bcast.getOrElse(gid, gid)
-
-  /** Root lookup over parallel (gid, root) arrays — identity when null. */
-  def rootFn(rg: Array[Long], rr: Array[Long]): Long => Long =
-    if (rg == null) identity
-    else {
-      val m = new scala.collection.mutable.HashMap[Long, Long]
-      var i = 0
-      while (i < rg.length) { m.put(rg(i), rr(i)); i += 1 }
-      gid => m.getOrElse(gid, gid)
-    }
-
-  /** Build the per-strip root map from Side root rows (null if none). */
-  def sideRootMap(sides: Iterable[Side]): scala.collection.Map[Long, Long] = {
-    var m: scala.collection.mutable.HashMap[Long, Long] = null
-    sides.foreach { sd =>
-      if (sd.rootGids != null) {
-        if (m == null) m = new scala.collection.mutable.HashMap[Long, Long]
-        var i = 0
-        while (i < sd.rootGids.length) { m.put(sd.rootGids(i), sd.rootRoots(i)); i += 1 }
-      }
-    }
-    m
+  final case class Merged(base: Array[Long], strips: Dataset[ResolvedStrip],
+                          caches: Seq[Dataset[_]]) {
+    /** Drop merge's caches once the consumer's output is materialized. */
+    def unpersist(): Unit = caches.foreach(_.unpersist(false))
   }
 
   /** Equivalence pairs collected by the most recent merge (test hook for
@@ -108,12 +95,21 @@ object BoundaryMerge extends Serializable {
     if (pos >= 0) pos else -(pos + 1) - 1
   }
 
-  /** Strip indices must be contiguous from 0 (they are strip positions).
-    * `summaries` is consumed by several actions — callers should persist it.
+  /** Resolve labelled strips across their seams. Strip indices must be
+    * contiguous from 0 (they are strip positions). `strips` is read by
+    * several jobs — callers should persist it.
     */
-  def merge(spark: SparkSession, summaries: Dataset[BoundarySummary],
+  def merge(spark: SparkSession, strips: Dataset[LabelledStrip],
             w: Int, conn: Int): Merged = {
     import spark.implicits._
+    val wV = w
+    val summaries = strips.map { s =>
+      val bot = (s.height - 1) * wV
+      def vals(p0: Int) = Array.tabulate(wV)(x => s.labels.value(p0 + x))
+      BoundarySummary(s.stripIdx, s.labels.nIds,
+        vals(0), java.util.Arrays.copyOfRange(s.labels.ids, 0, wV),
+        vals(bot), java.util.Arrays.copyOfRange(s.labels.ids, bot, bot + wV))
+    }
     val counts = summaries.map(s => (s.stripIdx, s.nIds)).collect().sortBy(_._1)
     val n = counts.length
     require(counts.iterator.map(_._1).zipWithIndex.forall { case (s, i) => s == i },
@@ -124,7 +120,6 @@ object BoundaryMerge extends Serializable {
     val sc = spark.sparkContext
     val baseB = sc.broadcast(base)
     val connV = conn
-    val wV = w
 
     // adjacent-boundary shuffle: each boundary b sees (bottom of strip b,
     // top of strip b+1) and emits deduped equivalence pairs
@@ -167,22 +162,20 @@ object BoundaryMerge extends Serializable {
           out.result().iterator
         }
       }
-    UnionFind.driverPairs(pairsDs) match {
+
+    // the side rows (halos, plus root rows in distributed mode) and the
+    // broadcast roots map (empty in distributed mode)
+    val (side, rootsB, caches) = UnionFind.driverPairs(pairsDs) match {
       case Some(pairs) =>
-        // ---- driver mode: pairs collected, union-find in memory ----
         lastDriverPairs = pairs.length.toLong
-        val roots = UnionFind.driverRoots(pairs)
-        val rootsB = sc.broadcast(roots)
-        val side = summaries.map { s =>
-          val rm = rootsB.value
-          haloSide(s, baseB.value, gid => rm.getOrElse(gid, gid))
-        }
-        Merged(base, roots, side, pairs.length.toLong, distributed = false)
+        log.info(s"merge: $n strips, driver mode, ${pairs.length} boundary pairs")
+        val rootsB = sc.broadcast(UnionFind.driverRoots(pairs))
+        (summaries.map(s => haloSide(s, baseB.value, rootResolver(Nil, rootsB.value))), rootsB, Nil)
       case None =>
-        // ---- distributed mode: union-find as a Spark job; the driver
-        // never materializes pairs. Roots reach consumers as per-strip
-        // Side rows.
+        // the driver never materializes pairs; each strip's roots reach it
+        // as a root row
         lastDriverPairs = 0L
+        log.info(s"merge: $n strips, distributed mode")
         val rootsDF = UnionFind.roots(pairsDs.toDF("a", "b"))
         val rootRows: Dataset[Side] = rootsDF.as[(Long, Long)]
           .groupByKey { case (gid, _) => ownerStrip(baseB.value, gid) }
@@ -192,17 +185,41 @@ object BoundaryMerge extends Serializable {
             Side(k, null, null, gs.result(), rs.result())
           }.ckpt() // consumed twice: halo resolution below + the side union
         rootsDF.unpersist(false) // rolled into rootRows; drop the UnionFind cache
-
-        val haloRows: Dataset[Side] = summaries.groupByKey(_.stripIdx)
+        val haloRows = summaries.groupByKey(_.stripIdx)
           .cogroup(rootRows.groupByKey(_.stripIdx)) { (_, sIt, rIt) =>
-            val rm = sideRootMap(rIt.toSeq)
-            sIt.map(s => haloSide(s, baseB.value,
-              if (rm == null) identity else gid => rm.getOrElse(gid, gid)))
+            val root = rootResolver(rIt.toSeq, Map.empty)
+            sIt.map(s => haloSide(s, baseB.value, root))
           }
-        // exact pair count is not re-derived in distributed mode (it would
-        // cost another scan); -1 = "over the driver limit"
-        Merged(base, Map.empty, haloRows.union(rootRows), -1L, distributed = true)
+        (haloRows.union(rootRows), sc.broadcast(Map.empty[Long, Long]), Seq(rootRows))
     }
+
+    val resolved = strips.groupByKey(_.stripIdx)
+      .cogroup(side.groupByKey(_.stripIdx)) { (_, sIt, sideIt) =>
+        val sides = sideIt.toSeq
+        val root = rootResolver(sides, rootsB.value)
+        val halo = sides.find(_.haloVals != null)
+        sIt.map { s =>
+          val sBase = baseB.value(s.stripIdx)
+          ResolvedStrip(s.stripIdx, s.yOff, s.height, s.labels,
+            Array.tabulate(s.labels.nIds)(id => root(sBase + id)),
+            halo.map(_.haloVals).orNull, halo.map(_.haloRoots).orNull)
+        }
+      }
+    Merged(base, resolved, caches)
+  }
+
+  /** gid → root from a strip's root rows (distributed mode) and the
+    * broadcast map (driver mode); one of the two is always empty.
+    */
+  private def rootResolver(sides: Iterable[Side], bcast: Map[Long, Long]): Long => Long = {
+    val own = new scala.collection.mutable.HashMap[Long, Long]
+    sides.foreach { sd =>
+      if (sd.rootGids != null) {
+        var i = 0
+        while (i < sd.rootGids.length) { own.put(sd.rootGids(i), sd.rootRoots(i)); i += 1 }
+      }
+    }
+    gid => own.getOrElse(gid, bcast.getOrElse(gid, gid))
   }
 
   /** Strip `s`'s bottom row as the halo of strip `s + 1`, ids resolved to

@@ -17,8 +17,8 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Pixel edges are walked and rings built here only: [[addEdges]] reports
   * each unit edge to a sink and [[RPoly]] assembles rings. The distributed
-  * strip variant, [[RasterStrips.polygonize]], runs [[Enumerator]] per
-  * strip, resolves components across strip seams through
+  * strip variant, [[RasterStrips.polygonize]], labels each strip once with
+  * [[label]], resolves components across strip seams through
   * [[BoundaryMerge]], feeds [[addEdges]] global ids, and replays each
   * polygon's edges into an [[RPoly]] in this kernel's emission order, so
   * every polygon it returns is byte-identical to this kernel's.
@@ -128,6 +128,41 @@ object Polygonize {
         i += 1
       }
     }
+  }
+
+  /** Connected components of a w × h block: `ids(y * w + x)` is the final
+    * local id of pixel (x, y) (-1 for nodata), `nIds` the enumerator's id
+    * count and `values(id)` the pixel value of id.
+    */
+  final case class Labels(ids: Array[Int], nIds: Int, values: Array[Int]) {
+    /** Value of pixel `p`, [[NoDataMarker]] for nodata. */
+    def value(p: Int): Int = if (ids(p) == -1) NoDataMarker else values(ids(p))
+  }
+
+  /** Label a w × h block in one [[Enumerator]] pass. The sequential kernel
+    * runs a second enumerator because it holds only two rows; here every
+    * raw id is kept in one `w × h` array (`processLine` writes row y at
+    * offset y·w) and mapped to its final id in place after
+    * `completeMerges`, which is exactly what the second pass resolves to.
+    */
+  def label(vals: Array[Int], w: Int, h: Int, connectedness: Int): Labels = {
+    val en = new Enumerator(connectedness)
+    val ids = new Array[Int](w * h)
+    var lastRow: Array[Int] = null
+    var y = 0
+    while (y < h) {
+      val row = java.util.Arrays.copyOfRange(vals, y * w, (y + 1) * w)
+      en.processLine(lastRow, row, ids, ids, math.max(0, y - 1) * w, y * w, w)
+      lastRow = row
+      y += 1
+    }
+    en.completeMerges()
+    var p = 0
+    while (p < ids.length) {
+      if (ids(p) != -1) ids(p) = en.polyIdMap(ids(p))
+      p += 1
+    }
+    Labels(ids, en.nNextPolygonId, java.util.Arrays.copyOf(en.polyValue, en.nNextPolygonId))
   }
 
   /** Port of RPolygon (`polygonize.cpp:40-250`): ring assembly from unit

@@ -23,14 +23,15 @@ import graft.core.{Geom, GeoTransform}
   *    is the memory knob (default targets ~8 MiB byte strips);
   *  - checksum is an order-insensitive partial-sum aggregate (see
   *    [[Checksum]]), so verification needs no global sort;
-  *  - polygonize runs the sequential enumerator per strip, matches
-  *    components across strip boundaries in an adjacent-boundary shuffle
-  *    ([[BoundaryMerge]]: the driver collects only deduped equivalence
-  *    pairs, O(#boundary components), never pixel rows), then groups unit
-  *    pixel edges by global polygon id and replays them into the
-  *    sequential kernel's ring builder — the classic 2-phase distributed
-  *    connected-components layout, with output byte-identical to
-  *    [[Polygonize.polygonize]].
+  *  - polygonize labels each strip in one enumerator pass
+  *    ([[Polygonize.label]]), hands the labelled strips to
+  *    [[BoundaryMerge.merge]] (an adjacent-boundary shuffle; the driver
+  *    collects only deduped equivalence pairs, O(#boundary components),
+  *    never pixel rows), which returns each strip with the global root of
+  *    every local id and its halo row; it then groups unit pixel edges by
+  *    global polygon id and replays them into the sequential kernel's ring
+  *    builder — the classic 2-phase distributed connected-components
+  *    layout, with output byte-identical to [[Polygonize.polygonize]].
   */
 object RasterStrips extends Serializable {
 
@@ -122,106 +123,52 @@ object RasterStrips extends Serializable {
     */
   final case class Edge(gid: Long, value: Int, y: Int, x: Int, vertical: Boolean)
 
-  /** Run pass-1 locally over a strip; return (enumerator, per-row final ids
-    * for top and bottom rows).
-    */
-  private def localPass1(s: ValueStrip, w: Int, conn: Int): (Polygonize.Enumerator, Array[Int], Array[Int]) = {
-    val en = new Polygonize.Enumerator(conn)
-    var lastId = new Array[Int](w)
-    var thisId = new Array[Int](w)
-    var lastRow: Array[Int] = null
-    var topIds: Array[Int] = null
-    var r = 0
-    while (r < s.height) {
-      val row = java.util.Arrays.copyOfRange(s.vals, r * w, (r + 1) * w)
-      en.processLine(lastRow, row, lastId, thisId, 0, 0, w)
-      if (r == 0) topIds = thisId.clone()
-      val t = lastId; lastId = thisId; thisId = t
-      lastRow = row
-      r += 1
-    }
-    en.completeMerges()
-    val botIds = lastId.clone()
-    (en, topIds.map(i => if (i == -1) -1 else en.polyIdMap(i)),
-      botIds.map(i => if (i == -1) -1 else en.polyIdMap(i)))
-  }
-
   /** Distributed polygonize over value strips → DataFrame(value: Int,
     * wkb: Array[Byte]). For any strip height, the (value, WKB) multiset
-    * equals [[Polygonize.polygonize]]'s byte for byte: Phase C ships unit
-    * pixel edges keyed by global polygon id, and Phase D replays each
-    * polygon's edges into an [[Polygonize.RPoly]] in the sequential
-    * kernel's emission order. Only the order of the rows differs.
+    * equals [[Polygonize.polygonize]]'s byte for byte. Phase A labels each
+    * strip once; Phase B ([[BoundaryMerge.merge]]) resolves the labels to
+    * global polygon ids; Phase C ships unit pixel edges keyed by global
+    * polygon id; Phase D replays each polygon's edges into an
+    * [[Polygonize.RPoly]] in the sequential kernel's emission order. Only
+    * the order of the rows differs.
     */
   def polygonize(spark: SparkSession, strips0: Dataset[ValueStrip], w: Int, h: Int,
                  connectedness: Int, gt: GeoTransform): DataFrame = {
     import spark.implicits._
     val conn = connectedness
-    // the strip set is consumed by Phase A (summaries) and Phase C (edge
-    // extraction): persist so upstream lineage evaluates once
-    val strips = strips0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // Phase A: per-strip pass 1 → boundary summaries (distributed — the
-    // driver sees only (stripIdx, nIds) counts and deduped equivalence
-    // pairs, never pixel rows)
-    val summariesDs = strips.map { s =>
-      val (en, topIds, botIds) = localPass1(s, w, conn)
-      val topVals = java.util.Arrays.copyOfRange(s.vals, 0, w)
-      val botVals = java.util.Arrays.copyOfRange(s.vals, (s.height - 1) * w, s.height * w)
-      BoundaryMerge.BoundarySummary(s.stripIdx, en.nNextPolygonId,
-        topVals, topIds, botVals, botIds)
+    // Phase A: the one enumerator pass per strip; the labelled strips are
+    // read by the boundary merge and its resolve step, so persist them
+    val labelled = strips0.map { s =>
+      BoundaryMerge.LabelledStrip(s.stripIdx, s.yOff, s.height,
+        Polygonize.label(s.vals, w, s.height, conn))
     }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // Phase B: adjacent-boundary shuffle → pairs → union-find (driver
-    // below the pair limit, distributed Spark job above it)
-    val merged = BoundaryMerge.merge(spark, summariesDs, w, conn)
-    val rootsB = spark.sparkContext.broadcast(merged.roots)
-    val baseB = spark.sparkContext.broadcast(merged.base)
+    // Phase B: adjacent-boundary shuffle → pairs → union-find → every
+    // strip with the global root of each local id and its halo row
+    val merged = BoundaryMerge.merge(spark, labelled, w, conn)
 
-    // Phase C: per-strip edge extraction with global ids; the previous
-    // strip's bottom-row halo (and, in distributed mode, the strip's own
-    // root map) arrives via cogroup, not a driver broadcast
+    // Phase C: per-strip edge extraction with global ids
     val lastStripIdx = merged.base.length - 2
-    val edges = strips.groupByKey(_.stripIdx)
-      .cogroup(merged.side.groupByKey(_.stripIdx)) { (_, sIt, sideIt) =>
-      var haloVals: Array[Int] = null; var haloGids: Array[Long] = null
-      val sides = sideIt.toSeq
-      sides.foreach { sd =>
-        if (sd.haloVals != null) { haloVals = sd.haloVals; haloGids = sd.haloGids }
-      }
-      val localRoots = BoundaryMerge.sideRootMap(sides)
-      sIt.flatMap { s =>
-      val myBase = baseB.value(s.stripIdx)
-      val rootMap = rootsB.value
-      val (en1, _, _) = localPass1(s, w, conn)
-      // second pass over the strip: raw ids → local final (first-pass
-      // map) → global root, then the shared AddEdges walk
-      val second = new Polygonize.Enumerator(conn)
+    val edges = merged.strips.flatMap { s =>
       val buf = Vector.newBuilder[Edge]
       val sink: Polygonize.EdgeSink =
         (gid, value, x, y, vertical) => buf += Edge(gid, value, y, x, vertical)
-      var lastRaw = new Array[Int](w); var thisRaw = new Array[Int](w)
       var lastG = Array.fill(w + 2)(-1L); var thisG = Array.fill(w + 2)(-1L)
       // the halo row (previous strip's bottom row, global root ids) sits
       // above row 0: the edges between the two strips are emitted here
-      var lastRow = haloVals
-      if (haloGids != null) System.arraycopy(haloGids, 0, lastG, 1, w)
-      var prevLocalRow: Array[Int] = null
+      var lastRow = s.haloVals
+      if (s.haloRoots != null) System.arraycopy(s.haloRoots, 0, lastG, 1, w)
       var r = 0
       while (r < s.height) {
-        val row = java.util.Arrays.copyOfRange(s.vals, r * w, (r + 1) * w)
-        second.processLine(prevLocalRow, row, lastRaw, thisRaw, 0, 0, w)
+        val row = new Array[Int](w)
         var x = 0
         while (x < w) {
-          val raw = thisRaw(x)
-          thisG(x + 1) = if (raw == -1) -1L
-            else BoundaryMerge.lookup(localRoots, rootMap, myBase + en1.polyIdMap(raw))
+          row(x) = s.labels.value(r * w + x)
+          thisG(x + 1) = s.root(r * w + x)
           x += 1
         }
         Polygonize.addEdges(thisG, lastG, row, lastRow, w, s.yOff + r, sink)
-        val tR = lastRaw; lastRaw = thisRaw; thisRaw = tR
         val tG = lastG; lastG = thisG; thisG = tG
-        prevLocalRow = row
         lastRow = row
         r += 1
       }
@@ -232,7 +179,6 @@ object RasterStrips extends Serializable {
         Polygonize.addEdges(thisG, lastG, null, lastRow, w, s.yOff + s.height, sink)
       }
       buf.result()
-      }
     }
 
     // Phase D: replay each polygon's edges in the sequential kernel's
@@ -249,9 +195,9 @@ object RasterStrips extends Serializable {
         (rp.value, Geom.toWkb(rp.toPolygon(gt)))
       }
       .toDF("value", "wkb")
-      .ckpt() // materialize, then release the strip cache
-    summariesDs.unpersist(false)
-    strips.unpersist(false)
+      .ckpt() // materialize, then release the caches
+    merged.unpersist()
+    labelled.unpersist(false)
     out
   }
 }

@@ -19,6 +19,8 @@ import graft.raster.Overview.IStrip
   */
 object Sieve extends Serializable {
 
+  private val logger = org.apache.logging.log4j.LogManager.getLogger("graft.raster.Sieve")
+
   /** Single-node exact port. `vals` row-major (no mask: every value incl.
     * any "nodata" value participates, matching SieveFilter(…, None, …)).
     */
@@ -154,33 +156,15 @@ object Sieve extends Serializable {
 
   final case class NeighborPair(y: Int, x: Int, sub: Int, g1: Long, g2: Long)
 
-  private def localCC(vals: Array[Int], w: Int, rows: Int, conn: Int):
-      (Polygonize.Enumerator, Array[Int], Array[Int]) = {
-    val en = new Polygonize.Enumerator(conn)
-    var lastId = new Array[Int](w)
-    var thisId = new Array[Int](w)
-    var lastRow: Array[Int] = null
-    var topIds: Array[Int] = null
-    var r = 0
-    while (r < rows) {
-      val row = java.util.Arrays.copyOfRange(vals, r * w, (r + 1) * w)
-      en.processLine(lastRow, row, lastId, thisId, 0, 0, w)
-      if (r == 0) topIds = thisId.clone()
-      val t = lastId; lastId = thisId; thisId = t
-      lastRow = row
-      r += 1
-    }
-    en.completeMerges()
-    (en, topIds.map(i => if (i == -1) -1 else en.polyIdMap(i)),
-      lastId.clone().map(i => if (i == -1) -1 else en.polyIdMap(i)))
-  }
-
   /** Distributed sieve over strips — the genuinely-parallel layout:
     *
-    *  A. per-strip CC (enumerator) → boundary summaries, kept DISTRIBUTED;
-    *  B. adjacent-boundary shuffle emits deduped equivalence pairs; the
-    *     driver union-find consumes O(#boundary components) pairs plus one
-    *     count per strip, never pixel rows ([[BoundaryMerge]]);
+    *  A. label each strip once ([[Polygonize.label]]); the labelled strips
+    *     are the operator's only strip cache besides B's output;
+    *  B. [[BoundaryMerge.merge]]: an adjacent-boundary shuffle emits
+    *     deduped equivalence pairs, the union-find resolves them (the driver
+    *     sees O(#boundary components) pairs plus one count per strip, never
+    *     pixel rows), and every strip comes back with the global root of
+    *     each local id and the previous strip's bottom row as its halo;
     *  C. global component sizes/values as a DataFrame AGGREGATION of
     *     per-strip partials (map-side combined, never driver-collected);
     *  D. biggest-neighbour selection as an argmax AGGREGATION: the
@@ -193,82 +177,34 @@ object Sieve extends Serializable {
     *     when small, else shipped per-strip via a shuffle join on stripIdx
     *     (salt-and-pepper noise makes #small ≈ pixels/2 — too big to
     *     materialize on the driver).
+    *
+    * C, D and F are plain maps over B's resolved strips: none re-runs the
+    * enumerator or depends on the union-find mode.
     */
   def sieve(spark: SparkSession, stripsIn: Dataset[IStrip], w: Int, h: Int,
             threshold: Int, conn: Int,
             bcastRewriteLimit: Long = 4000000L): Dataset[IStrip] = {
     import spark.implicits._
 
-    // the strip set is scanned by three separate stages (summaries,
-    // component stats, final rewrite) — cache it so upstream lineage
-    // (a rasterize/warp feeding the sieve) is not recomputed per stage
-    val strips = stripsIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // A: per-strip CC boundary summaries (distributed)
-    val summariesDs = strips.map { s =>
-      val (en, topIds, botIds) = localCC(s.vals, w, s.height, conn)
-      BoundaryMerge.BoundarySummary(s.stripIdx, en.nNextPolygonId,
-        java.util.Arrays.copyOfRange(s.vals, 0, w), topIds,
-        java.util.Arrays.copyOfRange(s.vals, (s.height - 1) * w, s.height * w), botIds)
+    // A: the one enumerator pass per strip, read by B's several jobs
+    val labelled = stripsIn.map { s =>
+      BoundaryMerge.LabelledStrip(s.stripIdx, s.yOff, s.height,
+        Polygonize.label(s.vals, w, s.height, conn))
     }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // B: boundary pairs shuffle → union-find (driver when the pair count
-    // is small, a distributed Spark job otherwise)
-    val merged = BoundaryMerge.merge(spark, summariesDs, w, conn)
-    val rootsB = spark.sparkContext.broadcast(merged.roots)
-    val baseB = spark.sparkContext.broadcast(merged.base)
-
-    // distributed mode: per-strip root arrays ride with the strip via one
-    // cogroup, so the flatMap-shaped stages below never need a broadcast
-    // of the (potentially huge) roots table
-    val enriched: Dataset[(IStrip, Array[Long], Array[Long])] =
-      if (!merged.distributed) null
-      else {
-        val sideRoots = merged.side.filter(sd => sd.rootGids != null)
-        strips.groupByKey(_.stripIdx)
-          .cogroup(sideRoots.groupByKey(_.stripIdx)) { (_, sIt, rIt) =>
-            var rg: Array[Long] = null; var rr: Array[Long] = null
-            rIt.foreach { sd => rg = sd.rootGids; rr = sd.rootRoots }
-            sIt.map(s => (s, rg, rr))
-          }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
+    // B: resolved strips, read by C, D and F
+    val merged = BoundaryMerge.merge(spark, labelled, w, conn)
+    val strips = merged.strips.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // C: global component sizes/values — distributed aggregation of
     // per-strip partials (one CompPart row per local component)
-    def compParts(s: IStrip, root: Long => Long): Iterator[CompPart] = {
-      val myBase = baseB.value(s.stripIdx)
-      val (en, _, _) = localCC(s.vals, w, s.height, conn)
-      val sizes = new Array[Int](en.nNextPolygonId)
-      var lastId = new Array[Int](w); var thisId = new Array[Int](w)
-      var lastRow: Array[Int] = null
-      val en2 = new Polygonize.Enumerator(conn)
-      var r = 0
-      while (r < s.height) {
-        val row = java.util.Arrays.copyOfRange(s.vals, r * w, (r + 1) * w)
-        en2.processLine(lastRow, row, lastId, thisId, 0, 0, w)
-        var x = 0
-        while (x < w) {
-          val raw = thisId(x)
-          if (raw >= 0) sizes(en.polyIdMap(raw)) += 1
-          x += 1
-        }
-        val t = lastId; lastId = thisId; thisId = t
-        lastRow = row
-        r += 1
-      }
-      (0 until en.nNextPolygonId).iterator.filter(sizes(_) > 0).map { f =>
-        val gid = myBase + f
-        CompPart(root(gid), sizes(f), en.polyValue(f))
-      }
+    val compStats = strips.flatMap { s =>
+      val l = s.labels
+      val sizes = new Array[Int](l.nIds)
+      l.ids.foreach(id => if (id != -1) sizes(id) += 1)
+      (0 until l.nIds).iterator.filter(sizes(_) > 0)
+        .map(f => CompPart(s.roots(f), sizes(f), l.values(f)))
     }
-    val compStats =
-      if (!merged.distributed) strips.flatMap { s =>
-        val rMap = rootsB.value
-        compParts(s, gid => rMap.getOrElse(gid, gid))
-      }
-      else enriched.flatMap { case (s, rg, rr) =>
-        compParts(s, BoundaryMerge.rootFn(rg, rr))
-      }
     import org.apache.spark.sql.functions.{col, count => _, _}
     val sizesDF = compStats.toDF("gid", "size", "value")
       .groupBy(col("gid"))
@@ -276,39 +212,15 @@ object Sieve extends Serializable {
       .ckpt()
 
     // D: scan-ordered effective neighbour pair occurrences (distributed);
-    // the previous strip's bottom-row halo arrives via cogroup
-    val pairs = strips.groupByKey(_.stripIdx)
-      .cogroup(merged.side.groupByKey(_.stripIdx)) { (_, sIt, sideIt) =>
-      val sides = sideIt.toSeq
-      val localRoots = BoundaryMerge.sideRootMap(sides)
-      sIt.flatMap { s =>
-      val myBase = baseB.value(s.stripIdx)
-      val rMap = rootsB.value
-      @inline def global(localFinal: Int): Long =
-        BoundaryMerge.lookup(localRoots, rMap, myBase + localFinal)
-      val (en1, _, _) = localCC(s.vals, w, s.height, conn)
-      val en2 = new Polygonize.Enumerator(conn)
+    // row 0 of a strip pairs with its halo row
+    val pairs = strips.flatMap { s =>
       val out = Seq.newBuilder[NeighborPair]
-      var lastG: Array[Long] = null
-      var lastRowVals: Array[Int] = null
-      sides.foreach { sd =>
-        if (sd.haloVals != null) { lastG = sd.haloGids; lastRowVals = sd.haloVals }
-      }
-      var lastId = new Array[Int](w); var thisId = new Array[Int](w)
-      var prevLocalRow: Array[Int] = null
+      var lastG = s.haloRoots
       var r = 0
       while (r < s.height) {
-        val row = java.util.Arrays.copyOfRange(s.vals, r * w, (r + 1) * w)
-        en2.processLine(prevLocalRow, row, lastId, thisId, 0, 0, w)
-        val thisG = new Array[Long](w)
-        var x = 0
-        while (x < w) {
-          val raw = thisId(x)
-          thisG(x) = if (raw == -1) -1L else global(en1.polyIdMap(raw))
-          x += 1
-        }
+        val thisG = Array.tabulate(w)(x => s.root(r * w + x))
         val gy = s.yOff + r
-        x = 0
+        var x = 0
         while (x < w) {
           @inline def emit(sub: Int, a: Long, b: Long): Unit =
             if (a >= 0 && b >= 0 && a != b) out += NeighborPair(gy, x, sub, a, b)
@@ -320,13 +232,10 @@ object Sieve extends Serializable {
           if (x > 0) emit(3, thisG(x), thisG(x - 1))
           x += 1
         }
-        val t = lastId; lastId = thisId; thisId = t
-        prevLocalRow = row
         lastG = thisG
         r += 1
       }
       out.result().iterator
-      }
     }
 
     // biggest-neighbour argmax: first-encountered maximum in scan order
@@ -391,81 +300,48 @@ object Sieve extends Serializable {
     // it never materializes on the driver (salt-and-pepper noise makes
     // #small components ≈ pixels/2).
     val nRewrites = rewriteDF.count()
-    // strips with their root source attached: per-strip arrays in
-    // distributed mode, the broadcast map otherwise (null arrays)
-    def withRoots: Dataset[(IStrip, Array[Long], Array[Long])] =
-      if (merged.distributed) enriched
-      else strips.map(s => (s, null: Array[Long], null: Array[Long]))
-    def rootOf(rg: Array[Long], rr: Array[Long]): Long => Long =
-      if (rg != null) BoundaryMerge.rootFn(rg, rr)
-      else { val m = rootsB.value; gid => m.getOrElse(gid, gid) }
+    val stop = if (active == 0) "resolved" else if (active >= prevActive)
+      "on the non-shrinking (cycle) rule" else s"at the $ptrIter-round cap"
+    val broadcastRewrite = nRewrites <= bcastRewriteLimit
+    logger.info(s"sieve: pointer doubling took $ptrIter rounds and stopped $stop; " +
+      s"${if (broadcastRewrite) "broadcast" else "shuffle-join"} rewrite of $nRewrites components")
     val out =
-      if (nRewrites <= bcastRewriteLimit) {
+      if (broadcastRewrite) {
         val rw = rewriteDF.as[(Long, Int)].collect().toMap
         val rewriteB = spark.sparkContext.broadcast(rw)
-        withRoots.map { case (s, rg, rr) =>
-          rewriteStrip(s, w, conn, baseB.value, rootOf(rg, rr), rewriteB.value) }
+        strips.map(s => rewriteStrip(s, w, rewriteB.value))
       } else {
         // per-strip (root gid) inventory → join with the rewrite table →
         // group the strip's own rewrite entries back to it
-        val stripRoots = withRoots.flatMap { case (s, rg, rr) =>
-          val myBase = baseB.value(s.stripIdx)
-          val root = rootOf(rg, rr)
-          val (en, _, _) = localCC(s.vals, w, s.height, conn)
-          val seen = new java.util.HashSet[Long]()
-          (0 until en.nNextPolygonId).iterator.flatMap { fId =>
-            val r = root(myBase + fId)
-            if (seen.add(r)) Iterator((r, s.stripIdx)) else Iterator.empty
-          }
-        }.toDF("gid", "stripIdx")
+        val stripRoots = strips.flatMap(s => s.roots.distinct.iterator.map(r => (r, s.stripIdx)))
+          .toDF("gid", "stripIdx")
         val byStrip = stripRoots.join(rewriteDF, "gid")
           .select(col("stripIdx"), col("gid"), col("res"))
           .as[(Int, Long, Int)]
-        withRoots.groupByKey(_._1.stripIdx)
+        strips.groupByKey(_.stripIdx)
           .cogroup(byStrip.groupByKey(_._1)) { (_, sIt, rIt) =>
             val rw: Map[Long, Int] = rIt.map(t => t._2 -> t._3).toMap
-            sIt.map { case (s, rg, rr) =>
-              rewriteStrip(s, w, conn, baseB.value, rootOf(rg, rr), rw) }
+            sIt.map(s => rewriteStrip(s, w, rw))
           }
       }
     // materialize before dropping the caches: `out`'s final rewrite pass
     // is lazy, and unpersisting first would recompute the whole input
     // lineage one more time
     val res = out.ckpt()
-    summariesDs.unpersist(false)
     strips.unpersist(false)
-    if (enriched != null) enriched.unpersist(false)
+    merged.unpersist()
+    labelled.unpersist(false)
     res
   }
 
-  /** Apply a (root gid → replacement value) map to one strip. */
-  private def rewriteStrip(s: IStrip, w: Int, conn: Int, base: Array[Long],
-                           rMap: Long => Long,
+  /** Apply a (root gid → replacement value) map to one resolved strip. */
+  private def rewriteStrip(s: BoundaryMerge.ResolvedStrip, w: Int,
                            rw: scala.collection.Map[Long, Int]): IStrip = {
-    val myBase = base(s.stripIdx)
-    val (en1, _, _) = localCC(s.vals, w, s.height, conn)
-    val en2 = new Polygonize.Enumerator(conn)
-    val out = s.vals.clone()
-    var lastId = new Array[Int](w); var thisId = new Array[Int](w)
-    var prevLocalRow: Array[Int] = null
-    var r = 0
-    while (r < s.height) {
-      val row = java.util.Arrays.copyOfRange(s.vals, r * w, (r + 1) * w)
-      en2.processLine(prevLocalRow, row, lastId, thisId, 0, 0, w)
-      var x = 0
-      while (x < w) {
-        val raw = thisId(x)
-        if (raw >= 0) {
-          val gid = myBase + en1.polyIdMap(raw)
-          val root = rMap(gid)
-          rw.get(root).foreach(v => out(r * w + x) = v)
-        }
-        x += 1
-      }
-      val t = lastId; lastId = thisId; thisId = t
-      prevLocalRow = row
-      r += 1
+    val l = s.labels
+    val idVal = Array.tabulate(l.nIds)(id => rw.getOrElse(s.roots(id), l.values(id)))
+    val out = Array.tabulate(w * s.height) { p =>
+      if (l.ids(p) == -1) Polygonize.NoDataMarker else idVal(l.ids(p))
     }
-    s.copy(vals = out)
+    IStrip(s.stripIdx, s.yOff, s.height, w, out)
   }
 }

@@ -81,16 +81,25 @@ class BoundaryMergeSpec extends AnyFunSuite {
     def canon(df: org.apache.spark.sql.DataFrame): Seq[(Int, String)] =
       df.collect().map(r => (r.getInt(0),
         r.getAs[Array[Byte]](1).map("%02x".format(_)).mkString)).toSeq.sorted
-    val viaDriver = canon(RasterStrips.polygonize(spark, strips(), Wd, Hd, 4, gt))
-    assert(BoundaryMerge.lastDriverPairs === 3L * Wd) // one pair per column per seam
-    spark.conf.set(UnionFind.DriverPairLimitKey, "0")
-    try {
-      val viaDist = canon(RasterStrips.polygonize(spark, strips(), Wd, Hd, 4, gt))
-      assert(BoundaryMerge.lastDriverPairs === 0L,
-        "distributed path must not collect pairs to the driver")
-      assert(viaDist.length === Wd) // every column its own component
-      assert(viaDist === viaDriver)
-    } finally spark.conf.unset(UnionFind.DriverPairLimitKey)
+    // 1-px stripes of alternating values touch no equal diagonal
+    // neighbour, so 8-connectedness gives the same components
+    for (conn <- Seq(4, 8)) {
+      val (viaDriver, driverLog) =
+        logged(canon(RasterStrips.polygonize(spark, strips(), Wd, Hd, conn, gt)))
+      assert(BoundaryMerge.lastDriverPairs === 3L * Wd) // one pair per column per seam
+      assert(driverLog.contains(s"merge: 4 strips, driver mode, ${3 * Wd} boundary pairs"),
+        driverLog)
+      spark.conf.set(UnionFind.DriverPairLimitKey, "0")
+      try {
+        val (viaDist, distLog) =
+          logged(canon(RasterStrips.polygonize(spark, strips(), Wd, Hd, conn, gt)))
+        assert(BoundaryMerge.lastDriverPairs === 0L,
+          "distributed path must not collect pairs to the driver")
+        assert(distLog.contains("merge: 4 strips, distributed mode"), distLog)
+        assert(viaDist.length === Wd) // every column its own component
+        assert(viaDist === viaDriver, s"conn=$conn")
+      } finally spark.conf.unset(UnionFind.DriverPairLimitKey)
+    }
   }
 
   test("distributed union-find path: sieve matches serial, both rewrite paths") {
@@ -100,19 +109,50 @@ class BoundaryMergeSpec extends AnyFunSuite {
       val x = i % Wd
       if (x % 10 < 2) 7 else x % 10
     }
-    val expect = Sieve.sieveLocal(vals, Wd, Hd, 10, 4)
     spark.conf.set(UnionFind.DriverPairLimitKey, "0")
     try {
-      for (bcastLimit <- Seq(0L, 4000000L)) {
+      for (conn <- Seq(4, 8); bcastLimit <- Seq(0L, 4000000L)) {
+        val expect = Sieve.sieveLocal(vals, Wd, Hd, 10, conn)
         val strips = (0 until 3).map { i =>
           IStrip(i, i * 3, 3, Wd, java.util.Arrays.copyOfRange(vals, i * 3 * Wd, (i + 1) * 3 * Wd))
         }.toDS()
-        val got = Sieve.sieve(spark, strips, Wd, Hd, 10, 4, bcastRewriteLimit = bcastLimit)
-          .collect().sortBy(_.yOff).flatMap(_.vals)
+        val (got, events) = logged(
+          Sieve.sieve(spark, strips, Wd, Hd, 10, conn, bcastRewriteLimit = bcastLimit)
+            .collect().sortBy(_.yOff).flatMap(_.vals))
         assert(BoundaryMerge.lastDriverPairs === 0L)
-        assert(got.toSeq === expect.toSeq, s"bcastRewriteLimit=$bcastLimit")
+        assert(events.contains("merge: 3 strips, distributed mode"), events)
+        val rewrite = if (bcastLimit == 0L) "shuffle-join" else "broadcast"
+        assert(events.exists(m => m.startsWith("sieve: pointer doubling took ") &&
+          m.contains(s"; $rewrite rewrite of ")), events)
+        assert(got.toSeq === expect.toSeq, s"conn=$conn bcastRewriteLimit=$bcastLimit")
       }
     } finally spark.conf.unset(UnionFind.DriverPairLimitKey)
+  }
+
+  /** Run `body` with the BoundaryMerge and Sieve loggers at INFO and return
+    * its result with the messages they logged meanwhile.
+    */
+  private def logged[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("boundary-merge-spec", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val loggers = Seq("graft.raster.BoundaryMerge", "graft.raster.Sieve")
+      .map(n => LogManager.getLogger(n).asInstanceOf[Logger])
+    // appenders first: adding one to a logger without its own config
+    // rebuilds every logger's config, which resets a level set before
+    loggers.foreach(_.addAppender(appender))
+    loggers.foreach(_.setLevel(Level.INFO))
+    try (body, seen.toArray(Array.empty[String]).toSeq)
+    finally {
+      loggers.foreach { l => l.removeAppender(appender); l.setLevel(null) }
+      appender.stop()
+    }
   }
 
   /** Serial reference for the union-find contract over ids in [0, n):

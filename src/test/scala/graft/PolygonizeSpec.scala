@@ -46,4 +46,52 @@ class PolygonizeSpec extends AnyFunSuite {
       Vector(107, 123, 132, 115, 132, 115, 140, 148, 123, 140, 132, 156,
              100, 101, 102, 103))
   }
+
+  /** The sequential kernel's two-enumerator labelling: pass-1 raw ids
+    * mapped through `completeMerges`, then pass-2 raw ids mapped through
+    * the pass-1 map.
+    */
+  private def twoPass(vals: Array[Int], w: Int, h: Int, conn: Int): (Array[Int], Int, Seq[Int]) = {
+    val first = new Polygonize.Enumerator(conn)
+    def run(en: Polygonize.Enumerator): Array[Int] = {
+      val out = new Array[Int](w * h)
+      var lastId = new Array[Int](w); var thisId = new Array[Int](w)
+      var lastRow: Array[Int] = null
+      for (y <- 0 until h) {
+        val row = java.util.Arrays.copyOfRange(vals, y * w, (y + 1) * w)
+        en.processLine(lastRow, row, lastId, thisId, 0, 0, w)
+        System.arraycopy(thisId, 0, out, y * w, w)
+        val t = lastId; lastId = thisId; thisId = t
+        lastRow = row
+      }
+      out
+    }
+    run(first)
+    first.completeMerges()
+    val raw2 = run(new Polygonize.Enumerator(conn))
+    (raw2.map(id => if (id == -1) -1 else first.polyIdMap(id)), first.nNextPolygonId,
+      first.polyValue.take(first.nNextPolygonId).toSeq)
+  }
+
+  test("label equals the two-enumerator labelling on seeded random strips") {
+    val rnd = new scala.util.Random(17)
+    for (k <- 0 until 400; conn <- Seq(4, 8)) {
+      val w = 1 + rnd.nextInt(12); val h = 1 + rnd.nextInt(12)
+      val nValues = 1 + rnd.nextInt(4)
+      val vals = Array.fill(w * h)(
+        if (rnd.nextDouble() < 0.05) Polygonize.NoDataMarker else rnd.nextInt(nValues))
+      val (ids, nIds, values) = twoPass(vals, w, h, conn)
+      val got = Polygonize.label(vals, w, h, conn)
+      val what = s"strip $k ${w}x$h conn=$conn"
+      assert(got.ids.toSeq === ids.toSeq, what)
+      assert(got.nIds === nIds, what)
+      assert(got.values.toSeq === values, what)
+      assert((0 until w * h).forall(p => got.value(p) == vals(p)), what)
+    }
+    for (conn <- Seq(4, 8)) {
+      val empty = Polygonize.label(Array.fill(6)(Polygonize.NoDataMarker), 3, 2, conn)
+      assert(empty.nIds === 0)
+      assert(empty.ids.toSeq === Seq.fill(6)(-1))
+    }
+  }
 }
