@@ -53,6 +53,8 @@ object PartKill {
 
 object Pipeline {
 
+  private val log = org.apache.logging.log4j.LogManager.getLogger("graft.jobs.Pipeline")
+
   final case class BatchResult(batch: Int, inPages: Long, outRows: Long, checksum: Long)
 
   final case class Config(
@@ -93,7 +95,7 @@ object Pipeline {
   private def lineageDir(cfg: Config) = s"${cfg.outDir}/_lineage"
 
   def committedBatches(spark: SparkSession, cfg: Config): Set[Int] = {
-    val fs = new Path(cfg.outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = CommitFs(cfg.outDir, spark.sparkContext.hadoopConfiguration)
     val dir = new Path(lineageDir(cfg))
     if (!fs.exists(dir)) Set.empty
     else fs.listStatus(dir).map(_.getPath.getName)
@@ -103,7 +105,7 @@ object Pipeline {
   }
 
   private def commitLineage(spark: SparkSession, cfg: Config, r: BatchResult): Unit = {
-    val fs = new Path(cfg.outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = CommitFs(cfg.outDir, spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new Path(lineageDir(cfg)))
     val tmp = new Path(s"${lineageDir(cfg)}/.batch-${r.batch}.json.tmp")
     val fin = new Path(s"${lineageDir(cfg)}/batch-${r.batch}.json")
@@ -123,7 +125,7 @@ object Pipeline {
     * either key (written by an older build) throws instead of folding in as 0.
     */
   private def partRecords(spark: SparkSession, cfg: Config, b: Int): Map[Int, (Long, Long)] = {
-    val fs = new Path(cfg.outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = CommitFs(cfg.outDir, spark.sparkContext.hadoopConfiguration)
     val dir = new Path(s"${lineageDir(cfg)}/batch-$b")
     if (!fs.exists(dir)) Map.empty
     else fs.listStatus(dir).map(_.getPath)
@@ -157,12 +159,15 @@ object Pipeline {
     * (no second count job); after the job each batch's output stats sum
     * and XOR its part records, including those of an earlier, killed
     * attempt, and the batch records commit in batch order, once the temp
-    * files a killed attempt left in a resumed batch are deleted.
+    * files a killed attempt left in a resumed batch are deleted. Logs one
+    * `info` event on logger `graft.jobs.Pipeline`: pending batches, parts
+    * written this run and kept from a killed attempt, and how local commits
+    * set permissions (see [[CommitFs]]).
     */
   private def runBatches(spark: SparkSession, tagged: DataFrame, zones: DataFrame,
                          cfg: Config, pending: Seq[Int]): Seq[BatchResult] = {
     val nParts = cfg.nParts
-    val fs = new Path(cfg.outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = CommitFs(cfg.outDir, spark.sparkContext.hadoopConfiguration)
     // only a batch a killed attempt got to holds parts or temp files
     val resumed = pending.filter(b => fs.exists(new Path(s"${lineageDir(cfg)}/batch-$b")))
     val done = resumed.flatMap(b => committedParts(spark, cfg, b).map(b * nParts + _))
@@ -189,12 +194,12 @@ object Pipeline {
           val hconf = bconf.value.conf
           val batchDir = s"$outDir/batch=$b"
           val partLineDir = s"$partLineRoot/batch-$b"
-          val fs = new Path(batchDir).getFileSystem(hconf)
+          val fs = CommitFs(batchDir, hconf)
           fs.mkdirs(new Path(batchDir)); fs.mkdirs(new Path(partLineDir))
           val attempt = java.util.UUID.randomUUID().toString.take(8)
           val tmp = new Path(s"$batchDir/.part-$pid-$attempt.tmp")
           // MessageType is not Serializable: built in the task
-          val w = new TaskParquet.RowFileWriter(hconf, tmp, schema, TaskParquet.messageType(schema))
+          val w = new TaskParquet.RowFileWriter(fs, hconf, tmp, schema, TaskParquet.messageType(schema))
           // on ANY failure mid-partition, close and delete the tmp writer —
           // a leaked parquet-mr writer holds buffers and file handles across
           // task retries
@@ -239,8 +244,12 @@ object Pipeline {
     val counts = obs.get
     for (b <- resumed; dir <- Seq(s"$outDir/batch=$b", s"$partLineRoot/batch-$b");
          st <- fs.globStatus(new Path(s"$dir/.part-*.tmp"))) fs.delete(st.getPath, false)
-    pending.zipWithIndex.map { case (b, i) =>
-      val parts = partRecords(spark, cfg, b).values
+    val records = pending.map(partRecords(spark, cfg, _))
+    val how = if (CommitFs.inProcess(fs)) "in-process" else "through Hadoop's default"
+    log.info(s"runBatches: ${pending.size} pending batches, ${records.map(_.size).sum - done.size} parts " +
+      s"written this run, ${done.size} kept from a killed attempt; local commits set permissions $how")
+    pending.zip(records).zipWithIndex.map { case ((b, recs), i) =>
+      val parts = recs.values
       val r = BatchResult(b, counts(s"n$b").asInstanceOf[Long],
         parts.map(_._1).sum, parts.map(_._2).foldLeft(0L)(_ ^ _))
       commitLineage(spark, cfg, r)
@@ -272,7 +281,7 @@ object Pipeline {
     */
   def runOnPath(spark: SparkSession, inputPath: String, zones: DataFrame,
                 cfg: Config): Seq[BatchResult] = {
-    val fs = new Path(inputPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = CommitFs(inputPath, spark.sparkContext.hadoopConfiguration)
     // recursive: PageTable.write produces a ts_day=...-partitioned layout.
     // A listStatus walk, not listFiles: its LocatedFileStatus copies each
     // file's permission, which the local file system reads by forking a
@@ -322,7 +331,7 @@ object Pipeline {
     * its directory — skip those instead of failing the read.
     */
   def output(spark: SparkSession, cfg: Config): DataFrame = {
-    val fs = new Path(cfg.outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = CommitFs(cfg.outDir, spark.sparkContext.hadoopConfiguration)
     val dirs = (0 until cfg.nBatches).map(b => s"${cfg.outDir}/batch=$b")
       .filter(d => fs.exists(new Path(d)))
     require(dirs.nonEmpty, s"no committed batch output under ${cfg.outDir}")

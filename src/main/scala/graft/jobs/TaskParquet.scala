@@ -1,10 +1,12 @@
 package graft.jobs
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.{HadoopOutputFile, HadoopStreams}
+import org.apache.parquet.io.{OutputFile, PositionOutputStream}
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -60,12 +62,27 @@ object TaskParquet {
     b.named("spark_schema")
   }
 
-  /** A streaming per-file writer; `add` rows, then `close()`. */
-  final class RowFileWriter(conf: Configuration, path: Path,
+  /** `path` on `fs`, opened as parquet-mr's `HadoopOutputFile` opens it.
+    * `ExampleParquetWriter.builder(path)` would open it on the file system
+    * `path.getFileSystem` resolves, not on `fs`.
+    */
+  private final class FsOutputFile(fs: FileSystem, path: Path) extends OutputFile {
+    def create(blockSizeHint: Long): PositionOutputStream = open(overwrite = false, blockSizeHint)
+    def createOrOverwrite(blockSizeHint: Long): PositionOutputStream = open(overwrite = true, blockSizeHint)
+    private def open(overwrite: Boolean, blockSizeHint: Long) =
+      HadoopStreams.wrap(fs.create(path, overwrite, 4096, fs.getDefaultReplication(path),
+        math.max(fs.getDefaultBlockSize(path), blockSizeHint)))
+    def supportsBlockSize: Boolean = HadoopOutputFile.getBlockFileSystems.contains(fs.getUri.getScheme)
+    def defaultBlockSize: Long = fs.getDefaultBlockSize(path)
+    override def getPath: String = path.toString
+  }
+
+  /** A streaming per-file writer of `path` on `fs`; `add` rows, then `close()`. */
+  final class RowFileWriter(fs: FileSystem, conf: Configuration, path: Path,
                             schema: StructType, mt: MessageType) {
     private val factory = new SimpleGroupFactory(mt)
     private val w: ParquetWriter[org.apache.parquet.example.data.Group] =
-      ExampleParquetWriter.builder(path).withConf(conf).withType(mt)
+      ExampleParquetWriter.builder(new FsOutputFile(fs, path)).withConf(conf).withType(mt)
         // parquet-mr defaults to UNCOMPRESSED; match Spark's sink default
         // (at target scale the write path is bandwidth/IO-bound, and
         // 2-4x smaller files also shrink the restart re-read)

@@ -132,28 +132,8 @@ class BoundaryMergeSpec extends AnyFunSuite {
   /** Run `body` with the BoundaryMerge and Sieve loggers at INFO and return
     * its result with the messages they logged meanwhile.
     */
-  private def logged[T](body: => T): (T, Seq[String]) = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("boundary-merge-spec", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    val loggers = Seq("graft.raster.BoundaryMerge", "graft.raster.Sieve")
-      .map(n => LogManager.getLogger(n).asInstanceOf[Logger])
-    // appenders first: adding one to a logger without its own config
-    // rebuilds every logger's config, which resets a level set before
-    loggers.foreach(_.addAppender(appender))
-    loggers.foreach(_.setLevel(Level.INFO))
-    try (body, seen.toArray(Array.empty[String]).toSeq)
-    finally {
-      loggers.foreach { l => l.removeAppender(appender); l.setLevel(null) }
-      appender.stop()
-    }
-  }
+  private def logged[T](body: => T): (T, Seq[String]) =
+    LogCapture.logged("graft.raster.BoundaryMerge", "graft.raster.Sieve")(body)
 
   /** Serial reference for the union-find contract over ids in [0, n):
     * gid → component minimum, for every gid that is not its own minimum.

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -246,6 +247,15 @@ class PipelineSpec extends AnyFunSuite {
     val (bad, badOut) = check()
     assert(bad !== 0, badOut)
     assert(badOut.contains(part), badOut)
+    // a sidecar with no data file is a mismatch too
+    Files.write(rec, s"""{"batch":0,"part":${r("part")},"rows":${r("rows")},"checksum":${r("checksum")}}"""
+      .getBytes("UTF-8"))
+    Files.delete(Paths.get(s"$dir/_lineage/batch-0/.$part.crc")) // stale after the rewrite
+    assert(check()._1 === 0)
+    Files.copy(Paths.get(s"$dir/_lineage/.batch-0.json.crc"), Paths.get(s"$dir/_lineage/.batch-9.json.crc"))
+    val (orphan, orphanOut) = check()
+    assert(orphan !== 0, orphanOut)
+    assert(orphanOut.contains(".batch-9.json.crc"), orphanOut)
   }
 
   test("a resume deletes the temp files a killed attempt left behind") {
@@ -405,5 +415,54 @@ class PipelineSpec extends AnyFunSuite {
       expect
     }
     assert(inPages.sum === 3000L)
+  }
+
+  test("runOnPath under umask 027: a checked .crc per file, umask modes, one log event per run") {
+    val inDir = Files.createTempDirectory("graft-pipe-umask-in").toString
+    PageTable.write(Pages.synth(spark, 1500L), inDir)
+    val dir = Files.createTempDirectory("graft-pipe-umask").toString
+    val cfg = Pipeline.Config(outDir = dir, nBatches = 2, nParts = 4, failAfterParts = 2)
+    def parts() = (0 until cfg.nBatches).map(Pipeline.committedParts(spark, cfg, _).size).sum
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val umask = Option(hconf.get("fs.permissions.umask-mode"))
+    hconf.set("fs.permissions.umask-mode", "027")
+    val (killedEvents, kept, resumedEvents) = try {
+      graft.jobs.PartKill.committed.set(0)
+      val (_, killed) = LogCapture.logged("graft.jobs.Pipeline") {
+        intercept[org.apache.spark.SparkException] { Pipeline.runOnPath(spark, inDir, zones, cfg) }
+      }
+      val kept = parts()
+      graft.jobs.PartKill.committed.set(0)
+      (killed, kept, LogCapture.logged("graft.jobs.Pipeline") {
+        Pipeline.runOnPath(spark, inDir, zones, cfg.copy(failAfterParts = -1))
+      }._2)
+    } finally umask.fold(hconf.unset("fs.permissions.umask-mode"))(hconf.set("fs.permissions.umask-mode", _))
+
+    // the killed run never reached the event; the resume logs one
+    assert(killedEvents.isEmpty, killedEvents)
+    assert(kept >= 2 && kept < parts(), s"kill left $kept of ${parts()} parts")
+    assert(resumedEvents === Seq(s"runBatches: 2 pending batches, ${parts() - kept} parts written this run, " +
+      s"$kept kept from a killed attempt; local commits set permissions in-process"))
+
+    val root = Paths.get(dir)
+    val all = Files.walk(root).iterator().asScala.toSeq.filter(_ != root)
+    val (dirs, files) = all.partition(Files.isDirectory(_))
+    def mode(p: java.nio.file.Path) = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+    assert(dirs.nonEmpty && dirs.forall(mode(_) == (0x1ff & ~0x17)), dirs.map(d => d -> mode(d).toOctalString))
+    assert(files.forall(mode(_) == (0x1b6 & ~0x17)), files.map(f => f -> mode(f).toOctalString))
+    val data = files.filterNot(_.getFileName.toString.endsWith(".crc"))
+    assert(data.nonEmpty && data.forall(f => f.toString.endsWith(".parquet") || f.toString.endsWith(".json")), data)
+    val sidecars = data.map(f => f.resolveSibling(s".${f.getFileName}.crc"))
+    assert(sidecars.forall(Files.exists(_)), sidecars.filterNot(Files.exists(_)))
+    assert(files.size === 2 * data.size, "a .crc without its data file")
+
+    // the sidecars are checked on read: one flipped byte in a part file
+    val part = data.filter(_.toString.endsWith(".parquet")).maxBy(Files.size(_))
+    val bytes = Files.readAllBytes(part)
+    bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0x01).toByte
+    Files.write(part, bytes)
+    val e = intercept[Exception] { Pipeline.output(spark, cfg).collect() }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]), e)
   }
 }

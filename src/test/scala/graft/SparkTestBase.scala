@@ -17,3 +17,32 @@ object SparkTestBase {
     s
   }
 }
+
+/** Log4j events of named loggers, captured while a body runs. */
+object LogCapture {
+
+  /** Run `body` with `names`' loggers at INFO and return its result with
+    * the messages they logged meanwhile.
+    */
+  def logged[T](names: String*)(body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-log-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val loggers = names.map(n => LogManager.getLogger(n).asInstanceOf[Logger])
+    // appenders first: adding one to a logger without its own config
+    // rebuilds every logger's config, which resets a level set before
+    loggers.foreach(_.addAppender(appender))
+    loggers.foreach(_.setLevel(Level.INFO))
+    try (body, seen.toArray(Array.empty[String]).toSeq)
+    finally {
+      loggers.foreach { l => l.removeAppender(appender); l.setLevel(null) }
+      appender.stop()
+    }
+  }
+}

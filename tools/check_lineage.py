@@ -9,7 +9,8 @@ Checks, using parquet footers only (no data pages are read):
     has its parquet file;
   * each _lineage/batch-<b>.json has "out_rows" equal to the sum of its part
     records' "rows" and "checksum" equal to the XOR of their "checksum"s;
-  * no .tmp file is left anywhere under <outDir>.
+  * no .tmp file is left anywhere under <outDir>;
+  * every Hadoop checksum sidecar .<name>.crc sits beside its <name>.
 
 Prints OK and exits 0, or prints the first mismatch and exits 1.
 """
@@ -52,6 +53,8 @@ def check(out):
         for name in sorted(files):
             if name.endswith(".tmp"):
                 raise Mismatch(f"leftover temp file {os.path.join(root, name)}")
+            if name.startswith(".") and name.endswith(".crc") and name[1:-4] not in files:
+                raise Mismatch(f"orphan checksum file {os.path.join(root, name)}: no {name[1:-4]}")
 
     lineage = os.path.join(out, "_lineage")
     if not os.path.isdir(lineage):
