@@ -5,19 +5,19 @@ import scala.collection.mutable.{ArrayBuffer, HashMap => MHashMap}
 /** Snap-rounded planar arrangement with winding-number face classification —
   * the engine behind exact boolean overlay on polygons WITH holes, cascaded
   * n-way union (dissolve), exact concave buffer (capsule union), and
-  * geometry-level polygonize. Replaces the approximations the
-  * Greiner–Hormann pairwise clipper (GeomClip) cannot express
-  * (reference: GEOS OverlayNG's snap-rounding noder + winding extraction,
-  * which backs `gdal/ogr/ogrgeometry.cpp:3335` Union, `:3532`
+  * geometry-level polygonize: the engine's one overlay module, behind
+  * every st_intersection/st_union/st_difference/st_symdifference, dissolve
+  * and buffer (reference: GEOS OverlayNG's snap-rounding noder + winding
+  * extraction, which backs `gdal/ogr/ogrgeometry.cpp:3335` Union, `:3532`
   * UnionCascaded, `:3229` Buffer, `:4923` Polygonize).
   *
   * Pipeline: quantize input rings to an even-integer grid → iterated
   * pairwise noding (split at proper crossings / endpoint touches /
   * collinear overlaps, rounded to the grid) → merge coincident segments
   * with net directed weights per region → half-edge face traversal →
-  * per-face winding vector via an exact symbolic-perturbation ray cast
-  * from an edge midpoint → boundary darts of kept faces → output cycles →
-  * hole assignment by exact vertical ray shooting.
+  * per-face winding vector via an exact ray cast from an edge midpoint,
+  * displaced symbolically off the edge → boundary darts of kept faces →
+  * output cycles → hole assignment by exact vertical ray shooting.
   *
   * All predicates are exact in Long arithmetic (coords ≤ 2^28, cross
   * products ≤ 2^57); only split-point placement uses doubles, which the

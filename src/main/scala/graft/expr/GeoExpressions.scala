@@ -464,7 +464,7 @@ object GeoExtract {
   * reference returns an empty geometry object).
   */
 object OverlayRt {
-  import graft.core.{GeomClip, GMulti, GPolygon}
+  import graft.core.GMulti
 
   private def wrap(pieces: Seq[Geom]): Array[Byte] = pieces match {
     case Seq() => null
@@ -475,8 +475,7 @@ object OverlayRt {
   /** Boolean overlay through the snap-rounded arrangement
     * ([[graft.core.Arrangement.overlay2]]): exact for multi-piece inputs,
     * inputs WITH interior rings, and results that need hole rings
-    * (crossing concave polygons) — the cases the pairwise
-    * Greiner–Hormann fold could not express.
+    * (crossing concave polygons).
     */
   def overlay(a: Array[Byte], b: Array[Byte], op: Int): Array[Byte] =
     wrap(graft.core.Arrangement.overlay2(GeoRt.decode(a), GeoRt.decode(b), op))
@@ -565,9 +564,9 @@ object GeomMiscRt {
   def eval(wkb: Array[Byte], kind: Int): Array[Byte] = {
     val g = GeoRt.decode(wkb)
     val r = kind match {
-      case 0 => graft.core.GeomClip.boundary(g)
-      case 1 => graft.core.GeomClip.delaunayTriangulation(g)
-      case 2 => graft.core.GeomClip.pointOnSurface(g)
+      case 0 => graft.core.GeomBuild.boundary(g)
+      case 1 => graft.core.GeomBuild.delaunayTriangulation(g)
+      case 2 => graft.core.GeomBuild.pointOnSurface(g)
       case _ => None
     }
     r.map(Geom.toWkb).orNull
@@ -592,8 +591,9 @@ case class StGeomMisc(child: Expression, kind: Int) extends UnaryExpression {
   }
 }
 
-/** st_buffer(wkb, dist) -> wkb (GEOS-style quadSegs=8 circles; convex
-  * offset; concave rings via convex hull — see GeomClip.buffer).
+/** st_buffer(wkb, dist) -> wkb: a point becomes a GEOS-style 32-gon
+  * (quadSegs = 8); lines and polygons, concave or holed, buffer exactly
+  * through [[graft.core.Arrangement.buffer]] (see GeomBuild.buffer).
   */
 case class StBuffer(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = BinaryType
@@ -706,7 +706,7 @@ case class StSegmentize(left: Expression, right: Expression) extends BinaryExpre
 /** String-typed helpers reachable from generated code (UTF8String in/out). */
 object GeoFn {
   def buffer(b: Array[Byte], d: Double): Array[Byte] =
-    Geom.toWkb(graft.core.GeomClip.buffer(GeoRt.decode(b), d))
+    Geom.toWkb(graft.core.GeomBuild.buffer(GeoRt.decode(b), d))
   def convexHull(b: Array[Byte]): Array[Byte] =
     Geom.toWkb(graft.core.GeomBuild.convexHull(GeoRt.decode(b)))
   def simplify(b: Array[Byte], t: Double): Array[Byte] =

@@ -214,6 +214,10 @@ object Pipeline {
               checksum ^= row.getLong(tagIdx + 2)
             }
             w.close()
+            // test hook: the (failAfter + 1)-th part to get here dies before its
+            // rename, so exactly failAfter parts commit however many tasks run
+            if (failAfter >= 0 && PartKill.committed.incrementAndGet() > failAfter)
+              throw new RuntimeException(s"injected failure after $failAfter partition commits (test hook)")
             val fin = new Path(s"$batchDir/part-$pid.parquet")
             // a racing retry may have won: its output is equivalent
             if (!fs.rename(tmp, fin) && !fs.exists(fin))
@@ -225,8 +229,10 @@ object Pipeline {
             os.write(s"""{"batch":$b,"part":$pid,"rows":$n,"checksum":$checksum}"""
               .getBytes("UTF-8"))
             os.close()
-            if (!fs.rename(recTmp, rec) && !fs.exists(rec))
-              throw new java.io.IOException(s"lineage commit failed for $rec")
+            if (!fs.rename(recTmp, rec)) {
+              if (!fs.exists(rec)) throw new java.io.IOException(s"lineage commit failed for $rec")
+              fs.delete(recTmp, false) // a racing attempt's record won
+            }
             committed = true
           } finally {
             if (!committed) {
@@ -235,10 +241,6 @@ object Pipeline {
               catch { case _: Throwable => () }
             }
           }
-          val k = PartKill.committed.incrementAndGet()
-          if (failAfter >= 0 && k > failAfter)
-            throw new RuntimeException(
-              s"injected failure after $k partition commits (test hook)")
         }
       }
     val counts = obs.get

@@ -257,12 +257,15 @@ object Sieve extends Serializable {
     // E: distributed pointer-doubling over the small-polygon pointer graph
     // (gid → biggest small neighbor, or resolved value when the biggest
     // neighbor is large). Each round composes the pointer function with
-    // itself, so chains of length L resolve in O(log L) rounds; pure-small
-    // cycles never resolve (active count stops shrinking → break), which
+    // itself, so a resolvable chain of length L resolves in ⌈log2 L⌉
+    // rounds. The loop needs no round cap to end: `active` is a
+    // non-negative count, and a round runs only while it strictly falls.
+    // A round in which it does not fall leaves only pointers into
+    // pure-small cycles, which never resolve; that
     // matches the serial walk's visited-set stop. Only the FINAL
     // (gid → replacement value) map — O(resolved small polygons), which
     // must broadcast to executors anyway — ever reaches the driver;
-    // the former O(small)·chain walk is gone.
+    // each pointer round brings back only its active count.
     val smallPtr0 = sizesDF.filter(col("gsize") < threshold)
       .join(bigDF, col("gid") === col("p"), "left")
       .select(col("gid"), col("gvalue"),
@@ -274,7 +277,7 @@ object Sieve extends Serializable {
     var active = f.filter(col("next").isNotNull && col("res").isNull).count()
     var prevActive = Long.MaxValue
     var ptrIter = 0
-    while (active > 0 && active < prevActive && ptrIter < 48) {
+    while (active > 0 && active < prevActive) {
       prevActive = active
       val b = f.select(col("gid").as("b_gid"), col("next").as("b_next"),
         col("res").as("b_res"))
@@ -300,8 +303,7 @@ object Sieve extends Serializable {
     // it never materializes on the driver (salt-and-pepper noise makes
     // #small components ≈ pixels/2).
     val nRewrites = rewriteDF.count()
-    val stop = if (active == 0) "resolved" else if (active >= prevActive)
-      "on the non-shrinking (cycle) rule" else s"at the $ptrIter-round cap"
+    val stop = if (active == 0) "resolved" else "on the non-shrinking (cycle) rule"
     val broadcastRewrite = nRewrites <= bcastRewriteLimit
     logger.info(s"sieve: pointer doubling took $ptrIter rounds and stopped $stop; " +
       s"${if (broadcastRewrite) "broadcast" else "shuffle-join"} rewrite of $nRewrites components")

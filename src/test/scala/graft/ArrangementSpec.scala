@@ -13,6 +13,19 @@ class ArrangementSpec extends AnyFunSuite {
 
   private def area(ps: Seq[GPolygon]): Double = ps.map(GeomOps.area).sum
 
+  /** Area tolerance of an overlay of `a` and `b`: the arrangement snaps
+    * every vertex and crossing to a grid of step extent / 2^26
+    * (`Arrangement.quantize`), so an output area may differ from the exact
+    * one by up to the inputs' total perimeter times one step. Extents whose
+    * step is a power of two hold integer corners exactly.
+    */
+  private def snapTol(a: GPolygon, b: GPolygon): Double = {
+    val (ea, eb) = (a.envelope, b.envelope)
+    val extent = math.max(math.max(ea.maxX, eb.maxX) - math.min(ea.minX, eb.minX),
+      math.max(ea.maxY, eb.maxY) - math.min(ea.minY, eb.minY))
+    (GeomOps.length(a) + GeomOps.length(b)) * extent / (1L << 26)
+  }
+
   private val sq = (x: Double, y: Double, s: Double) =>
     poly((x, y), (x + s, y), (x + s, y + s), (x, y + s))
 
@@ -40,6 +53,14 @@ class ArrangementSpec extends AnyFunSuite {
     val diff = Arrangement.overlay2(sq(0, 0, 6), sq(2, 2, 2), 2)
     assert(diff.length === 1 && diff.head.rings.length === 2)
     assert(math.abs(area(diff) - 32.0) < 1e-6)
+    // containment: intersection = inner, union = outer, inner − outer = ∅
+    val a4 = sq(0, 0, 4); val inner = sq(1, 1, 2)
+    assert(math.abs(area(Arrangement.overlay2(a4, inner, 0)) - 4.0) < 1e-9)
+    assert(math.abs(area(Arrangement.overlay2(a4, inner, 1)) - 16.0) < 1e-9)
+    val holed = Arrangement.overlay2(a4, inner, 2)
+    assert(holed.length === 1 && holed.head.rings.length === 2)
+    assert(math.abs(area(holed) - 12.0) < 1e-9)
+    assert(Arrangement.overlay2(inner, a4, 2).isEmpty)
     // union the hole-bearing result with the plug: hole must disappear
     val refill = Arrangement.overlay2(diff.head, sq(2, 2, 2), 1)
     assert(refill.length === 1 && refill.head.rings.length === 1)
@@ -156,6 +177,13 @@ class ArrangementSpec extends AnyFunSuite {
     assert(out.length === 1 && math.abs(area(out) - 4.0) < 1e-6)
     val none = Arrangement.overlay2(sq(0, 0, 1), sq(5, 5, 1), 0)
     assert(none.isEmpty)
+    // disjoint: two-piece union, identity difference
+    val a4 = sq(0, 0, 4); val far = sq(10, 10, 2)
+    val tol = snapTol(a4, far)
+    assert(Arrangement.overlay2(a4, far, 0).isEmpty)
+    val both = Arrangement.overlay2(a4, far, 1)
+    assert(both.length === 2 && math.abs(area(both) - 20.0) < tol)
+    assert(math.abs(area(Arrangement.overlay2(a4, far, 2)) - 16.0) < tol)
     val sym0 = Arrangement.overlay2(sq(0, 0, 2), sq(0, 0, 2), 3)
     assert(area(sym0) < 1e-6)
   }
@@ -205,7 +233,7 @@ class ArrangementSpec extends AnyFunSuite {
 
   test("multipoint buffer unions overlapping circles") {
     val mp = GMulti(4, Array(GPoint(0, 0), GPoint(0.1, 0)))
-    val buf = GeomClip.buffer(mp, 1.0)
+    val buf = GeomBuild.buffer(mp, 1.0)
     val a = buf match {
       case p: GPolygon => GeomOps.area(p)
       case GMulti(_, gs) => gs.map(GeomOps.area).sum
@@ -220,5 +248,57 @@ class ArrangementSpec extends AnyFunSuite {
     assert(out.length === 1, s"got ${out.length}")
     assert(math.abs(area(out) - 8.0) < 1e-6)
     assert(out.head.rings.length === 1)
+    // the shared edge bounds no area: empty intersection, exact union and difference
+    val a4 = sq(0, 0, 4); val right = sq(4, 0, 4)
+    assert(Arrangement.overlay2(a4, right, 0).isEmpty)
+    val u = Arrangement.overlay2(a4, right, 1)
+    assert(u.length === 1 && math.abs(area(u) - 32.0) < 1e-9)
+    val d = Arrangement.overlay2(a4, right, 2)
+    assert(d.length === 1 && math.abs(area(d) - 16.0) < 1e-9)
   }
+
+  test("crossing rectangles: all four ops satisfy the area identities") {
+    val a = sq(0, 0, 4); val b = sq(2, 2, 4)
+    val tol = snapTol(a, b)
+    assert(math.abs(area(Arrangement.overlay2(a, b, 0)) - 4.0) < tol)
+    assert(math.abs(area(Arrangement.overlay2(a, b, 1)) - 28.0) < tol)
+    assert(math.abs(area(Arrangement.overlay2(a, b, 2)) - 12.0) < tol)
+    assert(math.abs(area(Arrangement.overlay2(b, a, 2)) - 12.0) < tol)
+    assert(math.abs(area(Arrangement.overlay2(a, b, 3)) - 24.0) < tol)
+  }
+
+  test("concave U-shape x rect: intersection splits into two pieces") {
+    val u = poly((0, 0), (6, 0), (6, 6), (4, 6), (4, 2), (2, 2), (2, 6), (0, 6))
+    val r = poly((1, 3), (5, 3), (5, 5), (1, 5))
+    val tol = snapTol(u, r)
+    val inter = Arrangement.overlay2(u, r, 0)
+    assert(inter.length === 2, s"got ${inter.length} pieces")
+    assert(math.abs(area(inter) - 4.0) < tol, s"got ${area(inter)}")
+    // U area = 36 − 8 (notch) = 28; minus the 4 units clipped by the rect
+    assert(math.abs(area(Arrangement.overlay2(u, r, 2)) - (28.0 - 4.0)) < tol)
+  }
+
+  test("random rectangles: area identities hold pairwise") {
+    for (seed <- 1 to 40) {
+      val h = graft.sources.Pages.mix(seed.toLong)
+      def f(k: Int): Double = ((h >>> (k * 8)) & 0x3f) / 4.0
+      val (x1, y1, w1, h1) = (f(0), f(1), 1.0 + f(2) / 2, 1.0 + f(3) / 2)
+      val (x2, y2, w2, h2) = (f(4) + 0.013, f(5) + 0.017, 1.0 + f(6) / 2, 1.0 + f(7) / 2)
+      val p1 = poly((x1, y1), (x1 + w1, y1), (x1 + w1, y1 + h1), (x1, y1 + h1))
+      val p2 = poly((x2, y2), (x2 + w2, y2), (x2 + w2, y2 + h2), (x2, y2 + h2))
+      val expInter = math.max(0.0, math.min(x1 + w1, x2 + w2) - math.max(x1, x2)) *
+        math.max(0.0, math.min(y1 + h1, y2 + h2) - math.max(y1, y2))
+      val (a1, a2) = (w1 * h1, w2 * h2)
+      val ai = area(Arrangement.overlay2(p1, p2, 0))
+      val au = area(Arrangement.overlay2(p1, p2, 1))
+      val ad = area(Arrangement.overlay2(p1, p2, 2))
+      val ax = area(Arrangement.overlay2(p1, p2, 3))
+      val tol = snapTol(p1, p2)
+      assert(math.abs(ai - expInter) < tol, s"seed $seed inter: $ai vs $expInter")
+      assert(math.abs(au - (a1 + a2 - expInter)) < tol, s"seed $seed union")
+      assert(math.abs(ad - (a1 - expInter)) < tol, s"seed $seed diff")
+      assert(math.abs(ax - (a1 + a2 - 2 * expInter)) < tol, s"seed $seed symdiff")
+    }
+  }
+
 }

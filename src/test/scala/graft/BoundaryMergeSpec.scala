@@ -129,6 +129,28 @@ class BoundaryMergeSpec extends AnyFunSuite {
     } finally spark.conf.unset(UnionFind.DriverPairLimitKey)
   }
 
+  /** One row of regions of sizes 1..L with distinct values, then one of
+    * size L + 1; at threshold L + 1 each small region's biggest neighbour
+    * is the next one, a pointer chain of length L that only the big region
+    * resolves. Pointer doubling must resolve it in ⌈log2 L⌉ rounds.
+    */
+  test("sieve resolves a length-40 pointer chain in ⌈log2 40⌉ rounds") {
+    val L = 40
+    val vals = ((1 to L).flatMap(i => Seq.fill(i)(i)) ++ Seq.fill(L + 1)(L + 1)).toArray
+    val w = vals.length
+    val expect = Sieve.sieveLocal(vals, w, 1, L + 1, 4)
+    val (got, events) = logged(
+      Sieve.sieve(spark, Seq(IStrip(0, 0, 1, w, vals)).toDS(), w, 1, L + 1, 4)
+        .collect().flatMap(_.vals))
+    assert(got.toSeq === expect.toSeq)
+    val rounds = events.collectFirst {
+      case m if m.startsWith("sieve: pointer doubling took ") =>
+        m.stripPrefix("sieve: pointer doubling took ").takeWhile(_.isDigit).toInt
+    }
+    assert(rounds.exists(r => r >= 1 && r <= 6), events) // ⌈log2 40⌉ = 6
+    assert(events.exists(_.contains("rounds and stopped resolved")), events)
+  }
+
   /** Run `body` with the BoundaryMerge and Sieve loggers at INFO and return
     * its result with the messages they logged meanwhile.
     */

@@ -117,7 +117,7 @@ class DissolveSimplifySpec extends AnyFunSuite {
     // discretization may only shrink it by the inscribed-chord deficit.
     val l = Geom.fromWkt("POLYGON((0 0,4 0,4 1,1 1,1 4,0 4,0 0))")
     val d = 0.5
-    val buf = GeomClip.buffer(l, d)
+    val buf = GeomBuild.buffer(l, d)
     val area = buf match {
       case p: GPolygon => GeomOps.area(p)
       case GMulti(_, gs) => gs.map(GeomOps.area).sum

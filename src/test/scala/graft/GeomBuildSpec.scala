@@ -85,6 +85,22 @@ class GeomBuildSpec extends AnyFunSuite {
     assert(!sp.contains(10L))
   }
 
+  test("buffer: point → 32-gon circle, convex polygon → rounded offset") {
+    val p = Geom.fromWkt("POINT(1 2)")
+    val buf = GeomBuild.buffer(p, 0.5)
+    // area of the inscribed 32-gon: n/2 r² sin(2π/n)
+    val expect = 32.0 / 2 * 0.25 * math.sin(2 * math.Pi / 32)
+    assert(math.abs(GeomOps.area(buf) - expect) < 1e-9)
+    val ring = buf.asInstanceOf[GPolygon].rings(0)
+    assert(math.abs(ring.x(0) - 1.5) < 1e-12 && math.abs(ring.y(0) - 2.0) < 1e-12)
+    // rect buffer: area = rect + perimeter·d + (approx) circle at corners
+    val rect = Geom.fromWkt("POLYGON((0 0,4 0,4 2,0 2,0 0))")
+    val rb = GeomBuild.buffer(rect, 1.0)
+    val circleApprox = 32.0 / 2 * math.sin(2 * math.Pi / 32)
+    val expectRect = 8.0 + 12.0 * 1.0 + circleApprox
+    assert(math.abs(GeomOps.area(rb) - expectRect) < 0.05, s"got ${GeomOps.area(rb)}")
+  }
+
   test("st_convexhull/st_simplify/st_segmentize through the SQL surface") {
     val spark = SparkTestBase.spark
     import spark.implicits._

@@ -230,30 +230,23 @@ class PipelineSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-pipe-check").toString
     Pipeline.run(spark, Pages.synth(spark, 1500L), zones,
       Pipeline.Config(outDir = dir, nBatches = 2, nParts = 8))
-    def check(): (Int, String) = try {
-      val p = new ProcessBuilder("python3", "tools/check_lineage.py", dir)
-        .redirectErrorStream(true).start()
-      val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
-      (p.waitFor(), out)
-    } catch { case _: java.io.IOException => cancel("python3 not available") }
-    val (ok, okOut) = check()
-    if (okOut.contains("No module named")) cancel(s"check_lineage.py needs pyarrow: $okOut")
+    val (ok, okOut) = checkLineage(dir)
     assert(ok === 0, okOut)
     val part = new java.io.File(s"$dir/_lineage/batch-0").list().filter(_.endsWith(".json")).min
     val rec = Paths.get(s"$dir/_lineage/batch-0/$part")
     val r = record(rec.toString)
     Files.write(rec, s"""{"batch":0,"part":${r("part")},"rows":${r("rows") + 1},"checksum":${r("checksum")}}"""
       .getBytes("UTF-8"))
-    val (bad, badOut) = check()
+    val (bad, badOut) = checkLineage(dir)
     assert(bad !== 0, badOut)
     assert(badOut.contains(part), badOut)
     // a sidecar with no data file is a mismatch too
     Files.write(rec, s"""{"batch":0,"part":${r("part")},"rows":${r("rows")},"checksum":${r("checksum")}}"""
       .getBytes("UTF-8"))
     Files.delete(Paths.get(s"$dir/_lineage/batch-0/.$part.crc")) // stale after the rewrite
-    assert(check()._1 === 0)
+    assert(checkLineage(dir)._1 === 0)
     Files.copy(Paths.get(s"$dir/_lineage/.batch-0.json.crc"), Paths.get(s"$dir/_lineage/.batch-9.json.crc"))
-    val (orphan, orphanOut) = check()
+    val (orphan, orphanOut) = checkLineage(dir)
     assert(orphan !== 0, orphanOut)
     assert(orphanOut.contains(".batch-9.json.crc"), orphanOut)
   }
@@ -271,6 +264,30 @@ class PipelineSpec extends AnyFunSuite {
     graft.jobs.PartKill.committed.set(0)
     Pipeline.run(spark, pages, zones, cfg.copy(failAfterParts = -1))
     left.foreach(p => assert(!Files.exists(Paths.get(p)), s"$p survived the resume"))
+    val (code, out) = checkLineage(dir)
+    assert(code === 0, out)
+  }
+
+  test("a commit that loses its rename to a racing attempt leaves no temp file") {
+    val dir = Files.createTempDirectory("graft-pipe-lost-rename").toString
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set(s"fs.${LostRenameFs.Scheme}.impl", classOf[LostRenameFs].getName)
+    LostRenameFs.lost.set(0)
+    try Pipeline.run(spark, Pages.synth(spark, 1500L), zones,
+      Pipeline.Config(outDir = s"${LostRenameFs.Scheme}://$dir", nBatches = 2, nParts = 4))
+    finally hconf.unset(s"fs.${LostRenameFs.Scheme}.impl")
+    // every part file and every part record lost its rename
+    val parts = (0 until 2).flatMap(b => Option(new java.io.File(s"$dir/batch=$b").list()).toSeq.flatten)
+      .count(_.endsWith(".parquet"))
+    assert(parts > 0 && LostRenameFs.lost.get === 2 * parts)
+    val (code, out) = checkLineage(dir)
+    assert(code === 0, out)
+  }
+
+  /** Exit code and output of `tools/check_lineage.py` on `dir`; cancels the
+    * test when python3 or pyarrow is missing.
+    */
+  private def checkLineage(dir: String): (Int, String) = {
     val (code, out) = try {
       val p = new ProcessBuilder("python3", "tools/check_lineage.py", dir)
         .redirectErrorStream(true).start()
@@ -278,7 +295,7 @@ class PipelineSpec extends AnyFunSuite {
       (p.waitFor(), out)
     } catch { case _: java.io.IOException => cancel("python3 not available") }
     if (out.contains("No module named")) cancel(s"check_lineage.py needs pyarrow: $out")
-    assert(code === 0, out)
+    (code, out)
   }
 
   /** Every lineage record (batch and part) under `dir`, relative path → bytes. */
@@ -465,4 +482,26 @@ class PipelineSpec extends AnyFunSuite {
     val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
     assert(causes.exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]), e)
   }
+}
+
+/** A local file system under the `lostrename:` scheme on which every part
+  * file and part record loses its commit: just before the rename, a racing
+  * attempt's copy lands at the destination, and `rename` then refuses the
+  * existing destination, as HDFS does.
+  */
+final class LostRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileUtil, Path}
+  override def getUri: java.net.URI = java.net.URI.create(s"${LostRenameFs.Scheme}:///")
+  override def rename(src: Path, dst: Path): Boolean = {
+    if (dst.getName.startsWith("part-") && !exists(dst)) {
+      FileUtil.copy(this, src, this, dst, false, getConf)
+      LostRenameFs.lost.incrementAndGet()
+    }
+    !exists(dst) && super.rename(src, dst)
+  }
+}
+
+object LostRenameFs {
+  val Scheme = "lostrename"
+  val lost = new java.util.concurrent.atomic.AtomicInteger
 }

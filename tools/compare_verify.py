@@ -5,13 +5,16 @@ against another Verify output directory (e.g. one built from a parent commit).
 Usage:
   python3 tools/compare_verify.py <outDir> <sfDir> [--ref <refOutDir>] [query ...]
 
-With no query names, every query dir under <outDir> is checked. For each
-query the rows are normalised (columns sorted by name, floats rounded to 9
+With no query names, every query in <outDir>'s `oracle_sql.json` is checked.
+A query with no output dir (Verify prints a query's exception and writes no
+dir for it) prints `MISSING <q>` and counts as a failure. For each query the
+rows are normalised (columns sorted by name, floats rounded to 9
 significant digits, binary as hex) and sorted, then compared with:
   - the oracle: `oracle_sql.json`'s SQL run in DuckDB over views of the
     parquet tables in <sfDir> (one view per `<name>.parquet`);
   - the reference dir (with --ref): the same query's rows there.
-Prints one `OK`/`MISMATCH` line per query and exits non-zero on a mismatch.
+Prints one `OK`/`MISMATCH`/`MISSING` line per query and exits non-zero on a
+mismatch or a missing query.
 """
 import glob
 import json
@@ -61,13 +64,17 @@ def main(argv):
     out_dir, sf_dir, queries = argv[0], argv[1], argv[2:]
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     if not queries:
-        queries = sorted(q for q in oracle if os.path.isdir(os.path.join(out_dir, q)))
+        queries = sorted(oracle)
     con = duckdb.connect()
     for f in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
         name = os.path.basename(f)[: -len(".parquet")]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{f}')")
     bad = 0
     for q in queries:
+        if not os.path.isdir(os.path.join(out_dir, q)):
+            bad += 1
+            print(f"MISSING {q}")
+            continue
         got = spark_rows(out_dir, q)
         notes = []
         if oracle_rows(con, oracle[q]) != got:
