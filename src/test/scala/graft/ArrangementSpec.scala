@@ -53,14 +53,6 @@ class ArrangementSpec extends AnyFunSuite {
     val diff = Arrangement.overlay2(sq(0, 0, 6), sq(2, 2, 2), 2)
     assert(diff.length === 1 && diff.head.rings.length === 2)
     assert(math.abs(area(diff) - 32.0) < 1e-6)
-    // containment: intersection = inner, union = outer, inner − outer = ∅
-    val a4 = sq(0, 0, 4); val inner = sq(1, 1, 2)
-    assert(math.abs(area(Arrangement.overlay2(a4, inner, 0)) - 4.0) < 1e-9)
-    assert(math.abs(area(Arrangement.overlay2(a4, inner, 1)) - 16.0) < 1e-9)
-    val holed = Arrangement.overlay2(a4, inner, 2)
-    assert(holed.length === 1 && holed.head.rings.length === 2)
-    assert(math.abs(area(holed) - 12.0) < 1e-9)
-    assert(Arrangement.overlay2(inner, a4, 2).isEmpty)
     // union the hole-bearing result with the plug: hole must disappear
     val refill = Arrangement.overlay2(diff.head, sq(2, 2, 2), 1)
     assert(refill.length === 1 && refill.head.rings.length === 1)
@@ -177,13 +169,6 @@ class ArrangementSpec extends AnyFunSuite {
     assert(out.length === 1 && math.abs(area(out) - 4.0) < 1e-6)
     val none = Arrangement.overlay2(sq(0, 0, 1), sq(5, 5, 1), 0)
     assert(none.isEmpty)
-    // disjoint: two-piece union, identity difference
-    val a4 = sq(0, 0, 4); val far = sq(10, 10, 2)
-    val tol = snapTol(a4, far)
-    assert(Arrangement.overlay2(a4, far, 0).isEmpty)
-    val both = Arrangement.overlay2(a4, far, 1)
-    assert(both.length === 2 && math.abs(area(both) - 20.0) < tol)
-    assert(math.abs(area(Arrangement.overlay2(a4, far, 2)) - 16.0) < tol)
     val sym0 = Arrangement.overlay2(sq(0, 0, 2), sq(0, 0, 2), 3)
     assert(area(sym0) < 1e-6)
   }
@@ -248,12 +233,33 @@ class ArrangementSpec extends AnyFunSuite {
     assert(out.length === 1, s"got ${out.length}")
     assert(math.abs(area(out) - 8.0) < 1e-6)
     assert(out.head.rings.length === 1)
-    // the shared edge bounds no area: empty intersection, exact union and difference
-    val a4 = sq(0, 0, 4); val right = sq(4, 0, 4)
-    assert(Arrangement.overlay2(a4, right, 0).isEmpty)
-    val u = Arrangement.overlay2(a4, right, 1)
+  }
+
+  test("containment: intersection = inner, difference = ring with hole") {
+    val a = sq(0, 0, 4); val inner = sq(1, 1, 2)
+    assert(math.abs(area(Arrangement.overlay2(a, inner, 0)) - 4.0) < 1e-9)
+    assert(math.abs(area(Arrangement.overlay2(a, inner, 1)) - 16.0) < 1e-9)
+    val holed = Arrangement.overlay2(a, inner, 2)
+    assert(holed.length === 1 && holed.head.rings.length === 2)
+    assert(math.abs(area(holed) - 12.0) < 1e-9)
+    assert(Arrangement.overlay2(inner, a, 2).isEmpty)
+  }
+
+  test("disjoint: empty intersection, multi union, identity difference") {
+    val a = sq(0, 0, 4); val far = sq(10, 10, 2)
+    val tol = snapTol(a, far)
+    assert(Arrangement.overlay2(a, far, 0).isEmpty)
+    val both = Arrangement.overlay2(a, far, 1)
+    assert(both.length === 2 && math.abs(area(both) - 20.0) < tol)
+    assert(math.abs(area(Arrangement.overlay2(a, far, 2)) - 16.0) < tol)
+  }
+
+  test("shared-edge rectangles resolve exactly: the edge bounds no area") {
+    val a = sq(0, 0, 4); val right = sq(4, 0, 4)
+    assert(Arrangement.overlay2(a, right, 0).isEmpty)
+    val u = Arrangement.overlay2(a, right, 1)
     assert(u.length === 1 && math.abs(area(u) - 32.0) < 1e-9)
-    val d = Arrangement.overlay2(a4, right, 2)
+    val d = Arrangement.overlay2(a, right, 2)
     assert(d.length === 1 && math.abs(area(d) - 16.0) < 1e-9)
   }
 
