@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
@@ -114,8 +114,18 @@ object Pipeline {
       s"""{"batch":${r.batch},"in_pages":${r.inPages},"out_rows":${r.outRows},"checksum":${r.checksum}}"""
         .getBytes("UTF-8"))
     out.close()
-    fs.rename(tmp, fin) // atomic commit: record exists ⇒ batch output complete
+    commit(fs, tmp, fin) // record exists ⇒ batch output complete
   }
+
+  /** Atomic commit of a finished temp file by rename. A refused rename is
+    * fine when a racing attempt's equivalent `fin` won (the temp file is
+    * dropped); with no `fin` it throws, naming it.
+    */
+  private def commit(fs: FileSystem, tmp: Path, fin: Path): Unit =
+    if (!fs.rename(tmp, fin)) {
+      if (!fs.exists(fin)) throw new java.io.IOException(s"commit failed for $fin")
+      fs.delete(tmp, false)
+    }
 
   /** Committed output partitions of a batch: `_lineage/batch-<b>/part-<p>.json`. */
   def committedParts(spark: SparkSession, cfg: Config, b: Int): Set[Int] =
@@ -219,20 +229,14 @@ object Pipeline {
             if (failAfter >= 0 && PartKill.committed.incrementAndGet() > failAfter)
               throw new RuntimeException(s"injected failure after $failAfter partition commits (test hook)")
             val fin = new Path(s"$batchDir/part-$pid.parquet")
-            // a racing retry may have won: its output is equivalent
-            if (!fs.rename(tmp, fin) && !fs.exists(fin))
-              throw new java.io.IOException(s"commit failed for $fin")
-            if (fs.exists(tmp)) fs.delete(tmp, false)
+            commit(fs, tmp, fin)
             val recTmp = new Path(s"$partLineDir/.part-$pid-$attempt.tmp")
             val rec = new Path(s"$partLineDir/part-$pid.json")
             val os = fs.create(recTmp, true)
             os.write(s"""{"batch":$b,"part":$pid,"rows":$n,"checksum":$checksum}"""
               .getBytes("UTF-8"))
             os.close()
-            if (!fs.rename(recTmp, rec)) {
-              if (!fs.exists(rec)) throw new java.io.IOException(s"lineage commit failed for $rec")
-              fs.delete(recTmp, false) // a racing attempt's record won
-            }
+            commit(fs, recTmp, rec)
             committed = true
           } finally {
             if (!committed) {

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.core.Ckpt.CkptOps
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.core.DriverRows
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph operators — the distributed re-expression of the reference's GNM
@@ -39,117 +40,81 @@ object GraphOps {
     out
   }
 
-  /** K shortest loopless paths — Yen's algorithm over Dijkstra, the
-    * re-expression of `gnm/gnmgraph.cpp:240` KShortestPaths. The reference
-    * holds the whole network in memory; this collects the (broadcastable)
-    * edge list and runs the spur iterations locally — the distributed
-    * [[shortestPaths]] remains the path for graphs that don't fit.
+  private type Path = Vector[Long]
+
+  /** One spur search of a Yen level: (spur index, spur node, banned nodes,
+    * banned edges).
+    */
+  private type Spur = (Int, Long, Set[Long], Set[(Long, Long)])
+
+  /** K shortest loopless paths — Yen's algorithm, the re-expression of
+    * `gnm/gnmgraph.cpp:240` KShortestPaths. Like the reference, which
+    * holds the whole network in memory, the selected `(src, dst, weight)`
+    * rows go to the driver when [[graft.core.DriverRows.fit]] finds them
+    * under the driver row limit, and each spur search is a local Dijkstra.
+    * Over the limit the call dispatches to [[kShortestPathsDistributed]]:
+    * the same Yen loop and pricing, edges never leave the executors. Logs
+    * one `info` event naming the mode.
     *
     * @return (rank, cost, n_hops, path) rows, rank 1..k by ascending cost
     *         (ties by lexicographic vertex path, a deterministic stand-in
     *         for the reference's multimap insertion order)
     */
   def kShortestPaths(edges: DataFrame, src: Column, dst: Column, weight: Column,
-                     from: Long, to: Long, k: Int,
-                     maxEdges: Long = 5000000L): DataFrame = {
-    // the reference GNM also materializes the network in memory
-    // (`gnm/gnmgenericnetwork.cpp` builds the full graph). Below the cap,
-    // collect + local Dijkstra (fastest by far on broadcastable graphs);
-    // above it, degrade to [[kShortestPathsDistributed]] — same Yen
-    // semantics, edges never leave the executors.
-    if (edges.count() > maxEdges) {
-      log.warn(s"kShortestPaths: edge list exceeds the in-memory " +
-        s"cap ($maxEdges); using the distributed spur search (slower per " +
-        "path, unbounded scale)")
-      return kShortestPathsDistributed(edges, src, dst, weight, from, to, k)
-    }
+                     from: Long, to: Long, k: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val es = edges.select(src.cast("long"), dst.cast("long"), weight.cast("double"))
-      .as[(Long, Long, Double)].collect()
-
-    type Path = Vector[Long]
-    def dijkstra(banNodes: Set[Long], banEdges: Set[(Long, Long)],
-                 s: Long, t: Long): Option[(Double, Path)] = {
-      val adj = es.iterator
-        .filter(e => !banNodes.contains(e._1) && !banNodes.contains(e._2) &&
-          !banEdges.contains((e._1, e._2)))
-        .toSeq.groupBy(_._1)
-      val dist = scala.collection.mutable.HashMap[Long, Double](s -> 0.0)
-      val prev = scala.collection.mutable.HashMap[Long, Long]()
-      val done = scala.collection.mutable.HashSet[Long]()
-      val pq = scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-        Ordering.by(x => (-x._1, -x._2)))
-      pq.enqueue((0.0, s))
-      while (pq.nonEmpty && !done.contains(t)) {
-        val (d, u) = pq.dequeue()
-        if (!done.contains(u) && d <= dist.getOrElse(u, Double.MaxValue)) {
-          done += u
-          adj.getOrElse(u, Seq.empty).foreach { case (_, v, w) =>
-            val nd = d + w
-            if (nd < dist.getOrElse(v, Double.MaxValue)) {
-              dist(v) = nd; prev(v) = u
-              pq.enqueue((nd, v))
+    DriverRows.fit(edges.select(src.cast("long"), dst.cast("long"), weight.cast("double"))
+      .as[(Long, Long, Double)]) match {
+      case None =>
+        log.info("kShortestPaths: distributed mode, edges over the driver row limit")
+        kShortestPathsDistributed(edges, src, dst, weight, from, to, k)
+      case Some(es) =>
+        log.info(s"kShortestPaths: driver mode, ${es.length} edges")
+        def dijkstra(banNodes: Set[Long], banEdges: Set[(Long, Long)],
+                     s: Long): Option[Path] = {
+          val adj = es.iterator
+            .filter(e => !banNodes.contains(e._1) && !banNodes.contains(e._2) &&
+              !banEdges.contains((e._1, e._2)))
+            .toSeq.groupBy(_._1)
+          val dist = scala.collection.mutable.HashMap[Long, Double](s -> 0.0)
+          val prev = scala.collection.mutable.HashMap[Long, Long]()
+          val done = scala.collection.mutable.HashSet[Long]()
+          val pq = scala.collection.mutable.PriorityQueue[(Double, Long)]()(
+            Ordering.by(x => (-x._1, -x._2)))
+          pq.enqueue((0.0, s))
+          while (pq.nonEmpty && !done.contains(to)) {
+            val (d, u) = pq.dequeue()
+            if (!done.contains(u) && d <= dist.getOrElse(u, Double.MaxValue)) {
+              done += u
+              adj.getOrElse(u, Seq.empty).foreach { case (_, v, w) =>
+                val nd = d + w
+                if (nd < dist.getOrElse(v, Double.MaxValue)) {
+                  dist(v) = nd; prev(v) = u
+                  pq.enqueue((nd, v))
+                }
+              }
             }
           }
+          Option.when(dist.contains(to)) {
+            var path = Vector(to)
+            while (path.head != s) path = prev(path.head) +: path
+            path
+          }
         }
-      }
-      dist.get(t).map { d =>
-        var path = Vector(t)
-        while (path.head != s) path = prev(path.head) +: path
-        (d, path)
-      }
+        // min-weight parallel edge, matching what dijkstra actually relaxes
+        // with; missing hops fail loudly
+        val minW = es.groupBy(e => (e._1, e._2)).map { case (uv, g) => uv -> g.map(_._3).min }
+        yen(spark, from, k,
+          _.flatMap { case (i, s, banNodes, banEdges) => dijkstra(banNodes, banEdges, s).map(i -> _) },
+          _ => minW)
     }
-
-    // min-weight parallel edge, matching what dijkstra actually relaxes
-    // with (es.find would price hops by collection order on multigraphs,
-    // ranking spur candidates by wrong costs); missing hops fail loudly
-    val minW: Map[(Long, Long), Double] =
-      es.groupBy(e => (e._1, e._2)).map { case (k, g) => k -> g.map(_._3).min }
-    def pathCost(p: Path): Double =
-      p.sliding(2).collect { case Seq(u, v) => minW((u, v)) }.sum
-
-    val first = dijkstra(Set.empty, Set.empty, from, to)
-    val a = scala.collection.mutable.ArrayBuffer[(Double, Path)]()
-    first.foreach(a += _)
-    // candidate pool, kept sorted by (cost, path)
-    implicit val pathOrd: Ordering[(Double, Path)] =
-      Ordering.by(t => (t._1, t._2.mkString(",")))
-    val b = scala.collection.mutable.SortedSet.empty[(Double, Path)]
-    var ki = 1
-    while (ki < k && a.nonEmpty && (a.length == ki)) {
-      val prevPath = a(ki - 1)._2
-      for (i <- 0 until prevPath.length - 1) {
-        val spurNode = prevPath(i)
-        val rootPath = prevPath.take(i + 1)
-        // ban the next edge of every accepted path sharing this root
-        val banEdges = a.iterator.map(_._2)
-          .filter(p => p.length > i && p.take(i + 1) == rootPath)
-          .collect { case p if p.length > i + 1 => (p(i), p(i + 1)) }
-          .toSet
-        val banNodes = rootPath.dropRight(1).toSet
-        dijkstra(banNodes, banEdges, spurNode, to).foreach { case (_, spur) =>
-          val total = rootPath.dropRight(1) ++ spur
-          val cand = (pathCost(total), total)
-          if (!a.exists(_._2 == total)) b += cand
-        }
-      }
-      if (b.nonEmpty) {
-        val best = b.head
-        b.remove(best)
-        a += best
-      }
-      ki += 1
-    }
-    a.iterator.zipWithIndex.map { case ((cost, path), idx) =>
-      (idx + 1, cost, path.length - 1, path.mkString("-"))
-    }.toSeq.toDF("rank", "cost", "n_hops", "path")
   }
 
   /** Yen's K shortest loopless paths with every shortest-path search
-    * distributed — the scale path past [[kShortestPaths]]'s in-memory cap
-    * (VERDICT r3 "what's missing" #3: the reference, also in-memory,
-    * degrades slowly rather than refusing; so do we now).
+    * distributed — the scale path [[kShortestPaths]] dispatches to past
+    * the driver row limit (VERDICT r3 "what's missing" #3: the reference,
+    * also in-memory, degrades slowly rather than refusing; so do we).
     *
     * One Yen level needs a spur search from EVERY node of the previous
     * accepted path, each with its own banned nodes/edges. Running those as
@@ -160,8 +125,9 @@ object GraphOps {
     * broadcast anti-joins inside the relax step, and the path itself rides
     * along as an array column (standard Pregel practice; loopless-ness is
     * enforced by an `array_contains` guard, which also bounds growth on
-    * zero-weight cycles). The driver only ever materializes the K result
-    * paths — never edges, never per-vertex state.
+    * zero-weight cycles). One broadcast join per level prices the found
+    * paths. The driver only materializes paths and their edge weights —
+    * never the edge list, never per-vertex state.
     *
     * Tie-break among equal-cost paths is the struct-min order (cost, then
     * hop count, then path array lexicographically) — hop count first so a
@@ -184,16 +150,15 @@ object GraphOps {
     val e = edges.select(src.cast("long").as("u"), dst.cast("long").as("v"),
       weight.cast("double").as("w")).cache()
 
-    type Path = Vector[Long]
-
-    /** Batched multi-source loopless SSSP: for each (spurId, source), the
-      * best (cost, path) to `to` avoiding that spur's banned nodes/edges.
+    /** Batched multi-source loopless SSSP: for each spur, the best path
+      * from its spur node to `to` avoiding its banned nodes/edges.
       */
-    def ssspBatch(spurs: Seq[(Int, Long)], banN: Seq[(Int, Long)],
-                  banE: Seq[(Int, Long, Long)]): Seq[(Int, Double, Path)] = {
-      val banNDf = broadcast(banN.toDF("nspur", "bnode"))
-      val banEDf = broadcast(banE.toDF("espur", "bu", "bv"))
-      var dist = spurs.toDF("spur", "vertex")
+    def ssspBatch(spurs: Seq[Spur]): Seq[(Int, Path)] = {
+      val banNDf = broadcast(spurs.flatMap { case (i, _, ns, _) => ns.map(i -> _) }
+        .toDF("nspur", "bnode"))
+      val banEDf = broadcast(spurs.flatMap { case (i, _, _, es) => es.map(uv => (i, uv._1, uv._2)) }
+        .toDF("espur", "bu", "bv"))
+      var dist = spurs.map(s => (s._1, s._2)).toDF("spur", "vertex")
         .withColumn("cost", lit(0.0))
         .withColumn("path", array(col("vertex")))
         .ckpt()
@@ -217,19 +182,18 @@ object GraphOps {
           .select(col("spur"), col("vertex"),
             col("m.cost").as("cost"), col("m.path").as("path"))
           .ckpt()
-        // exact, order-insensitive convergence: any (spur, vertex) that
-        // appeared or whose (cost, hops, path) struct strictly decreased
-        val changed = newDist.as("n")
+        // exact, order-insensitive convergence: no (spur, vertex) appeared
+        // and no (cost, hops, path) struct strictly decreased
+        converged = newDist.as("n")
           .join(dist.as("o"),
             col("n.spur") === col("o.spur") &&
               col("n.vertex") === col("o.vertex"), "left")
           .filter(col("o.cost").isNull ||
             struct(col("n.cost"), size(col("n.path")), col("n.path")) <
               struct(col("o.cost"), size(col("o.path")), col("o.path")))
-          .limit(1).count()
+          .isEmpty
         dist.unpersist() // free the previous round's checkpoint blocks
         dist = newDist
-        converged = changed == 0L
         iter += 1
       }
       // maxIter is a safety valve, not a truncation policy: returning the
@@ -241,14 +205,14 @@ object GraphOps {
           s"$maxIter rounds — a shortest path likely exceeds $maxIter hops; " +
           "raise maxIter")
       dist.filter(col("vertex") === to)
-        .select(col("spur"), col("cost"), col("path"))
-        .as[(Int, Double, Seq[Long])].collect()
-        .map { case (s, c, p) => (s, c, p.toVector) }.toSeq
+        .select(col("spur"), col("path"))
+        .as[(Int, Seq[Long])].collect()
+        .map { case (s, p) => (s, p.toVector) }.toSeq
     }
 
-    /** Weights of exactly the edges on accepted paths (≤ k·L pairs) via
-      * one broadcast join — multi-edges resolve to min(w), the same edge
-      * the relaxation itself would take.
+    /** Weights of exactly the asked edges (≤ k·L pairs per level) via one
+      * broadcast join — multi-edges resolve to min(w), the same edge the
+      * relaxation itself takes.
       */
     def edgeWeights(pairs: Set[(Long, Long)]): Map[(Long, Long), Double] =
       if (pairs.isEmpty) Map.empty
@@ -258,44 +222,49 @@ object GraphOps {
         .as[(Long, Long, Double)].collect()
         .map { case (u, v, w) => ((u, v), w) }.toMap
 
+    try yen(spark, from, k, ssspBatch, edgeWeights) finally e.unpersist()
+  }
+
+  /** Yen's loop, shared by both K-shortest variants: the accepted list A,
+    * the candidate pool B sorted by (cost, path), and the ban sets of each
+    * spur. `search` runs one level's spur searches as a batch and returns
+    * (spur index, spur path) for every spur that reaches the target.
+    * Every path is priced by one rule: its hops' min-weight parallel edges
+    * (looked up in `weights`, asked once per level for every hop of the
+    * level's paths) summed left to right.
+    */
+  private def yen(spark: SparkSession, from: Long, k: Int,
+                  search: Seq[Spur] => Seq[(Int, Path)],
+                  weights: Set[(Long, Long)] => Map[(Long, Long), Double]): DataFrame = {
+    import spark.implicits._
+    def hops(p: Path): Seq[(Long, Long)] = p.zip(p.tail)
+    def priced(paths: Seq[Path]): Seq[(Double, Path)] = {
+      val w = weights(paths.flatMap(hops).toSet)
+      paths.map(p => (hops(p).map(w).sum, p))
+    }
     val a = scala.collection.mutable.ArrayBuffer[(Double, Path)]()
-    ssspBatch(Seq((0, from)), Nil, Nil).foreach { case (_, c, p) => a += ((c, p)) }
+    a ++= priced(search(Seq((0, from, Set.empty, Set.empty))).map(_._2))
     implicit val pathOrd: Ordering[(Double, Path)] =
       Ordering.by(t => (t._1, t._2.mkString(",")))
     val b = scala.collection.mutable.SortedSet.empty[(Double, Path)]
-    var ki = 1
-    while (ki < k && a.nonEmpty && a.length == ki) {
-      val prevPath = a(ki - 1)._2
-      // collect, not map: a single-vertex path (from == to) yields one
-      // undersized sliding window, which a total match would crash on
-      val wmap = edgeWeights(
-        prevPath.sliding(2).collect { case Seq(u, v) => (u, v) }.toSet)
-      // one spur spec per prefix of the previous accepted path
-      val spurs = (0 until prevPath.length - 1).map(i => (i, prevPath(i)))
-      val banN = for {
-        i <- 0 until prevPath.length - 1
-        n <- prevPath.take(i + 1).dropRight(1)
-      } yield (i, n)
-      val banE = for {
-        i <- 0 until prevPath.length - 1
-        p <- a.iterator.map(_._2)
-        if p.length > i + 1 && p.take(i + 1) == prevPath.take(i + 1)
-      } yield (i, p(i), p(i + 1))
-      ssspBatch(spurs, banN, banE).foreach { case (i, spurCost, spurPath) =>
+    var grew = a.nonEmpty
+    while (grew && a.length < k) {
+      val prevPath = a.last._2
+      // one spur per prefix of the previous accepted path: ban the root's
+      // nodes before the spur node, and the next edge of every accepted
+      // path sharing the root
+      val spurs = (0 until prevPath.length - 1).map { i =>
         val rootPath = prevPath.take(i + 1)
-        val rootCost =
-          (0 until i).map(j => wmap((prevPath(j), prevPath(j + 1)))).sum
-        val total = rootPath.dropRight(1) ++ spurPath
-        if (!a.exists(_._2 == total)) b += ((rootCost + spurCost, total))
+        val banEdges = a.iterator.map(_._2)
+          .collect { case p if p.length > i + 1 && p.take(i + 1) == rootPath => (p(i), p(i + 1)) }
+          .toSet
+        (i, prevPath(i), rootPath.dropRight(1).toSet, banEdges)
       }
-      if (b.nonEmpty) {
-        val best = b.head
-        b.remove(best)
-        a += best
-      }
-      ki += 1
+      val found = search(spurs).map { case (i, spur) => prevPath.take(i) ++ spur }
+      b ++= priced(found.filterNot(total => a.exists(_._2 == total)))
+      grew = b.nonEmpty
+      if (grew) { a += b.head; b -= a.last }
     }
-    e.unpersist()
     a.iterator.zipWithIndex.map { case ((cost, path), idx) =>
       (idx + 1, cost, path.length - 1, path.mkString("-"))
     }.toSeq.toDF("rank", "cost", "n_hops", "path")
@@ -327,11 +296,10 @@ object GraphOps {
       // shuffle-order-insensitive test (float-sum equality is not: Spark
       // sums doubles in partition order, so equal sets can compare unequal
       // and burn iterations to maxIter)
-      val changed = newDist.as("n")
+      converged = newDist.as("n")
         .join(dist.as("o"), col("n.vertex") === col("o.vertex"), "left")
         .filter(col("o.dist").isNull || col("n.dist") < col("o.dist"))
-        .count()
-      converged = changed == 0L
+        .isEmpty
       dist.unpersist()
       dist = newDist
       iter += 1

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.core.Ckpt.CkptOps
+import graft.core.DriverRows
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.gf
@@ -17,6 +18,8 @@ import graft.gf
   *    search is replaced by the one-pass cell-bucketed kNN join.
   */
 object GridInterp {
+
+  private val log = org.apache.logging.log4j.LogManager.getLogger("graft.operators.GridInterp")
 
   /** Per-cell data metrics of a point set (gdalgrid "metrics" family). */
   def cellMetrics(points: DataFrame, lon: Column, lat: Column, value: Column,
@@ -136,27 +139,32 @@ object GridInterp {
       .select(col("qid"), coalesce(col("__v"), lit(noData)).as("nn_v"))
   }
 
-  /** Linear (Delaunay) interpolation (GDALGridLinear): up to `maxSamples`
-    * the sample set is triangulated ONCE (driver — the reference also
-    * holds every point in memory for its global triangulation) and the
-    * triangulation broadcast; queries interpolate barycentrically in
-    * parallel. Outside the hull → noData. Past `maxSamples` the call
-    * dispatches to [[linearDistributed]] — same results, no driver
-    * collection.
+  /** Linear (Delaunay) interpolation (GDALGridLinear). The selected
+    * samples are probed once with [[graft.core.DriverRows.fit]]. When they
+    * fit under the driver row limit they are triangulated ONCE on the
+    * driver (the reference also holds every point in memory for its global
+    * triangulation) and the triangulation is broadcast; queries
+    * interpolate barycentrically in parallel. Outside the hull → noData.
+    * Over the limit the call dispatches to [[linearDistributed]] — same
+    * results, no driver collection. Logs one `info` event naming the mode.
     */
   def linear(points: DataFrame, lon: Column, lat: Column, value: Column,
              queries: DataFrame, qid: Column, qlon: Column, qlat: Column,
-             noData: Double = 0.0, maxSamples: Long = 2000000L): DataFrame = {
+             noData: Double = 0.0): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
-    val nSamples = points.count()
-    if (nSamples > maxSamples)
-      // past driver capacity: grid-cell local triangulations with a
-      // circumcircle-containment proof of global-Delaunay equality
-      return linearDistributed(points, lon, lat, value,
-        queries, qid, qlon, qlat, noData)
-    val collected = points.select(lon.cast("double"), lat.cast("double"),
-      value.cast("double")).as[(Double, Double, Double)].collect()
+    val collected = DriverRows.fit(points.select(lon.cast("double"), lat.cast("double"),
+      value.cast("double")).as[(Double, Double, Double)]) match {
+      case Some(rows) =>
+        log.info(s"linear: driver mode, ${rows.length} samples")
+        rows
+      case None =>
+        log.info("linear: distributed mode, samples over the driver row limit")
+        // grid-cell local triangulations with a circumcircle-containment
+        // proof of global-Delaunay equality
+        return linearDistributed(points, lon, lat, value,
+          queries, qid, qlon, qlat, noData)
+    }
     // dedupe by (x, y) keeping the first value — duplicate coordinates
     // corrupt the Bowyer-Watson cavity (matching delaunayTriangulation's
     // .distinct hygiene)

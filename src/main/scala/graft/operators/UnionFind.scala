@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Ckpt.CkptOps
 
@@ -16,11 +16,10 @@ import graft.core.Ckpt.CkptOps
   *  - [[roots]]: the distributed kernel, for pair sets that do not (worst
   *    case ~width/2 pairs per strip seam on salt-and-pepper rasters).
   *
-  * Mode policy ([[driverPairs]]): a caller probes its pair Dataset with
-  * `take(limit + 1)`. Under the limit the pairs are already on the driver
-  * (one job, no extra shuffle — the common case); at the limit it goes
-  * distributed and the driver sees no pairs at all. The limit is the
-  * session conf [[DriverPairLimitKey]], default [[DefaultDriverPairLimit]].
+  * Callers choose the entry point with the engine's one mode probe,
+  * [[graft.core.DriverRows.fit]], over their pair Dataset: under the limit
+  * the pairs are already on the driver; at the limit the driver sees no
+  * pairs at all.
   *
   * Distributed algorithm: Shiloach–Vishkin-style hooking fused with
   * pointer doubling. Each round, along every edge (a, b) the label p(b) is
@@ -34,30 +33,6 @@ import graft.core.Ckpt.CkptOps
   * a shuffled-id 10⁴-vertex path and 100×100 grid under the default cap.
   */
 object UnionFind {
-
-  /** Above this many pairs the union-find moves off the driver.
-    * 4M pairs ≈ 64 MB driver-side — comfortably under default driver
-    * memory, far above anything a non-adversarial raster produces.
-    */
-  val DefaultDriverPairLimit: Long = 4000000L
-
-  /** Session-conf key overriding [[DefaultDriverPairLimit]]. */
-  val DriverPairLimitKey = "spark.graft.boundary.driverPairLimit"
-
-  /** The mode probe: every pair when they fit under the session's driver
-    * pair limit, None when the caller must use [[roots]]. The over-limit
-    * case recomputes `pairs`' lineage, so its inputs should be persisted.
-    */
-  def driverPairs[T](pairs: Dataset[T]): Option[Array[T]] = {
-    val limit = pairs.sparkSession.conf
-      .get(DriverPairLimitKey, DefaultDriverPairLimit.toString).toLong
-    // take(limit + 1), clamped BEFORE the +1 so a Long.MaxValue limit
-    // cannot wrap, and kept below Int.MaxValue for take(); a take() that
-    // fills the cap may be truncated, so it means "over the limit"
-    val cap = (math.min(math.max(limit, 0L), Int.MaxValue.toLong - 9L) + 1L).toInt
-    val taken = pairs.take(cap)
-    if (taken.length < cap) Some(taken) else None
-  }
 
   /** Driver twin of [[roots]]: same contract, serial union-find (union by
     * minimum root, path compression).

@@ -2,6 +2,7 @@ package graft.raster
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.core.Ckpt.CkptOps
+import graft.core.DriverRows
 import graft.operators.UnionFind
 
 /** Distributed strip-boundary component merge for the 2-phase connected-
@@ -15,8 +16,8 @@ import graft.operators.UnionFind
   * equivalence pairs found along it. The driver sees one id count per
   * strip and, in driver mode, those pairs — never pixel rows.
   *
-  * The union-find over the pairs follows the [[UnionFind]] mode policy:
-  *  - driver mode (pairs under the driver pair limit): the pairs are
+  * The union-find over the pairs takes the mode [[DriverRows.fit]] picks:
+  *  - driver mode (pairs under the driver row limit): the pairs are
   *    collected and resolved by `UnionFind.driverRoots`, and the roots map
   *    is broadcast;
   *  - distributed mode (over it: salt-and-pepper noise is ~width/2 pairs
@@ -165,7 +166,7 @@ object BoundaryMerge extends Serializable {
 
     // the side rows (halos, plus root rows in distributed mode) and the
     // broadcast roots map (empty in distributed mode)
-    val (side, rootsB, caches) = UnionFind.driverPairs(pairsDs) match {
+    val (side, rootsB, caches) = DriverRows.fit(pairsDs) match {
       case Some(pairs) =>
         lastDriverPairs = pairs.length.toLong
         log.info(s"merge: $n strips, driver mode, ${pairs.length} boundary pairs")

@@ -2,7 +2,7 @@ package graft.raster
 
 import graft.core.Ckpt.CkptOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import graft.core.{GLine, GeoTransform}
+import graft.core.{DriverRows, GLine, GeoTransform}
 import graft.operators.UnionFind
 import graft.raster.Dem.DStrip
 import scala.collection.mutable
@@ -294,7 +294,7 @@ object Contour extends Serializable {
 
     // key every chain by its component root: a broadcast map (driver mode)
     // or a join against the distributed roots
-    val keyed: Dataset[(Long, StripChain)] = UnionFind.driverPairs(pairsDs) match {
+    val keyed: Dataset[(Long, StripChain)] = DriverRows.fit(pairsDs) match {
       case Some(pairs) =>
         val rootB = spark.sparkContext.broadcast(UnionFind.driverRoots(pairs))
         chains.map { c => val k = pack(c); (rootB.value.getOrElse(k, k), c) }

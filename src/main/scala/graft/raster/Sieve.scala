@@ -1,6 +1,7 @@
 package graft.raster
 
 import graft.core.Ckpt.CkptOps
+import graft.core.DriverRows
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.raster.Overview.IStrip
 
@@ -174,7 +175,8 @@ object Sieve extends Serializable {
     *     groupBy, not a driver replay of the pair stream;
     *  E. distributed pointer-doubling over the small-polygon pointer graph;
     *  F. per-strip rewrite: the (global id → new value) table is broadcast
-    *     when small, else shipped per-strip via a shuffle join on stripIdx
+    *     when [[graft.core.DriverRows.fit]] finds it under the driver row
+    *     limit, else shipped per-strip via a shuffle join on stripIdx
     *     (salt-and-pepper noise makes #small ≈ pixels/2 — too big to
     *     materialize on the driver).
     *
@@ -182,8 +184,7 @@ object Sieve extends Serializable {
     * enumerator or depends on the union-find mode.
     */
   def sieve(spark: SparkSession, stripsIn: Dataset[IStrip], w: Int, h: Int,
-            threshold: Int, conn: Int,
-            bcastRewriteLimit: Long = 4000000L): Dataset[IStrip] = {
+            threshold: Int, conn: Int): Dataset[IStrip] = {
     import spark.implicits._
 
     // A: the one enumerator pass per strip, read by B's several jobs
@@ -299,20 +300,19 @@ object Sieve extends Serializable {
     f.unpersist()
 
     // F: per-strip rewrite. The resolved (gid → value) table is applied
-    // via broadcast when it fits, else via a shuffle join on stripIdx so
-    // it never materializes on the driver (salt-and-pepper noise makes
-    // #small components ≈ pixels/2).
-    val nRewrites = rewriteDF.count()
+    // via broadcast when it fits under the driver row limit, else via a
+    // shuffle join on stripIdx so it never materializes on the driver
+    // (salt-and-pepper noise makes #small components ≈ pixels/2).
+    val rewrites = DriverRows.fit(rewriteDF.as[(Long, Int)])
     val stop = if (active == 0) "resolved" else "on the non-shrinking (cycle) rule"
-    val broadcastRewrite = nRewrites <= bcastRewriteLimit
-    logger.info(s"sieve: pointer doubling took $ptrIter rounds and stopped $stop; " +
-      s"${if (broadcastRewrite) "broadcast" else "shuffle-join"} rewrite of $nRewrites components")
-    val out =
-      if (broadcastRewrite) {
-        val rw = rewriteDF.as[(Long, Int)].collect().toMap
-        val rewriteB = spark.sparkContext.broadcast(rw)
+    val rewrite = rewrites.fold("shuffle-join rewrite of components over the driver row limit")(
+      rw => s"broadcast rewrite of ${rw.length} components")
+    logger.info(s"sieve: pointer doubling took $ptrIter rounds and stopped $stop; $rewrite")
+    val out = rewrites match {
+      case Some(rw) =>
+        val rewriteB = spark.sparkContext.broadcast(rw.toMap)
         strips.map(s => rewriteStrip(s, w, rewriteB.value))
-      } else {
+      case None =>
         // per-strip (root gid) inventory → join with the rewrite table →
         // group the strip's own rewrite entries back to it
         val stripRoots = strips.flatMap(s => s.roots.distinct.iterator.map(r => (r, s.stripIdx)))
@@ -325,7 +325,7 @@ object Sieve extends Serializable {
             val rw: Map[Long, Int] = rIt.map(t => t._2 -> t._3).toMap
             sIt.map(s => rewriteStrip(s, w, rw))
           }
-      }
+    }
     // materialize before dropping the caches: `out`'s final rewrite pass
     // is lazy, and unpersisting first would recompute the whole input
     // lineage one more time

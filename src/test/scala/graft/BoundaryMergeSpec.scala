@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.DriverRows
 import graft.operators.UnionFind
 import graft.raster.{BoundaryMerge, Polygonize, RasterStrips, Sieve, StripScan}
 import graft.raster.Overview.IStrip
@@ -60,9 +61,13 @@ class BoundaryMergeSpec extends AnyFunSuite {
       val hh = math.min(3, H7 - y0)
       IStrip(i, y0, hh, W5, java.util.Arrays.copyOfRange(src, y0 * W5, (y0 + hh) * W5))
     }.toDS()
-    // bcastRewriteLimit = 0 forces the shuffle-join rewrite
-    val got = Sieve.sieve(spark, strips, W5, H7, 2, 4, bcastRewriteLimit = 0L)
-      .collect().sortBy(_.yOff).flatMap(_.vals)
+    // the fixture's 3 boundary pairs fit under a driver row limit of 6 and
+    // its 12 rewrites do not: driver union-find, shuffle-join rewrite
+    val (got, events) = logged(DriverRowLimit(6L) {
+      Sieve.sieve(spark, strips, W5, H7, 2, 4).collect().sortBy(_.yOff).flatMap(_.vals)
+    })
+    assert(events.contains("merge: 3 strips, driver mode, 3 boundary pairs"), events)
+    assert(events.exists(_.contains("; shuffle-join rewrite of ")), events)
     assert(got.toSeq === expect.toSeq)
   }
 
@@ -89,7 +94,7 @@ class BoundaryMergeSpec extends AnyFunSuite {
       assert(BoundaryMerge.lastDriverPairs === 3L * Wd) // one pair per column per seam
       assert(driverLog.contains(s"merge: 4 strips, driver mode, ${3 * Wd} boundary pairs"),
         driverLog)
-      spark.conf.set(UnionFind.DriverPairLimitKey, "0")
+      spark.conf.set(DriverRows.LimitKey, "0")
       try {
         val (viaDist, distLog) =
           logged(canon(RasterStrips.polygonize(spark, strips(), Wd, Hd, conn, gt)))
@@ -98,7 +103,7 @@ class BoundaryMergeSpec extends AnyFunSuite {
         assert(distLog.contains("merge: 4 strips, distributed mode"), distLog)
         assert(viaDist.length === Wd) // every column its own component
         assert(viaDist === viaDriver, s"conn=$conn")
-      } finally spark.conf.unset(UnionFind.DriverPairLimitKey)
+      } finally spark.conf.unset(DriverRows.LimitKey)
     }
   }
 
@@ -109,24 +114,23 @@ class BoundaryMergeSpec extends AnyFunSuite {
       val x = i % Wd
       if (x % 10 < 2) 7 else x % 10
     }
-    spark.conf.set(UnionFind.DriverPairLimitKey, "0")
-    try {
-      for (conn <- Seq(4, 8); bcastLimit <- Seq(0L, 4000000L)) {
-        val expect = Sieve.sieveLocal(vals, Wd, Hd, 10, conn)
-        val strips = (0 until 3).map { i =>
-          IStrip(i, i * 3, 3, Wd, java.util.Arrays.copyOfRange(vals, i * 3 * Wd, (i + 1) * 3 * Wd))
-        }.toDS()
-        val (got, events) = logged(
-          Sieve.sieve(spark, strips, Wd, Hd, 10, conn, bcastRewriteLimit = bcastLimit)
-            .collect().sortBy(_.yOff).flatMap(_.vals))
-        assert(BoundaryMerge.lastDriverPairs === 0L)
-        assert(events.contains("merge: 3 strips, distributed mode"), events)
-        val rewrite = if (bcastLimit == 0L) "shuffle-join" else "broadcast"
-        assert(events.exists(m => m.startsWith("sieve: pointer doubling took ") &&
-          m.contains(s"; $rewrite rewrite of ")), events)
-        assert(got.toSeq === expect.toSeq, s"conn=$conn bcastRewriteLimit=$bcastLimit")
-      }
-    } finally spark.conf.unset(UnionFind.DriverPairLimitKey)
+    // 900 boundary pairs and 400 rewrites: a driver row limit of 0 takes
+    // both distributed, one of 600 takes only the union-find distributed
+    for (conn <- Seq(4, 8); limit <- Seq(0L, 600L)) {
+      val expect = Sieve.sieveLocal(vals, Wd, Hd, 10, conn)
+      val strips = (0 until 3).map { i =>
+        IStrip(i, i * 3, 3, Wd, java.util.Arrays.copyOfRange(vals, i * 3 * Wd, (i + 1) * 3 * Wd))
+      }.toDS()
+      val (got, events) = logged(DriverRowLimit(limit) {
+        Sieve.sieve(spark, strips, Wd, Hd, 10, conn).collect().sortBy(_.yOff).flatMap(_.vals)
+      })
+      assert(BoundaryMerge.lastDriverPairs === 0L)
+      assert(events.contains("merge: 3 strips, distributed mode"), events)
+      val rewrite = if (limit == 0L) "shuffle-join" else "broadcast"
+      assert(events.exists(m => m.startsWith("sieve: pointer doubling took ") &&
+        m.contains(s"; $rewrite rewrite of ")), events)
+      assert(got.toSeq === expect.toSeq, s"conn=$conn driverRowLimit=$limit")
+    }
   }
 
   /** One row of regions of sizes 1..L with distinct values, then one of

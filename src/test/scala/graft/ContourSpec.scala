@@ -82,7 +82,7 @@ class ContourSpec extends AnyFunSuite {
     // second pass through the same layouts with the distributed seam
     // union-find forced (conf limit 0) — a many-level ripple crosses every
     // seam dozens of times, exercising pack/UnionFind/join-back
-    spark.conf.set(graft.operators.UnionFind.DriverPairLimitKey, "0")
+    spark.conf.set(graft.core.DriverRows.LimitKey, "0")
     try {
       val manyLevels = Seq(-5.0, 0.0, 5.0, 10.0, 15.0, 20.0)
       val strips = (0 until size by 7).zipWithIndex.map { case (y0, idx) =>
@@ -98,7 +98,7 @@ class ContourSpec extends AnyFunSuite {
         val l = canonChains(local(level))
         assert(d === l, s"distributed ripple level=$level: ${d.size} vs ${l.size} chains")
       }
-    } finally spark.conf.unset(graft.operators.UnionFind.DriverPairLimitKey)
+    } finally spark.conf.unset(graft.core.DriverRows.LimitKey)
 
     for ((field, name) <- Seq((vals, "plateau"), (ripple, "ripple")); stripH <- Seq(7, 37, 160)) {
       val strips = (0 until size by stripH).zipWithIndex.map { case (y0, idx) =>

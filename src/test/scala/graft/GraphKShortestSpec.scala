@@ -32,11 +32,28 @@ class GraphKShortestSpec extends AnyFunSuite {
   }
 
   test("cap dispatch degrades to the distributed search, same results") {
-    val viaCap = GraphOps.kShortestPaths(gridEdges, col("u"), col("v"), col("w"),
-      0L, 11L, 4, maxEdges = 1L).orderBy("rank").collect()
+    val viaCap = DriverRowLimit(1L) {
+      GraphOps.kShortestPaths(gridEdges, col("u"), col("v"), col("w"),
+        0L, 11L, 4).orderBy("rank").collect()
+    }
     val mem = GraphOps.kShortestPaths(gridEdges, col("u"), col("v"), col("w"),
       0L, 11L, 4).orderBy("rank").collect()
     assert(viaCap.map(_.toSeq).toSeq === mem.map(_.toSeq).toSeq)
+  }
+
+  test("kShortestPaths logs the mode the driver row limit picks") {
+    import spark.implicits._
+    val edges = Seq((0L, 1L, 1.0), (1L, 2L, 1.0), (0L, 2L, 3.0)).toDF("u", "v", "w")
+    def run() = LogCapture.logged("graft.operators.GraphOps") {
+      GraphOps.kShortestPaths(edges, col("u"), col("v"), col("w"), 0L, 2L, 2)
+        .orderBy("rank").collect().map(_.toSeq).toSeq
+    }
+    val (mem, memLog) = DriverRowLimit(3L)(run())
+    assert(memLog === Seq("kShortestPaths: driver mode, 3 edges"))
+    val (dist, distLog) = DriverRowLimit(2L)(run())
+    assert(distLog === Seq("kShortestPaths: distributed mode, edges over the driver row limit"))
+    assert(dist === mem)
+    assert(mem === Seq(Seq(1, 2.0, 2, "0-1-2"), Seq(2, 3.0, 1, "0-2")))
   }
 
   test("distributed Yen on a denser random digraph (distinct costs)") {

@@ -45,6 +45,26 @@ class GridLinearDistSpec extends AnyFunSuite {
     }
   }
 
+  test("linear logs the mode the driver row limit picks, same results") {
+    import spark.implicits._
+    val pts = (0 until 40).map { i =>
+      (unit(mix(i * 2 + 1)) * 10.0, unit(mix(i * 2 + 2)) * 10.0, i.toDouble)
+    }.toDF("x", "y", "z")
+    val qs = (0 until 9).map(i => (i.toLong, 2.0 + (i % 3) * 3.0, 2.0 + (i / 3) * 3.0))
+      .toDF("qid", "qx", "qy")
+    def run() = LogCapture.logged("graft.operators.GridInterp") {
+      GridInterp.linear(pts, col("x"), col("y"), col("z"),
+          qs, col("qid"), col("qx"), col("qy"), noData = -999.0)
+        .as[(Long, Double)].collect().toMap
+    }
+    val (global, driverLog) = DriverRowLimit(40L)(run())
+    assert(driverLog === Seq("linear: driver mode, 40 samples"))
+    val (dist, distLog) = DriverRowLimit(39L)(run())
+    assert(distLog === Seq("linear: distributed mode, samples over the driver row limit"))
+    assert(dist.keySet === global.keySet)
+    for ((k, v) <- global) assert(math.abs(dist(k) - v) < 1e-9, s"qid=$k")
+  }
+
   test("2.1M samples interpolate a plane exactly through the distributed path") {
     import spark.implicits._
     val n = 2100000L
@@ -60,11 +80,13 @@ class GridLinearDistSpec extends AnyFunSuite {
     val qs = (0 until 64).map { i =>
       (i.toLong, 100.0 + (i % 8) * 100.0 + 0.13, 100.0 + (i / 8) * 100.0 + 0.71)
     }.toDF("qid", "qx", "qy")
-    // via linear(): the count exceeds maxSamples → auto-dispatch to the
-    // distributed path (the old loud cap is gone)
-    val out = GridInterp.linear(pts, col("x"), col("y"), col("z"),
-        qs, col("qid"), col("qx"), col("qy"), noData = -999.0)
-      .as[(Long, Double)].collect()
+    // via linear(): the samples exceed a 2M driver row limit → auto-dispatch
+    // to the distributed path (the old loud cap is gone)
+    val out = DriverRowLimit(2000000L) {
+      GridInterp.linear(pts, col("x"), col("y"), col("z"),
+          qs, col("qid"), col("qx"), col("qy"), noData = -999.0)
+        .as[(Long, Double)].collect()
+    }
     assert(out.length === 64)
     out.foreach { case (id, v) =>
       val qx = 100.0 + (id % 8) * 100.0 + 0.13

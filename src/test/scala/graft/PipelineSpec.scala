@@ -284,6 +284,19 @@ class PipelineSpec extends AnyFunSuite {
     assert(code === 0, out)
   }
 
+  test("a refused batch-record rename fails the run instead of reporting the batch committed") {
+    val dir = Files.createTempDirectory("graft-pipe-refused-record").toString
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set(s"fs.${RefusedRecordFs.Scheme}.impl", classOf[RefusedRecordFs].getName)
+    val e = try intercept[java.io.IOException] {
+      Pipeline.run(spark, Pages.synth(spark, 1500L), zones,
+        Pipeline.Config(outDir = s"${RefusedRecordFs.Scheme}://$dir", nBatches = 2, nParts = 4))
+    } finally hconf.unset(s"fs.${RefusedRecordFs.Scheme}.impl")
+    assert(e.getMessage.endsWith(s"$dir/_lineage/batch-0.json"), e)
+    val records = new java.io.File(s"$dir/_lineage").list().filter(_.matches("batch-\\d+\\.json"))
+    assert(records.isEmpty, records.mkString(", "))
+  }
+
   /** Exit code and output of `tools/check_lineage.py` on `dir`; cancels the
     * test when python3 or pyarrow is missing.
     */
@@ -504,4 +517,19 @@ final class LostRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 object LostRenameFs {
   val Scheme = "lostrename"
   val lost = new java.util.concurrent.atomic.AtomicInteger
+}
+
+/** A local file system under the `refusedrecord:` scheme whose `rename`
+  * refuses every batch record (`batch-<b>.json`) and leaves nothing at the
+  * destination, as a file system that reports failure instead of throwing.
+  */
+final class RefusedRecordFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.Path
+  override def getUri: java.net.URI = java.net.URI.create(s"${RefusedRecordFs.Scheme}:///")
+  override def rename(src: Path, dst: Path): Boolean =
+    !dst.getName.matches("batch-\\d+\\.json") && super.rename(src, dst)
+}
+
+object RefusedRecordFs {
+  val Scheme = "refusedrecord"
 }

@@ -46,3 +46,16 @@ object LogCapture {
     }
   }
 }
+
+/** The engine's driver row limit, set for the session while a body runs. */
+object DriverRowLimit {
+
+  /** Run `body` with [[graft.core.DriverRows.LimitKey]] at `limit`, then
+    * unset it.
+    */
+  def apply[T](limit: Long)(body: => T): T = {
+    val conf = SparkTestBase.spark.conf
+    conf.set(graft.core.DriverRows.LimitKey, limit.toString)
+    try body finally conf.unset(graft.core.DriverRows.LimitKey)
+  }
+}
