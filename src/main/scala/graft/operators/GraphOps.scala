@@ -71,12 +71,12 @@ object GraphOps {
         kShortestPathsDistributed(edges, src, dst, weight, from, to, k)
       case Some(es) =>
         log.info(s"kShortestPaths: driver mode, ${es.length} edges")
+        // one adjacency per call; each spur skips its banned nodes and
+        // edges while relaxing. Each node keeps the edge order of `es`,
+        // which decides ties between equal-cost relaxations
+        val adj = es.groupBy(_._1)
         def dijkstra(banNodes: Set[Long], banEdges: Set[(Long, Long)],
                      s: Long): Option[Path] = {
-          val adj = es.iterator
-            .filter(e => !banNodes.contains(e._1) && !banNodes.contains(e._2) &&
-              !banEdges.contains((e._1, e._2)))
-            .toSeq.groupBy(_._1)
           val dist = scala.collection.mutable.HashMap[Long, Double](s -> 0.0)
           val prev = scala.collection.mutable.HashMap[Long, Long]()
           val done = scala.collection.mutable.HashSet[Long]()
@@ -87,12 +87,14 @@ object GraphOps {
             val (d, u) = pq.dequeue()
             if (!done.contains(u) && d <= dist.getOrElse(u, Double.MaxValue)) {
               done += u
-              adj.getOrElse(u, Seq.empty).foreach { case (_, v, w) =>
-                val nd = d + w
-                if (nd < dist.getOrElse(v, Double.MaxValue)) {
-                  dist(v) = nd; prev(v) = u
-                  pq.enqueue((nd, v))
-                }
+              if (!banNodes.contains(u)) adj.getOrElse(u, Array.empty[(Long, Long, Double)]).foreach {
+                case (_, v, w) if !banNodes.contains(v) && !banEdges.contains((u, v)) =>
+                  val nd = d + w
+                  if (nd < dist.getOrElse(v, Double.MaxValue)) {
+                    dist(v) = nd; prev(v) = u
+                    pq.enqueue((nd, v))
+                  }
+                case _ =>
               }
             }
           }

@@ -90,14 +90,24 @@ object SpatialJoin {
   def intersectsJoin(left: DataFrame, leftKey: Column, leftGeom: Column,
                      right: DataFrame, rightKey: Column, rightGeom: Column,
                      res: Int): DataFrame = {
+    candidatePairs(left, leftKey, leftGeom, right, rightKey, rightGeom, res)
+      .filter(gf.st_intersects(col("__lg"), col("__rg")))
+      .select(col("__lk").as("left_key"), col("__rk").as("right_key"))
+  }
+
+  /** Candidate pairs of a geometry-geometry join: every (left, right) key
+    * pair sharing a covering cell, once, as columns `__lk`, `__lg`, `__rk`,
+    * `__rg`.
+    */
+  private def candidatePairs(left: DataFrame, leftKey: Column, leftGeom: Column,
+                             right: DataFrame, rightKey: Column, rightGeom: Column,
+                             res: Int): DataFrame = {
     val l = left.select(leftKey.as("__lk"), leftGeom.as("__lg"))
       .withColumn("__lcell", explode(gf.cells_covering(col("__lg"), res)))
     val r = right.select(rightKey.as("__rk"), rightGeom.as("__rg"))
       .withColumn("__rcell", explode(gf.cells_covering(col("__rg"), res)))
     l.join(r, col("__lcell") === col("__rcell"))
       .dropDuplicates("__lk", "__rk")
-      .filter(gf.st_intersects(col("__lg"), col("__rg")))
-      .select(col("__lk").as("left_key"), col("__rk").as("right_key"))
   }
 
   /** Layer-algebra overlay join: like [[intersectsJoin]] but emits the
@@ -123,12 +133,7 @@ object SpatialJoin {
           "which disjoint pairs happen to share a cell — use eraseJoin " +
           "for the layer-level Erase/Difference")
     }
-    val l = left.select(leftKey.as("__lk"), leftGeom.as("__lg"))
-      .withColumn("__lcell", explode(gf.cells_covering(col("__lg"), res)))
-    val r = right.select(rightKey.as("__rk"), rightGeom.as("__rg"))
-      .withColumn("__rcell", explode(gf.cells_covering(col("__rg"), res)))
-    l.join(r, col("__lcell") === col("__rcell"))
-      .dropDuplicates("__lk", "__rk")
+    candidatePairs(left, leftKey, leftGeom, right, rightKey, rightGeom, res)
       .withColumn("wkb", opCol(col("__lg"), col("__rg")))
       .filter(col("wkb").isNotNull)
       .select(col("__lk").as("left_key"), col("__rk").as("right_key"), col("wkb"))
@@ -142,18 +147,14 @@ object SpatialJoin {
   def eraseJoin(left: DataFrame, leftKey: Column, leftGeom: Column,
                 right: DataFrame, rightKey: Column, rightGeom: Column,
                 res: Int): DataFrame = {
-    val l = left.select(leftKey.as("__lk"), leftGeom.as("__lg"))
-    val lc = l.withColumn("__lcell", explode(gf.cells_covering(col("__lg"), res)))
-    val r = right.select(rightKey.as("__rk"), rightGeom.as("__rg"))
-      .withColumn("__rcell", explode(gf.cells_covering(col("__rg"), res)))
     // aggregate the intersecting right geoms per left key, then fold the
     // difference in one expression pass (aggregate() over the collected
     // array keeps it declarative; the array per key is the small clip set)
-    val clipSets = lc.join(r, col("__lcell") === col("__rcell"))
-      .dropDuplicates("__lk", "__rk")
+    val clipSets = candidatePairs(left, leftKey, leftGeom, right, rightKey, rightGeom, res)
       .filter(gf.st_intersects(col("__lg"), col("__rg")))
       .groupBy(col("__lk")).agg(collect_list(col("__rg")).as("__clips"))
-    l.join(clipSets, Seq("__lk"), "left")
+    left.select(leftKey.as("__lk"), leftGeom.as("__lg"))
+      .join(clipSets, Seq("__lk"), "left")
       .withColumn("wkb",
         when(col("__clips").isNull, col("__lg"))
           .otherwise(aggregate(col("__clips"), col("__lg"),

@@ -17,11 +17,11 @@ import scala.collection.mutable
   * half a pixel).
   *
   * Distribution note: the marching-squares cell pass is strip-parallel
-  * (same halo-row pattern as [[Dem.apply3x3]]); chains stitch per strip
-  * and merge across strips by shared endpoints: chains are grouped by
-  * component root and stitched again. Unlike [[RasterStrips.polygonize]]
-  * Phase D, which replays unit edges in the sequential kernel's order,
-  * this stitches whole per-strip chains. The local kernel below is the
+  * (one halo row below each strip, from [[StripScan.halo]]); chains
+  * stitch per strip and merge across strips by shared endpoints: chains
+  * are grouped by component root and stitched again. Unlike
+  * [[RasterStrips.polygonize]] Phase D, which replays unit edges in the
+  * sequential kernel's order, this stitches whole per-strip chains. The local kernel below is the
   * per-strip unit.
   */
 object Contour extends Serializable {
@@ -225,23 +225,12 @@ object Contour extends Serializable {
     val fudgeAmt = (if (interval > 0) interval else 1.0) * Fudge
     val lvls = levels.toArray
 
-    // halo exchange: each strip's first row goes to the strip above
-    val withHalo = strips.flatMap { s =>
-      val parts = Seq.newBuilder[Dem.HaloPart]
-      parts += Dem.HaloPart(s.stripIdx, 0, s.stripIdx, s.yOff, s.height, s.vals)
-      if (s.stripIdx > 0)
-        parts += Dem.HaloPart(s.stripIdx - 1, 2, s.stripIdx, s.yOff, 1,
-          java.util.Arrays.copyOfRange(s.vals, 0, w))
-      parts.result()
-    }.groupByKey(_.dest)
-
-    // per-strip marching squares + local stitch
-    val chains: Dataset[StripChain] = withHalo.flatMapGroups { (_, it) =>
-      var strip: Dem.HaloPart = null
-      var below: Array[Double] = null
-      it.foreach { p => if (p.kind == 0) strip = p else if (p.kind == 2) below = p.vals }
-      if (strip == null) Iterator.empty
-      else lvls.iterator.flatMap { level =>
+    // per-strip marching squares (first row of the strip below as halo) +
+    // local stitch
+    val halo = StripScan.halo(strips, above = false, below = true)(_.stripIdx, _.height, Dem.row)
+    val chains: Dataset[StripChain] = halo.flatMap { case (strip, _, down) =>
+      val below = down.map(_.vals).orNull
+      lvls.iterator.flatMap { level =>
         val segs = stripSegments(strip.vals, w, strip.height, strip.yOff,
           below, h, level, fudgeAmt)
         stitch(segs).zipWithIndex.map { case (chain, i) =>

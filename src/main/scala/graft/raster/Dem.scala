@@ -13,25 +13,21 @@ import graft.core.GeoTransform
   *  - color-relief (`:930` GDALColorReliefGetRGBA: sorted LUT, linear
   *    interpolation with the 0.45 rounding bias, EXACT/NEAREST modes)
   *
-  * Distribution: strips + single-row halo exchange BY SHUFFLE — each strip
-  * flatMaps itself plus its first row (keyed to stripIdx−1) and last row
-  * (keyed to stripIdx+1); a groupByKey co-locates every strip with its two
-  * neighbor rows. One shuffle of the raster, no driver collect, no
-  * broadcast whose size scales with strip count. Image border pixels (no
-  * full 3×3 window) produce the dst nodata value, the reference default
-  * (`bComputeAtEdges == FALSE`).
+  * Distribution: strips with a one-row halo on both sides from
+  * [[StripScan.halo]] (one shuffle of the raster, no driver collect).
+  * Image border pixels (no full 3×3 window) produce the dst nodata value,
+  * the reference default (`bComputeAtEdges == FALSE`).
   */
 object Dem {
 
   /** One strip of double-valued pixels. */
   final case class DStrip(stripIdx: Int, yOff: Int, height: Int, vals: Array[Double])
 
-  /** Halo-exchange message: kind 0 = the strip itself, 1 = row arriving
-    * from the strip above (its last row), 2 = row from the strip below
-    * (its first row). `dest` is the receiving strip index.
-    */
-  final case class HaloPart(dest: Int, kind: Int, stripIdx: Int, yOff: Int,
-                            height: Int, vals: Array[Double])
+  /** Local row `r` of `s` as a one-row strip. */
+  private[raster] def row(s: DStrip, r: Int): DStrip = {
+    val w = s.vals.length / s.height
+    DStrip(s.stripIdx, s.yOff + r, 1, java.util.Arrays.copyOfRange(s.vals, r * w, (r + 1) * w))
+  }
 
   /** zt = Zevenbergen–Thorne gradient (2-neighbor; z factor /2 instead of
     * /8, GDALCreateHillshadeData `gdaldem_lib.cpp:623`).
@@ -192,58 +188,37 @@ object Dem {
     out
   }
 
-  /** Distributed 3×3 over strips with shuffled halo rows. */
+  /** Distributed 3×3 over strips with halo rows. */
   def apply3x3(spark: SparkSession, strips: Dataset[DStrip], w: Int, h: Int,
                dstNoData: Double, kernel: Kernel): Dataset[DStrip] = {
     import spark.implicits._
-    strips.flatMap { s =>
-      val parts = Seq.newBuilder[HaloPart]
-      parts += HaloPart(s.stripIdx, 0, s.stripIdx, s.yOff, s.height, s.vals)
-      if (s.stripIdx > 0)
-        parts += HaloPart(s.stripIdx - 1, 2, s.stripIdx, s.yOff, 1,
-          java.util.Arrays.copyOfRange(s.vals, 0, w))
-      parts += HaloPart(s.stripIdx + 1, 1, s.stripIdx, s.yOff + s.height - 1, 1,
-        java.util.Arrays.copyOfRange(s.vals, (s.height - 1) * w, s.height * w))
-      parts.result()
-    }
-      .groupByKey(_.dest)
-      .flatMapGroups { (_, it) =>
-        var strip: HaloPart = null
-        var above: Array[Double] = null
-        var below: Array[Double] = null
-        it.foreach { p =>
-          p.kind match {
-            case 0 => strip = p
-            case 1 => above = p.vals
-            case 2 => below = p.vals
-          }
-        }
-        if (strip == null) Iterator.empty // halo sent past the last strip
-        else {
-          val hh = strip.height
-          val vals = strip.vals
-          val out = Array.fill(w * hh)(dstNoData)
-          @inline def v(y: Int, x: Int): Double =
-            if (y == -1) above(x)
-            else if (y == hh) below(x)
-            else vals(y * w + x)
-          var y = 0
-          while (y < hh) {
-            val gy = strip.yOff + y
-            if (gy >= 1 && gy <= h - 2 && (y > 0 || above != null) && (y < hh - 1 || below != null)) {
-              var x = 1
-              while (x < w - 1) {
-                out(y * w + x) = kernel(
-                  v(y - 1, x - 1), v(y - 1, x), v(y - 1, x + 1),
-                  v(y, x - 1), v(y, x), v(y, x + 1),
-                  v(y + 1, x - 1), v(y + 1, x), v(y + 1, x + 1))
-                x += 1
-              }
+    StripScan.halo(strips, above = true, below = true)(_.stripIdx, _.height, row)
+      .map { case (strip, up, down) =>
+        val hh = strip.height
+        val vals = strip.vals
+        val above = up.map(_.vals).orNull
+        val below = down.map(_.vals).orNull
+        val out = Array.fill(w * hh)(dstNoData)
+        @inline def v(y: Int, x: Int): Double =
+          if (y == -1) above(x)
+          else if (y == hh) below(x)
+          else vals(y * w + x)
+        var y = 0
+        while (y < hh) {
+          val gy = strip.yOff + y
+          if (gy >= 1 && gy <= h - 2 && (y > 0 || above != null) && (y < hh - 1 || below != null)) {
+            var x = 1
+            while (x < w - 1) {
+              out(y * w + x) = kernel(
+                v(y - 1, x - 1), v(y - 1, x), v(y - 1, x + 1),
+                v(y, x - 1), v(y, x), v(y, x + 1),
+                v(y + 1, x - 1), v(y + 1, x), v(y + 1, x + 1))
+              x += 1
             }
-            y += 1
           }
-          Iterator.single(DStrip(strip.stripIdx, strip.yOff, hh, out))
+          y += 1
         }
+        DStrip(strip.stripIdx, strip.yOff, hh, out)
       }
   }
 

@@ -1,6 +1,5 @@
 package graft.raster
 
-import graft.core.Ckpt.CkptOps
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Fill-nodata — interpolate masked-out pixels from the nearest valid
@@ -17,9 +16,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * state is a pure function of the TRUE nearest valid pixel above/below
   * (the distance invalidation is monotone), so each strip only needs the
   * per-column (nearest-valid-row, value) of everything above and below
-  * it. Those are per-strip summaries (O(strips·width)), prefix/suffix
-  * combined — the quadrant search itself is row-local and embarrassingly
-  * parallel per strip.
+  * it. One [[StripScan.scan]] with the [[StripScan.Latest]] rule hands
+  * each strip those two rows from the per-strip first/last valid pixels;
+  * the quadrant search itself is row-local and embarrassingly parallel
+  * per strip.
   */
 object FillNodata {
 
@@ -145,11 +145,11 @@ object FillNodata {
     val maxSearchDist = if (maxSearchDist0 == 0.0) math.max(w, h) + 1.0 else maxSearchDist0
     val nMaxSearchDist = math.floor(maxSearchDist).toInt
 
-    // Phase A: per-strip per-column summaries, kept DISTRIBUTED. Each
-    // column's payload packs (row, floatBits(value)) into one Long: the
-    // down payload is the LAST valid pixel (propagates to later strips),
-    // the up payload the FIRST valid pixel (propagates to earlier strips).
-    val cols = strips.map { s =>
+    // Phase A: per-strip per-column summaries. Each column's payload packs
+    // (row, floatBits(value)) into one Long: the down payload is the LAST
+    // valid pixel (propagates to later strips), the up payload the FIRST
+    // valid pixel (propagates to earlier strips).
+    def edges(s: FStrip): StripScan.StripCols = {
       val first = Array.fill(w)(StripScan.Absent)
       val last = Array.fill(w)(StripScan.Absent)
       var r = 0
@@ -167,37 +167,28 @@ object FillNodata {
         }
         r += 1
       }
-      StripScan.StripCols(s.stripIdx, last, first)
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      StripScan.StripCols(last, first)
+    }
 
-    // Phase B: distributed prefix (nearest valid above) / suffix (nearest
-    // valid below) per column — two shuffles, nothing on the driver
-    val incoming = StripScan.scan(spark, cols, w).ckpt()
-    cols.unpersist(false)
-
-    // Phase C: per-strip materialization + quadrant interpolation (the
-    // incoming arrays arrive via cogroup on stripIdx)
-    strips.groupByKey(_.stripIdx)
-      .cogroup(incoming.groupByKey(_.stripIdx)) { (_, sIt, iIt) =>
-      val inc = if (iIt.hasNext) Some(iIt.next()) else None
-      sIt.map { s =>
+    // Phase B: nearest valid pixel above / below each strip per column
+    // ([[StripScan.scan]], nothing on the driver); Phase C: per-strip
+    // materialization + quadrant interpolation
+    StripScan.scan(strips, w, StripScan.Latest)(_.stripIdx, edges).map { case (s, in) =>
       val inAY = Array.fill(w)(-1); val inAV = new Array[Float](w)
       val inBY = Array.fill(w)(-1); val inBV = new Array[Float](w)
-      inc.foreach { in =>
-        var x = 0
-        while (x < w) {
-          val a = in.above(x)
-          if (a != StripScan.Absent) {
-            inAY(x) = (a >> 32).toInt
-            inAV(x) = java.lang.Float.intBitsToFloat(a.toInt)
-          }
-          val b = in.below(x)
-          if (b != StripScan.Absent) {
-            inBY(x) = (b >> 32).toInt
-            inBV(x) = java.lang.Float.intBitsToFloat(b.toInt)
-          }
-          x += 1
+      var x = 0
+      while (x < w) {
+        val a = in.above(x)
+        if (a != StripScan.Absent) {
+          inAY(x) = (a >> 32).toInt
+          inAV(x) = java.lang.Float.intBitsToFloat(a.toInt)
         }
+        val b = in.below(x)
+        if (b != StripScan.Absent) {
+          inBY(x) = (b >> 32).toInt
+          inBV(x) = java.lang.Float.intBitsToFloat(b.toInt)
+        }
+        x += 1
       }
       val hh = s.height
       // true nearest valid at-or-above each row (unchecked distance)
@@ -295,7 +286,6 @@ object FillNodata {
         r += 1
       }
       s.copy(vals = out)
-      }
     }
   }
 }

@@ -16,12 +16,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   * Distribution: the only cross-strip state is panLastLineCounts — and
   * because a column's count saturates at maxNonBlack+1 and never resets,
-  * the state entering strip k is simply `min(Σ_{i<k} F_i, max+1)` where
-  * F_i = that column's non-collar pixel count in strip i (clamped). Each
-  * pass is then: one flatMap for per-strip column summaries, a per-column
-  * clamped prefix sum (shuffle on column, chains are nStrips long), a
-  * regroup to per-strip incoming-count vectors, and an exact per-strip
-  * replay — no driver state at any width.
+  * the state entering strip k is `min(Σ F_i, max+1)` over the strips the
+  * pass has already crossed, where F_i = that column's non-collar pixel
+  * count in strip i (clamped). Each pass is one [[StripScan.scan]] with the
+  * [[StripScan.CappedSum]] rule (top-down reads `above`, bottom-up reads
+  * `below`) followed by an exact per-strip replay — no driver state at
+  * any width.
   */
 object NearBlack extends Serializable {
 
@@ -140,75 +140,40 @@ object NearBlack extends Serializable {
 
   /** Distributed nearblack over strips (both passes). */
   def apply(spark: SparkSession, strips: Dataset[NBStrip], w: Int, h: Int,
-            opts: Opts = Opts()): Dataset[NBStrip] = {
-    import spark.implicits._
-    val nStrips = strips.map(_.stripIdx).reduce(math.max) + 1
-    val afterDown = pass(spark, strips, w, nStrips, opts, bottomUp = false)
-    pass(spark, afterDown, w, nStrips, opts, bottomUp = true)
-  }
+            opts: Opts = Opts()): Dataset[NBStrip] =
+    pass(spark, pass(spark, strips, w, opts, bottomUp = false), w, opts, bottomUp = true)
 
-  /** One pass: per-column clamped prefix sums of non-collar counts feed an
-    * exact per-strip replay.
+  /** One pass: the per-column non-collar counts entering each strip (a
+    * saturating [[StripScan.scan]], read from `above` top-down and from
+    * `below` bottom-up) feed an exact per-strip replay.
     */
-  private def pass(spark: SparkSession, stripsIn: Dataset[NBStrip], w: Int,
-                   nStrips: Int, opts: Opts, bottomUp: Boolean): Dataset[NBStrip] = {
+  private def pass(spark: SparkSession, strips: Dataset[NBStrip], w: Int,
+                   opts: Opts, bottomUp: Boolean): Dataset[NBStrip] = {
     import spark.implicits._
-    val strips = stripsIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val optsV = opts
     val cap = opts.maxNonBlack + 1
-    val bu = bottomUp
-
     // per-strip per-column clamped non-collar counts (from pristine pass
     // input — vertical tests never see same-pass mutations of OTHER rows)
-    val sums = strips.flatMap { s =>
-      val colors = optsV.colorList(s.bands.length)
-      val f = new Array[Int](w)
+    def counts(s: NBStrip): StripScan.StripCols = {
+      val colors = opts.colorList(s.bands.length)
+      val f = new Array[Long](w)
       var r = 0
       while (r < s.height) {
         var c = 0
         while (c < w) {
-          if (f(c) < cap && isNonBlack(s.bands, r * w + c, colors, optsV.nearDist))
+          if (f(c) < cap && isNonBlack(s.bands, r * w + c, colors, opts.nearDist))
             f(c) += 1
           c += 1
         }
         r += 1
       }
-      (0 until w).iterator.filter(f(_) > 0).map(c => (c, s.stripIdx, f(c)))
+      StripScan.StripCols(f, f)
     }
-
-    // per-column clamped prefix sum in pass order → counts ENTERING each
-    // strip. Walk EVERY strip index in pass order (not just strips with a
-    // nonzero contribution in this column): once a column has accumulated
-    // count it must reach all later strips, including those whose own
-    // pixels are all collar-valued — the reference's counts never reset.
-    val nStripsV = nStrips
-    val incoming = sums.groupByKey(_._1).flatMapGroups { (c, it) =>
-      val fByStrip = it.map(t => (t._2, t._3)).toMap
-      val order = if (bu) (nStripsV - 1) to 0 by -1 else 0 until nStripsV
-      var acc = 0
-      val out = Vector.newBuilder[(Int, Int, Int)] // (stripIdx, col, incoming)
-      order.foreach { st =>
-        if (acc > 0) out += ((st, c, acc))
-        acc = math.min(cap, acc + fByStrip.getOrElse(st, 0))
+    StripScan.scan(strips, w, StripScan.CappedSum(cap))(_.stripIdx, counts)
+      .map { case (s, in) =>
+        val entering = (if (bottomUp) in.below else in.above).map(_.toInt)
+        val bands = s.bands.map(_.clone())
+        processStrip(bands, w, s.height, entering, opts, opts.colorList(bands.length), bottomUp)
+        NBStrip(s.stripIdx, s.yOff, s.height, bands)
       }
-      out.result().iterator
-    }
-
-    val res = strips.groupByKey(_.stripIdx)
-      .cogroup(incoming.groupByKey(_._1)) { (_, sIt, cIt) =>
-        val counts = new Array[Int](w)
-        cIt.foreach { case (_, col, v) => counts(col) = v }
-        sIt.map { s =>
-          val bands = s.bands.map(_.clone())
-          val colors = optsV.colorList(bands.length)
-          processStrip(bands, w, s.height, counts, optsV, colors, bottomUp = bu)
-          NBStrip(s.stripIdx, s.yOff, s.height, bands)
-        }
-      }
-    // materialize, then release the pass-input cache (two full raster
-    // copies would otherwise stay pinned per apply() call)
-    val out = graft.core.Ckpt(res)
-    strips.unpersist(false)
-    out
   }
 }

@@ -20,6 +20,11 @@ object Overview {
 
   final case class IStrip(stripIdx: Int, yOff: Int, height: Int, width: Int, vals: Array[Int])
 
+  /** Local row `r` of `s` as a one-row strip. */
+  private[raster] def row(s: IStrip, r: Int): IStrip =
+    IStrip(s.stripIdx, s.yOff + r, 1, s.width,
+      java.util.Arrays.copyOfRange(s.vals, r * s.width, (r + 1) * s.width))
+
   sealed trait Resampler
   case object Average extends Resampler
   case object Nearest extends Resampler
@@ -236,20 +241,10 @@ object Overview {
     */
   def levelGauss(spark: SparkSession, strips: Dataset[IStrip], w: Int, h: Int): Dataset[IStrip] = {
     import spark.implicits._
-    strips.flatMap { s =>
-      val parts = Seq.newBuilder[(Int, Int, IStrip)]
-      parts += ((s.stripIdx, 0, s))
-      if (s.stripIdx > 0 && s.height >= 1)
-        parts += ((s.stripIdx - 1, 2, IStrip(s.stripIdx, s.yOff, 1, w,
-          java.util.Arrays.copyOfRange(s.vals, 0, w))))
-      parts.result()
-    }.groupByKey(_._1).flatMapGroups { (_, it) =>
-      var strip: IStrip = null
-      var below: Array[Int] = null
-      it.foreach { case (_, kind, p) => if (kind == 0) strip = p else below = p.vals }
-      if (strip == null) Iterator.empty
-      else {
+    StripScan.halo(strips, above = false, below = true)(_.stripIdx, _.height, row)
+      .map { case (strip, _, down) =>
         require(strip.yOff % 2 == 0, s"strip yOff ${strip.yOff} not 2-aligned")
+        val below = down.map(_.vals).orNull
         val ow = (w + 1) / 2
         val oh = (strip.height + 1) / 2
         val weights = Array(1, 2, 1)
@@ -284,9 +279,8 @@ object Overview {
           }
           oy += 1
         }
-        Iterator.single(IStrip(strip.stripIdx, strip.yOff / 2, oh, ow, out))
+        IStrip(strip.stripIdx, strip.yOff / 2, oh, ow, out)
       }
-    }
   }
 
   /** Convolution 2× level: delegates to the warp kernel family with a

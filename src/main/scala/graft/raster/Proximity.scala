@@ -1,6 +1,5 @@
 package graft.raster
 
-import graft.core.Ckpt.CkptOps
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.raster.Overview.IStrip
 import graft.raster.Dem.DStrip
@@ -18,10 +17,10 @@ import graft.raster.Dem.DStrip
   *  1. vertical phase — per column, the nearest target row above/below
   *     each pixel. Within a strip this is two linear scans; across strips
   *     only the per-column min/max target row of each strip is exchanged,
-  *     prefix/suffix-combined in a distributed column-block scan
-  *     ([[StripScan]] — two shuffles, nothing on the driver). No target
-  *     pixel list is ever collected: a raster whose target class covers
-  *     half its pixels costs the same coordination as a sparse one.
+  *     by one [[StripScan.scan]] with the [[StripScan.Latest]] rule
+  *     (nothing on the driver). No target pixel list is ever collected: a
+  *     raster whose target class covers half its pixels costs the same
+  *     coordination as a sparse one.
   *  2. horizontal phase — per row, the 1D lower-envelope-of-parabolas
   *     pass (Felzenszwalb–Huttenlocher) over the squared vertical
   *     distances. Entirely row-local, embarrassingly parallel per strip.
@@ -170,10 +169,13 @@ object Proximity {
                 noData: Double = 65535.0, pixelDist: Double = 1.0): Dataset[DStrip] = {
     import spark.implicits._
 
-    // Phase A: per-strip per-column target-row extremes, kept DISTRIBUTED
-    // (down payload = max target row, propagates to later strips; up
-    // payload = min target row, propagates to earlier strips)
-    val cols = strips.map { s =>
+    // Phase A: per-strip per-column target-row extremes (down payload =
+    // max target row, propagates to later strips; up payload = min target
+    // row, propagates to earlier strips). A raster with zero target pixels
+    // is valid input to GDALComputeProximity (and to proximityExact): every
+    // vertical distance stays Big, the maxDist cap turns it into noData,
+    // and the output is the all-noData raster the reference produces
+    def extremes(s: IStrip): StripScan.StripCols = {
       val mn = Array.fill(w)(StripScan.Absent)
       val mx = Array.fill(w)(StripScan.Absent)
       var r = 0
@@ -189,29 +191,15 @@ object Proximity {
         }
         r += 1
       }
-      StripScan.StripCols(s.stripIdx, mx, mn)
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cols.count() // materialize the cache
-    // no require on target presence: a raster with zero target pixels is
-    // valid input to GDALComputeProximity (and to proximityExact) — every
-    // vertical distance stays Big, the maxDist cap turns it into noData,
-    // and the output is the all-noData raster the reference produces
+      StripScan.StripCols(mx, mn)
+    }
 
-    // distributed prefix/suffix scan: nearest target row strictly
-    // above/below each strip, per column — never on the driver
-    // (materialized eagerly so the cols cache can be dropped)
-    val incoming = StripScan.scan(spark, cols, w).ckpt()
-    cols.unpersist(false)
-
-    // Phase B: per-strip vertical scans + row-local 1D EDT
-    val result = strips.groupByKey(_.stripIdx)
-      .cogroup(incoming.groupByKey(_.stripIdx)) { (_, sIt, iIt) =>
-      val inc = if (iIt.hasNext) Some(iIt.next()) else None
-      sIt.map { s =>
-      val above = inc.map(_.above.map(v => if (v == StripScan.Absent) -1 else v.toInt))
-        .getOrElse(Array.fill(w)(-1))
-      val below = inc.map(_.below.map(v => if (v == StripScan.Absent) -1 else v.toInt))
-        .getOrElse(Array.fill(w)(-1))
+    // Phase B: nearest target row strictly above/below each strip per
+    // column ([[StripScan.scan]], never on the driver), then per-strip
+    // vertical scans + row-local 1D EDT
+    StripScan.scan(strips, w, StripScan.Latest)(_.stripIdx, extremes).map { case (s, in) =>
+      val above = in.above.map(v => if (v == StripScan.Absent) -1 else v.toInt)
+      val below = in.below.map(v => if (v == StripScan.Absent) -1 else v.toInt)
       val hh = s.height
       val dvert2 = new Array[Double](w * hh) // squared vertical distance
       // downward scan: nearest target at or above each pixel
@@ -263,8 +251,6 @@ object Proximity {
         r += 1
       }
       DStrip(s.stripIdx, s.yOff, hh, out)
-      }
     }
-    result
   }
 }

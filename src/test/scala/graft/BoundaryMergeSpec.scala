@@ -237,8 +237,9 @@ class BoundaryMergeSpec extends AnyFunSuite {
     val payload = Array.tabulate(n, w) { (_, _) =>
       if (rnd.nextDouble() < 0.3) rnd.nextInt(1 << 20).toLong else StripScan.Absent
     }
-    val cols = (0 until n).map(i => StripScan.StripCols(i, payload(i), payload(i))).toDS()
-    val got = StripScan.scan(spark, cols, w).collect().sortBy(_.stripIdx)
+    val strips = (0 until n).map(i => (i, payload(i))).toDS()
+    val got = StripScan.scan(strips, w, StripScan.Latest)(_._1, s => StripScan.StripCols(s._2, s._2))
+      .collect().sortBy(_._1._1).map(_._2)
     assert(got.length === n)
     // serial reference
     val run = Array.fill(w)(StripScan.Absent)
@@ -250,6 +251,27 @@ class BoundaryMergeSpec extends AnyFunSuite {
     for (k <- n - 1 to 0 by -1) {
       assert(got(k).below.toSeq === run.toSeq, s"below strip $k")
       for (x <- 0 until w) if (payload(k)(x) != StripScan.Absent) run(x) = payload(k)(x)
+    }
+  }
+
+  test("StripScan capped sum matches a serial saturating count") {
+    val w = 300
+    val n = 9
+    val cap = 5L
+    val rnd = new scala.util.Random(7)
+    val counts = Array.tabulate(n, w)((_, _) => rnd.nextInt(3).toLong)
+    val strips = (0 until n).map(i => (i, counts(i))).toDS()
+    val got = StripScan.scan(strips, w, StripScan.CappedSum(cap))(_._1, s => StripScan.StripCols(s._2, s._2))
+      .collect().sortBy(_._1._1).map(_._2)
+    val run = new Array[Long](w)
+    for (k <- 0 until n) {
+      assert(got(k).above.toSeq === run.toSeq, s"above strip $k")
+      for (x <- 0 until w) run(x) = math.min(cap, run(x) + counts(k)(x))
+    }
+    java.util.Arrays.fill(run, 0L)
+    for (k <- n - 1 to 0 by -1) {
+      assert(got(k).below.toSeq === run.toSeq, s"below strip $k")
+      for (x <- 0 until w) run(x) = math.min(cap, run(x) + counts(k)(x))
     }
   }
 }

@@ -100,7 +100,7 @@ class ContourSpec extends AnyFunSuite {
       }
     } finally spark.conf.unset(graft.core.DriverRows.LimitKey)
 
-    for ((field, name) <- Seq((vals, "plateau"), (ripple, "ripple")); stripH <- Seq(7, 37, 160)) {
+    for ((field, name) <- Seq((vals, "plateau"), (ripple, "ripple")); stripH <- Seq(1, 7, 37, 160)) {
       val strips = (0 until size by stripH).zipWithIndex.map { case (y0, idx) =>
         val hh = math.min(stripH, size - y0)
         graft.raster.Dem.DStrip(idx, y0, hh,

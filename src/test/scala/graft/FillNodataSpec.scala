@@ -58,7 +58,7 @@ class FillNodataSpec extends AnyFunSuite {
       val r = (i * 0x9e3779b97f4a7c15L >>> 32) & 0xff
       r > 80 // ~30% holes
     }
-    for (maxDist <- Seq(0.0, 3.0); stripH <- Seq(4, 11, 31)) {
+    for (maxDist <- Seq(0.0, 3.0); stripH <- Seq(1, 4, 11, 31)) {
       val local = FillNodata.fill(vals.clone(), valid, w, h, maxDist)
       val strips = (0 until h by stripH).zipWithIndex.map { case (y0, idx) =>
         val hh = math.min(stripH, h - y0)

@@ -33,7 +33,7 @@ class NearBlackSpec extends AnyFunSuite {
 
   test("distributed equals the serial port across strip layouts and band counts") {
     for (nBands <- Seq(1, 3); opts <- Seq(Opts(), Opts(nearDist = 5, maxNonBlack = 0));
-         stripH <- Seq(3, 8, 22)) {
+         stripH <- Seq(1, 3, 8, 22)) {
       val bands = fixture(nBands)
       val expect = NearBlack.local(bands, W, H, opts)
       val got = NearBlack(spark, toStrips(bands, stripH), W, H, opts)
