@@ -834,14 +834,14 @@ object SparkEntry {
       }
       val strips = (0 until h by 5).zipWithIndex.map { case (y0, idx) =>
         val hh = math.min(5, h - y0)
-        graft.raster.NearBlack.NBStrip(idx, y0, hh,
-          Array(Array.tabulate(hh * w)(i => srcV(i % w, y0 + i / w))))
+        graft.raster.Overview.IStrip(idx, y0, hh, w,
+          Array.tabulate(hh * w)(i => srcV(i % w, y0 + i / w)))
       }.toDS()
       graft.raster.NearBlack(s, strips, w, h,
           graft.raster.NearBlack.Opts(nearDist = 15, maxNonBlack = 2))
         .flatMap { st =>
           for (y <- 0 until st.height; x <- 0 until w)
-            yield (x, st.yOff + y, st.bands(0)(y * w + x))
+            yield (x, st.yOff + y, st.vals(y * w + x))
         }.toDF("x", "y", "v")
     }),
     "q_rat" -> ((s, d) => {
@@ -1319,19 +1319,22 @@ object SparkEntry {
       // AVERAGE_MAGPHASE complex overview, oracled against an independent
       // Python float32 port of overview.cpp:1867 (pinned VALUES)
       val w = 8; val h = 4
-      val re = Array.tabulate(w * h)(i => (((i % w) * 37 % 23) - 11).toFloat / 3f)
-      val im = Array.tabulate(w * h)(i => ((((i % w) * 53 + (i / w) * 29) % 19) - 9).toFloat / 4f)
+      val re = Array.tabulate(w * h)(i => ((((i % w) * 37 % 23) - 11).toFloat / 3f).toDouble)
+      val im = Array.tabulate(w * h)(i =>
+        (((((i % w) * 53 + (i / w) * 29) % 19) - 9).toFloat / 4f).toDouble)
       val strips = (0 until h by 2).zipWithIndex.map { case (y0, idx) =>
-        graft.raster.Overview.CStrip(idx, y0, 2, w,
-          java.util.Arrays.copyOfRange(re, y0 * w, (y0 + 2) * w),
-          java.util.Arrays.copyOfRange(im, y0 * w, (y0 + 2) * w))
+        graft.raster.Dem.DStrip(idx, y0, 2,
+          java.util.Arrays.copyOfRange(re, y0 * w, (y0 + 2) * w) ++
+            java.util.Arrays.copyOfRange(im, y0 * w, (y0 + 2) * w), bands = 2)
       }.toDS()
       graft.raster.Overview.levelComplexMagPhase(strips)
         .flatMap { st =>
-          for (r <- 0 until st.height; c <- 0 until st.width)
+          val plane = st.vals.length / 2
+          val sw = plane / st.height
+          for (r <- 0 until st.height; c <- 0 until sw)
             yield (c, st.yOff + r,
-              math.rint(st.re(r * st.width + c) * 1e4) / 1e4,
-              math.rint(st.im(r * st.width + c) * 1e4) / 1e4)
+              math.rint(st.vals(r * sw + c) * 1e4) / 1e4,
+              math.rint(st.vals(plane + r * sw + c) * 1e4) / 1e4)
         }.toDF("x", "y", "re_r", "im_r")
     }),
 
@@ -1352,9 +1355,9 @@ object SparkEntry {
         (((i % w) * 13 + (i / w) * 29) % 19 * -2.25f + 3.0f).toDouble)
       val strips = (0 until h by stripH).zipWithIndex.map { case (y0, idx) =>
         val hh = math.min(stripH, h - y0)
-        CPlane(idx, y0, hh, w,
-          java.util.Arrays.copyOfRange(re, y0 * w, (y0 + hh) * w),
-          java.util.Arrays.copyOfRange(im, y0 * w, (y0 + hh) * w))
+        graft.raster.Dem.DStrip(idx, y0, hh,
+          java.util.Arrays.copyOfRange(re, y0 * w, (y0 + hh) * w) ++
+            java.util.Arrays.copyOfRange(im, y0 * w, (y0 + hh) * w), bands = 2)
       }.toDS().persist()
       val csF32 = ComplexPixels.checksum(strips, TCFloat32)
       val asCInt16 = ComplexPixels.convert(strips, TCFloat32, TCInt16)
@@ -1485,10 +1488,10 @@ object SparkEntry {
       val fx = graft.fixtures.RasterFixtures
       val strips = (0 until 50 by 9).zipWithIndex.map { case (y0, idx) =>
         val hh = math.min(9, 50 - y0)
-        graft.raster.Palette.RGBStrip(idx, y0, hh,
+        graft.raster.Overview.IStrip(idx, y0, hh, 50, Array.concat(
           java.util.Arrays.copyOfRange(fx.rgbSmallRed, y0 * 50, (y0 + hh) * 50),
           java.util.Arrays.copyOfRange(fx.rgbSmallGreen, y0 * 50, (y0 + hh) * 50),
-          java.util.Arrays.copyOfRange(fx.rgbSmallBlue, y0 * 50, (y0 + hh) * 50))
+          java.util.Arrays.copyOfRange(fx.rgbSmallBlue, y0 * 50, (y0 + hh) * 50)), bands = 3)
       }.toDS().localCheckpoint(true)
       val ct = graft.raster.Palette.medianCutStrips(strips, 8)
       val idx = graft.raster.Palette.ditherStripsStreamed(strips, ct)
@@ -1503,14 +1506,14 @@ object SparkEntry {
       import s.implicits._
       val w = Array(0.25, 0.75)
       val strips = (0 until 4).map { st =>
-        graft.raster.Pansharpen.MultiStrip(st, st * 2, 2,
+        graft.raster.Dem.DStrip(st, st * 2, 2, Array.concat(
           Array.tabulate(20)(i => 50.0 + st + i),
-          Array(Array.tabulate(20)(i => 10.0 + i), Array.tabulate(20)(i => 30.0 + i)))
+          Array.tabulate(20)(i => 10.0 + i), Array.tabulate(20)(i => 30.0 + i)), bands = 3)
       }.toDS()
       graft.raster.Pansharpen.brovey(strips, w)
         .flatMap { st =>
-          st.spectral.iterator.zipWithIndex.flatMap { case (band, bi) =>
-            band.iterator.zipWithIndex.map { case (v, i) => (st.stripIdx, bi + 1, i, v) }
+          (1 until st.bands).iterator.flatMap { b =>
+            st.band(b).iterator.zipWithIndex.map { case (v, i) => (st.stripIdx, b, i, v) }
           }
         }.toDF("strip", "band", "px", "v")
         .select(col("strip"), col("band"), col("px"), round(col("v"), 6).as("v_r"))

@@ -54,7 +54,9 @@ object GraphOps {
     * under the driver row limit, and each spur search is a local Dijkstra.
     * Over the limit the call dispatches to [[kShortestPathsDistributed]]:
     * the same Yen loop and pricing, edges never leave the executors. Logs
-    * one `info` event naming the mode.
+    * one `info` event naming the mode. A negative or NaN weight (a null
+    * weight reads as NaN) throws an `IllegalArgumentException` naming the
+    * edge, in either mode.
     *
     * @return (rank, cost, n_hops, path) rows, rank 1..k by ascending cost
     *         (ties by lexicographic vertex path, a deterministic stand-in
@@ -64,13 +66,15 @@ object GraphOps {
                      from: Long, to: Long, k: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    DriverRows.fit(edges.select(src.cast("long"), dst.cast("long"), weight.cast("double"))
-      .as[(Long, Long, Double)]) match {
+    DriverRows.fit(weighted(edges, src, dst, weight).as[(Long, Long, Double)]) match {
       case None =>
         log.info("kShortestPaths: distributed mode, edges over the driver row limit")
         kShortestPathsDistributed(edges, src, dst, weight, from, to, k)
       case Some(es) =>
         log.info(s"kShortestPaths: driver mode, ${es.length} edges")
+        es.find(e => e._3.isNaN || e._3 < 0).foreach { case (u, v, w) =>
+          badWeight("kShortestPaths", u, v, w)
+        }
         // one adjacency per call; each spur skips its banned nodes and
         // edges while relaxing. Each node keeps the edge order of `es`,
         // which decides ties between equal-cost relaxations
@@ -143,14 +147,18 @@ object GraphOps {
     * optimal continuation needs, the spur result can be cost-suboptimal;
     * weights in general position (distinct path sums) give the exact
     * result.
+    *
+    * Each spur relaxation runs until no (cost, hops, path) struct strictly
+    * falls. It ends: a vertex's struct only falls, and it ranges over the
+    * finitely many loopless paths. Weights are checked as in
+    * [[kShortestPaths]].
     */
   def kShortestPathsDistributed(edges: DataFrame, src: Column, dst: Column,
-                                weight: Column, from: Long, to: Long, k: Int,
-                                maxIter: Int = 50): DataFrame = {
+                                weight: Column, from: Long, to: Long, k: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(src.cast("long").as("u"), dst.cast("long").as("v"),
-      weight.cast("double").as("w")).cache()
+    val e = weighted(edges, src, dst, weight).cache()
+    requireWeights("kShortestPathsDistributed", e)
 
     /** Batched multi-source loopless SSSP: for each spur, the best path
       * from its spur node to `to` avoiding its banned nodes/edges.
@@ -164,9 +172,8 @@ object GraphOps {
         .withColumn("cost", lit(0.0))
         .withColumn("path", array(col("vertex")))
         .ckpt()
-      var iter = 0
       var converged = false
-      while (!converged && iter < maxIter) {
+      while (!converged) {
         val msgs = dist.join(e, dist("vertex") === e("u"))
           .join(banEDf, col("spur") === col("espur") &&
             col("u") === col("bu") && col("v") === col("bv"), "left_anti")
@@ -196,16 +203,7 @@ object GraphOps {
           .isEmpty
         dist.unpersist() // free the previous round's checkpoint blocks
         dist = newDist
-        iter += 1
       }
-      // maxIter is a safety valve, not a truncation policy: returning the
-      // partial dist would silently yield suboptimal/missing paths on
-      // graphs whose shortest paths exceed maxIter hops (exactly the
-      // long-path networks this scale path exists for)
-      if (!converged) throw new IllegalStateException(
-        s"kShortestPathsDistributed: spur relaxation did not converge in " +
-          s"$maxIter rounds — a shortest path likely exceeds $maxIter hops; " +
-          "raise maxIter")
       dist.filter(col("vertex") === to)
         .select(col("spur"), col("path"))
         .as[(Int, Seq[Long])].collect()
@@ -226,6 +224,25 @@ object GraphOps {
 
     try yen(spark, from, k, ssspBatch, edgeWeights) finally e.unpersist()
   }
+
+  /** `(u, v, w)` edge columns, the weight as a double with null read as NaN. */
+  private def weighted(edges: DataFrame, src: Column, dst: Column, weight: Column): DataFrame =
+    edges.select(src.cast("long").as("u"), dst.cast("long").as("v"),
+      coalesce(weight.cast("double"), lit(Double.NaN)).as("w"))
+
+  /** Throws [[badWeight]] for the first edge of the cached `e` (see
+    * [[weighted]]) whose weight is negative or NaN, unpersisting `e` first.
+    */
+  private def requireWeights(op: String, e: DataFrame): Unit =
+    e.filter(isnan(col("w")) || col("w") < 0).take(1).foreach { r =>
+      e.unpersist()
+      badWeight(op, r.getLong(0), r.getLong(1), r.getDouble(2))
+    }
+
+  /** The shortest-path searches are exact only on non-negative weights. */
+  private def badWeight(op: String, u: Long, v: Long, w: Double): Nothing =
+    throw new IllegalArgumentException(
+      s"$op: edge $u -> $v has weight $w; weights must be non-negative (null reads as NaN)")
 
   /** Yen's loop, shared by both K-shortest variants: the accepted list A,
     * the candidate pool B sorted by (cost, path), and the ban sets of each
@@ -273,22 +290,25 @@ object GraphOps {
   }
 
   /** Single-source shortest paths by iterative relaxation (distributed
-    * Bellman-Ford; equals Dijkstra's result on non-negative weights).
+    * Bellman-Ford; equals Dijkstra's result on non-negative weights). It
+    * relaxes until no distance falls, which takes at most one round more
+    * than the most hops on any shortest path (at most V rounds).
     *
     * @param edges (src, dst, weight ≥ 0); treated as directed — pass the
-    *              symmetric closure for undirected networks
+    *              symmetric closure for undirected networks. A negative or
+    *              NaN weight (null reads as NaN) throws an
+    *              `IllegalArgumentException` naming the edge.
     * @return (vertex, dist) for reachable vertices
     */
   def shortestPaths(edges: DataFrame, src: Column, dst: Column, weight: Column,
-                    sourceId: Long, maxIter: Int = 50): DataFrame = {
+                    sourceId: Long): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(src.cast("long").as("u"), dst.cast("long").as("v"),
-      weight.cast("double").as("w")).cache()
+    val e = weighted(edges, src, dst, weight).cache()
+    requireWeights("shortestPaths", e)
     var dist = Seq((sourceId, 0.0)).toDF("vertex", "dist")
-    var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) {
+    while (!converged) {
       val relaxed = dist.join(e, dist("vertex") === e("u"))
         .select(col("v").as("vertex"), (col("dist") + col("w")).as("dist"))
       val newDist = dist.union(relaxed)
@@ -297,19 +317,15 @@ object GraphOps {
       // converged iff no vertex appeared or improved — an exact,
       // shuffle-order-insensitive test (float-sum equality is not: Spark
       // sums doubles in partition order, so equal sets can compare unequal
-      // and burn iterations to maxIter)
+      // and never settle)
       converged = newDist.as("n")
         .join(dist.as("o"), col("n.vertex") === col("o.vertex"), "left")
         .filter(col("o.dist").isNull || col("n.dist") < col("o.dist"))
         .isEmpty
       dist.unpersist()
       dist = newDist
-      iter += 1
     }
     e.unpersist()
-    if (!converged) throw new IllegalStateException(
-      s"shortestPaths: relaxation did not converge in $maxIter rounds — " +
-        s"a shortest path likely exceeds $maxIter hops; raise maxIter")
     dist
   }
 }

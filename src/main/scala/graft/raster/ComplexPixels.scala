@@ -1,6 +1,7 @@
 package graft.raster
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
+import graft.raster.Dem.DStrip
 
 /** Complex pixel family (CInt16/CInt32/CFloat32/CFloat64,
   * `/root/reference/gdal/gcore/gdal.h:66-69`) end-to-end through
@@ -24,7 +25,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    (`alg/gdalchecksum.cpp:92,:150` nCount = 2*nXSize).
   *
   * Values are carried as Double planes (GDAL converts through double for
-  * mixed-type RasterIO); the [[PixType]] tags decide quantization.
+  * mixed-type RasterIO); the [[PixType]] tags decide quantization. A strip
+  * is a [[Dem.DStrip]] with `bands = 1` (real: band 0) or `bands = 2`
+  * (complex: band 0 re, band 1 im).
   */
 object ComplexPixels {
 
@@ -39,10 +42,6 @@ object ComplexPixels {
   case object TCInt32 extends PixType(true, false)
   case object TCFloat32 extends PixType(true, true)
   case object TCFloat64 extends PixType(true, true)
-
-  /** One strip of complex (or real, im = null) pixels as Double planes. */
-  final case class CPlane(stripIdx: Int, yOff: Int, height: Int, width: Int,
-                          re: Array[Double], im: Array[Double])
 
   /** Per-component GDALCopyWords conversion: srcFloat selects the
     * float→int rounding vs the int→int plain clamp. Signed integer
@@ -74,35 +73,41 @@ object ComplexPixels {
     }
   }
 
-  /** `-ot`-style cast of a strip dataset between pixel types. */
-  def convert(strips: Dataset[CPlane], src: PixType, dst: PixType): Dataset[CPlane] = {
+  /** `-ot`-style cast of a strip dataset between pixel types. A complex
+    * destination has two bands (a promoted real source gets a zero im
+    * plane); a real destination keeps band 0 only.
+    */
+  def convert(strips: Dataset[DStrip], src: PixType, dst: PixType): Dataset[DStrip] = {
     import strips.sparkSession.implicits._
     val q = quantizer(src.isFloat, dst)
     strips.map { s =>
-      val re = s.re.map(q)
-      val im =
-        if (dst.isComplex && src.isComplex && s.im != null) s.im.map(q)
-        else if (dst.isComplex) new Array[Double](s.re.length) // promote: im = 0
-        else null // demote: keep real component only
-      s.copy(re = re, im = im)
+      val plane = s.vals.length / s.bands
+      val outBands = if (dst.isComplex) 2 else 1
+      val kept = if (dst.isComplex && src.isComplex) s.bands else 1
+      val out = new Array[Double](outBands * plane)
+      var i = 0
+      while (i < kept * plane) { out(i) = q(s.vals(i)); i += 1 }
+      s.copy(vals = out, bands = outBands)
     }
   }
 
   /** Distributed GDALChecksumImage over (possibly complex) strips: each
     * strip contributes a phase-keyed partial over its interleaved words.
     */
-  def checksum(strips: Dataset[CPlane], typ: PixType): Int = {
+  def checksum(strips: Dataset[DStrip], typ: PixType): Int = {
     import strips.sparkSession.implicits._
     val complex = typ.isComplex
     val floatPath = typ.isFloat
     val partials = strips.map { s =>
-      val wordsPerRow = if (complex && s.im != null) s.width * 2 else s.width
+      val plane = s.vals.length / s.bands
+      val interleave = complex && s.bands == 2
+      val wordsPerRow = (if (interleave) 2 else 1) * plane / s.height
       val words = new Array[Double](s.height * wordsPerRow)
       var i = 0; var o = 0
-      while (i < s.re.length) {
-        if (complex && s.im != null) {
-          words(o) = s.re(i); words(o + 1) = s.im(i); o += 2
-        } else { words(o) = s.re(i); o += 1 }
+      while (i < plane) {
+        if (interleave) {
+          words(o) = s.vals(i); words(o + 1) = s.vals(plane + i); o += 2
+        } else { words(o) = s.vals(i); o += 1 }
         i += 1
       }
       val start = s.yOff.toLong * wordsPerRow
@@ -121,12 +126,12 @@ object ComplexPixels {
   /** ComputeStatistics parity: real component only (population stddev,
     * like the reference's dfM2/nSampleCount).
     */
-  def stats(strips: Dataset[CPlane]): Stats = {
+  def stats(strips: Dataset[DStrip]): Stats = {
     import strips.sparkSession.implicits._
     val partials = strips.map { s =>
       var mn = Double.MaxValue; var mx = Double.MinValue
       var sum = 0.0; var sumSq = 0.0; var n = 0L
-      s.re.foreach { v =>
+      s.band(0).foreach { v =>
         if (!v.isNaN) {
           if (v < mn) mn = v
           if (v > mx) mx = v

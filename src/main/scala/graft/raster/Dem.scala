@@ -20,8 +20,20 @@ import graft.core.GeoTransform
   */
 object Dem {
 
-  /** One strip of double-valued pixels. */
-  final case class DStrip(stripIdx: Int, yOff: Int, height: Int, vals: Array[Double])
+  /** One strip of double-valued pixels: `bands` planes of `height` rows,
+    * stored band-sequentially. Band `b` is `vals(b·plane until
+    * (b+1)·plane)` with `plane = vals.length / bands`; the width is
+    * `plane / height`. Single-band operators read `bands = 1` (the whole of
+    * `vals`).
+    */
+  final case class DStrip(stripIdx: Int, yOff: Int, height: Int, vals: Array[Double],
+                          bands: Int = 1) {
+    /** A copy of band `b`'s plane. */
+    def band(b: Int): Array[Double] = {
+      val plane = vals.length / bands
+      java.util.Arrays.copyOfRange(vals, b * plane, (b + 1) * plane)
+    }
+  }
 
   /** Local row `r` of `s` as a one-row strip. */
   private[raster] def row(s: DStrip, r: Int): DStrip = {

@@ -1,6 +1,7 @@
 package graft.raster
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.raster.Overview.IStrip
 
 /** Collar removal — `nearblack` (`/root/reference/gdal/apps/
   * nearblack_lib.cpp`): pixels within `nearDist` of a collar color
@@ -22,12 +23,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * [[StripScan.CappedSum]] rule (top-down reads `above`, bottom-up reads
   * `below`) followed by an exact per-strip replay — no driver state at
   * any width.
+  *
+  * Strips are [[Overview.IStrip]]s with `bands = n`, one plane per input
+  * band in input order (band-sequential `vals`); a collar color lists one
+  * value per band in that order.
   */
 object NearBlack extends Serializable {
-
-  /** Multi-band integer strip: bands(b)(r*w + c). */
-  final case class NBStrip(stripIdx: Int, yOff: Int, height: Int,
-                           bands: Array[Array[Int]])
 
   final case class Opts(nearDist: Int = 15, maxNonBlack: Int = 2,
                         nearWhite: Boolean = false,
@@ -43,15 +44,16 @@ object NearBlack extends Serializable {
   /** Pixel is NON-collar iff it matches no color within nearDist on every
     * band (`nearblack_lib.cpp:545-567`).
     */
-  @inline private def isNonBlack(bands: Array[Array[Int]], idx: Int,
+  @inline private def isNonBlack(s: IStrip, idx: Int,
                                  colors: Array[Array[Int]], dist: Int): Boolean = {
+    val plane = s.width * s.height
     var iColor = 0
     while (iColor < colors.length) {
       val col = colors(iColor)
       var non = false
       var b = 0
-      while (!non && b < bands.length) {
-        val pix = bands(b)(idx)
+      while (!non && b < s.bands) {
+        val pix = s.vals(b * plane + idx)
         if (col(b) - pix > dist || pix > dist + col(b)) non = true
         b += 1
       }
@@ -61,8 +63,15 @@ object NearBlack extends Serializable {
     true
   }
 
+  /** Set every band of pixel `idx` to `v`. */
+  @inline private def smash(s: IStrip, idx: Int, v: Int): Unit = {
+    val plane = s.width * s.height
+    var b = 0
+    while (b < s.bands) { s.vals(b * plane + idx) = v; b += 1 }
+  }
+
   /** One ProcessLine invocation (vertical + one horizontal direction). */
-  private def processLine(bands: Array[Array[Int]], rowOff: Int, w: Int,
+  private def processLine(s: IStrip, rowOff: Int,
                           counts: Array[Int], opts: Opts,
                           colors: Array[Array[Int]],
                           iStart: Int, iEnd: Int,
@@ -70,20 +79,18 @@ object NearBlack extends Serializable {
     val dist = opts.nearDist
     val repl = opts.replaceValue
     val maxNB = opts.maxNonBlack
+    val w = s.width
     if (doVertical) {
       var i = 0
       while (i < w) {
         if (counts(i) <= maxNB) {
-          val non = isNonBlack(bands, rowOff + i, colors, dist)
+          val non = isNonBlack(s, rowOff + i, colors, dist)
           var skip = false
           if (non) {
             counts(i) += 1
             if (counts(i) > maxNB) skip = true
           }
-          if (!skip) {
-            var b = 0
-            while (b < bands.length) { bands(b)(rowOff + i) = repl; b += 1 }
-          }
+          if (!skip) smash(s, rowOff + i, repl)
         }
         i += 1
       }
@@ -96,16 +103,13 @@ object NearBlack extends Serializable {
     var i = iStart
     while (i != iEnd) {
       if (doTest) {
-        val non = isNonBlack(bands, rowOff + i, colors, dist)
+        val non = isNonBlack(s, rowOff + i, colors, dist)
         if (non) {
           if (counts(i) <= hMax) nNonBlack = counts(i)
           else nNonBlack += 1
         }
         if (nNonBlack > hMax) doTest = false
-        else {
-          var b = 0
-          while (b < bands.length) { bands(b)(rowOff + i) = repl; b += 1 }
-        }
+        else smash(s, rowOff + i, repl)
       } else if (counts(i) == 0) {
         doTest = true
         nNonBlack = 0
@@ -117,50 +121,50 @@ object NearBlack extends Serializable {
   /** Replay one pass over a strip IN PLACE, given the per-column counts
     * entering the strip (mutated to the exiting counts).
     */
-  private def processStrip(bands: Array[Array[Int]], w: Int, height: Int,
-                           counts: Array[Int], opts: Opts,
+  private def processStrip(s: IStrip, counts: Array[Int], opts: Opts,
                            colors: Array[Array[Int]], bottomUp: Boolean): Unit = {
-    val rows = if (bottomUp) (height - 1) to 0 by -1 else 0 until height
+    val w = s.width
+    val rows = if (bottomUp) (s.height - 1) to 0 by -1 else 0 until s.height
     rows.foreach { r =>
-      processLine(bands, r * w, w, counts, opts, colors, iStart = 0, iEnd = w - 1,
+      processLine(s, r * w, counts, opts, colors, iStart = 0, iEnd = w - 1,
         doVertical = true, bottomUp = bottomUp)
-      processLine(bands, r * w, w, counts, opts, colors, iStart = w - 1, iEnd = 0,
+      processLine(s, r * w, counts, opts, colors, iStart = w - 1, iEnd = 0,
         doVertical = false, bottomUp = bottomUp)
     }
   }
 
   /** Exact single-node port (both passes), for tests and tiny rasters. */
   def local(bands0: Array[Array[Int]], w: Int, h: Int, opts: Opts = Opts()): Array[Array[Int]] = {
-    val bands = bands0.map(_.clone())
-    val colors = opts.colorList(bands.length)
-    processStrip(bands, w, h, new Array[Int](w), opts, colors, bottomUp = false)
-    processStrip(bands, w, h, new Array[Int](w), opts, colors, bottomUp = true)
-    bands
+    val s = IStrip(0, 0, h, w, Array.concat(bands0: _*), bands0.length)
+    val colors = opts.colorList(s.bands)
+    processStrip(s, new Array[Int](w), opts, colors, bottomUp = false)
+    processStrip(s, new Array[Int](w), opts, colors, bottomUp = true)
+    Array.tabulate(s.bands)(s.band)
   }
 
   /** Distributed nearblack over strips (both passes). */
-  def apply(spark: SparkSession, strips: Dataset[NBStrip], w: Int, h: Int,
-            opts: Opts = Opts()): Dataset[NBStrip] =
+  def apply(spark: SparkSession, strips: Dataset[IStrip], w: Int, h: Int,
+            opts: Opts = Opts()): Dataset[IStrip] =
     pass(spark, pass(spark, strips, w, opts, bottomUp = false), w, opts, bottomUp = true)
 
   /** One pass: the per-column non-collar counts entering each strip (a
     * saturating [[StripScan.scan]], read from `above` top-down and from
     * `below` bottom-up) feed an exact per-strip replay.
     */
-  private def pass(spark: SparkSession, strips: Dataset[NBStrip], w: Int,
-                   opts: Opts, bottomUp: Boolean): Dataset[NBStrip] = {
+  private def pass(spark: SparkSession, strips: Dataset[IStrip], w: Int,
+                   opts: Opts, bottomUp: Boolean): Dataset[IStrip] = {
     import spark.implicits._
     val cap = opts.maxNonBlack + 1
     // per-strip per-column clamped non-collar counts (from pristine pass
     // input — vertical tests never see same-pass mutations of OTHER rows)
-    def counts(s: NBStrip): StripScan.StripCols = {
-      val colors = opts.colorList(s.bands.length)
+    def counts(s: IStrip): StripScan.StripCols = {
+      val colors = opts.colorList(s.bands)
       val f = new Array[Long](w)
       var r = 0
       while (r < s.height) {
         var c = 0
         while (c < w) {
-          if (f(c) < cap && isNonBlack(s.bands, r * w + c, colors, opts.nearDist))
+          if (f(c) < cap && isNonBlack(s, r * w + c, colors, opts.nearDist))
             f(c) += 1
           c += 1
         }
@@ -171,9 +175,9 @@ object NearBlack extends Serializable {
     StripScan.scan(strips, w, StripScan.CappedSum(cap))(_.stripIdx, counts)
       .map { case (s, in) =>
         val entering = (if (bottomUp) in.below else in.above).map(_.toInt)
-        val bands = s.bands.map(_.clone())
-        processStrip(bands, w, s.height, entering, opts, opts.colorList(bands.length), bottomUp)
-        NBStrip(s.stripIdx, s.yOff, s.height, bands)
+        val out = s.copy(vals = s.vals.clone())
+        processStrip(out, entering, opts, opts.colorList(out.bands), bottomUp)
+        out
       }
   }
 }

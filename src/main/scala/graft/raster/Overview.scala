@@ -18,7 +18,19 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   */
 object Overview {
 
-  final case class IStrip(stripIdx: Int, yOff: Int, height: Int, width: Int, vals: Array[Int])
+  /** One strip of integer pixels: `bands` planes of `width × height`,
+    * stored band-sequentially. Band `b` is `vals(b·plane until
+    * (b+1)·plane)` with `plane = width · height`; within a plane, row-major.
+    * Single-band operators read `bands = 1` (the whole of `vals`).
+    */
+  final case class IStrip(stripIdx: Int, yOff: Int, height: Int, width: Int, vals: Array[Int],
+                          bands: Int = 1) {
+    /** A copy of band `b`'s plane. */
+    def band(b: Int): Array[Int] = {
+      val plane = width * height
+      java.util.Arrays.copyOfRange(vals, b * plane, (b + 1) * plane)
+    }
+  }
 
   /** Local row `r` of `s` as a one-row strip. */
   private[raster] def row(s: IStrip, r: Int): IStrip =
@@ -93,26 +105,25 @@ object Overview {
     IStrip(s.stripIdx, s.yOff / 2, oh, ow, out)
   }
 
-  /** Complex-valued strip (interleaved-free: parallel re/im planes) —
-    * the engine's CFloat32 slice for overview building.
-    */
-  final case class CStrip(stripIdx: Int, yOff: Int, height: Int, width: Int,
-                          re: Array[Float], im: Array[Float])
-
   /** AVERAGE_MAGPHASE 2× downsample of a complex strip — exact port of
     * `gcore/overview.cpp:1867`: average the real and imaginary parts
     * (float-cast, like the reference's float scanline), then rescale the
     * averaged vector so its magnitude equals the AVERAGE of the source
     * magnitudes (phases average through the vector sum, magnitude is
     * preserved explicitly).
+    *
+    * The strip is a CFloat32 slice: a [[Dem.DStrip]] with `bands = 2`,
+    * band 0 the real and band 1 the imaginary plane, every value
+    * float-representable. The output keeps that layout and every stored
+    * value is a float widened to double.
     */
-  def downsampleComplexMagPhase(s: CStrip): CStrip = {
+  def downsampleComplexMagPhase(s: Dem.DStrip): Dem.DStrip = {
     require(s.yOff % 2 == 0, s"strip yOff ${s.yOff} not 2-aligned")
-    val w = s.width
+    val plane = s.vals.length / 2
+    val w = plane / s.height
     val ow = (w + 1) / 2
     val oh = (s.height + 1) / 2
-    val ore = new Array[Float](ow * oh)
-    val oim = new Array[Float](ow * oh)
+    val out = new Array[Double](2 * ow * oh)
     var oy = 0
     while (oy < oh) {
       var ox = 0
@@ -125,8 +136,8 @@ object Overview {
           var dx = 0
           while (dx < 2) {
             if (x0 + dx < w && y0 + dy < s.height) {
-              val r = s.re((y0 + dy) * w + x0 + dx).toDouble
-              val i = s.im((y0 + dy) * w + x0 + dx).toDouble
+              val r = s.vals((y0 + dy) * w + x0 + dx)
+              val i = s.vals(plane + (y0 + dy) * w + x0 + dx)
               totalR += r; totalI += i
               totalM += math.sqrt(r * r + i * i)
               count += 1
@@ -147,17 +158,19 @@ object Overview {
           fr = fr * ratio
           fi = fi * ratio
         }
-        ore(oy * ow + ox) = fr
-        oim(oy * ow + ox) = fi
+        out(oy * ow + ox) = fr.toDouble
+        out(ow * oh + oy * ow + ox) = fi.toDouble
         ox += 1
       }
       oy += 1
     }
-    CStrip(s.stripIdx, s.yOff / 2, oh, ow, ore, oim)
+    Dem.DStrip(s.stripIdx, s.yOff / 2, oh, out, bands = 2)
   }
 
-  /** One complex pyramid level (shuffle-free map). */
-  def levelComplexMagPhase(strips: Dataset[CStrip]): Dataset[CStrip] = {
+  /** One complex pyramid level (shuffle-free map) over CFloat32 strips
+    * (`bands = 2`: re, im).
+    */
+  def levelComplexMagPhase(strips: Dataset[Dem.DStrip]): Dataset[Dem.DStrip] = {
     import strips.sparkSession.implicits._
     strips.map(downsampleComplexMagPhase)
   }

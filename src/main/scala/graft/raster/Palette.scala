@@ -1,5 +1,8 @@
 package graft.raster
 
+import scala.jdk.CollectionConverters._
+import graft.raster.Overview.IStrip
+
 /** RGB→paletted conversion: median-cut color quantization + Floyd-
   * Steinberg-style dithering. Faithful ports of
   * `/root/reference/gdal/alg/gdalmediancut.cpp:282`
@@ -9,6 +12,9 @@ package graft.raster
   * lookup cube, one-line error buffer with the 1/6-weighted diffusion).
   * Golden gate: rgbsmall.tif → 8 colors + checksum 8803
   * (`autotest/alg/dither.py:66-77`).
+  *
+  * Distributed entries read [[Overview.IStrip]]s with `bands = 3`: band 0
+  * red, band 1 green, band 2 blue, 8-bit values.
   */
 object Palette {
 
@@ -226,22 +232,18 @@ object Palette {
     */
   def dither(red: Array[Int], green: Array[Int], blue: Array[Int],
              w: Int, h: Int, pct: Array[Color]): Array[Int] =
-    ditherChunk(red, green, blue, w, h, pct, buildColorMap(pct),
+    ditherChunk(Array.concat(red, green, blue), w, h, pct, buildColorMap(pct),
       new Array[Int]((w + 2) * 3))
 
   // ------------------------------------------------------------------
   // Distributed entry points
   // ------------------------------------------------------------------
 
-  /** One strip of 8-bit RGB planes. */
-  final case class RGBStrip(stripIdx: Int, yOff: Int, height: Int,
-                            r: Array[Int], g: Array[Int], b: Array[Int])
-
   /** Distributed median-cut: per-partition partial 32³ histograms reduced
     * to one (2^15 ints — tiny), box splitting on the driver. The only
     * full-raster pass is the embarrassingly-parallel histogram.
     */
-  def medianCutStrips(strips: org.apache.spark.sql.Dataset[RGBStrip],
+  def medianCutStrips(strips: org.apache.spark.sql.Dataset[IStrip],
                       nColors: Int): Array[Color] = {
     import strips.sparkSession.implicits._
     val agg = strips.mapPartitions { it =>
@@ -249,9 +251,9 @@ object Palette {
       var total = 0L
       it.foreach { s =>
         var i = 0
-        val n = s.r.length
+        val n = s.width * s.height
         while (i < n) {
-          hist(hidx(s.r(i) >> Shift, s.g(i) >> Shift, s.b(i) >> Shift)) += 1
+          hist(hidx(s.vals(i) >> Shift, s.vals(n + i) >> Shift, s.vals(2 * n + i) >> Shift)) += 1
           i += 1
         }
         total += n
@@ -275,92 +277,16 @@ object Palette {
     * precomputed. Returns an iterator so callers can stream results to a
     * sink without materializing the raster.
     */
-  def ditherStripsStreamed(strips: org.apache.spark.sql.Dataset[RGBStrip],
+  def ditherStripsStreamed(strips: org.apache.spark.sql.Dataset[IStrip],
                            pct: Array[Color]): Iterator[(Int, Int, Array[Int])] = {
     val colorMap = buildColorMap(pct)
     val ordered = strips.orderBy(org.apache.spark.sql.functions.col("stripIdx"))
     var errLine: Array[Int] = null
     ordered.toLocalIterator().asScala.map { s =>
-      val w = s.r.length / s.height
-      if (errLine == null) errLine = new Array[Int]((w + 2) * 3)
-      val out = ditherChunk(s.r, s.g, s.b, w, s.height, pct, colorMap, errLine)
+      if (errLine == null) errLine = new Array[Int]((s.width + 2) * 3)
+      val out = ditherChunk(s.vals, s.width, s.height, pct, colorMap, errLine)
       (s.stripIdx, s.yOff, out)
     }
-  }
-
-  /** Executor-chained exact dither: removes the driver pixel-bandwidth
-    * ceiling of [[ditherStripsStreamed]]. Strips are cached one-per-
-    * partition; for each strip IN ORDER the driver launches a single-
-    * partition job that dithers the strip ON ITS EXECUTOR, hands the
-    * dithered pixels to `sink` executor-side (write a tile, append to a
-    * part file…), and returns ONLY the O(width) carried error line to
-    * the driver, which threads it into the next strip's job. The scan
-    * stays a strict serial recurrence (as in the reference's
-    * GDALDitherRGB2PCT single pass) but pixel data never crosses the
-    * driver, so throughput is bounded by one executor core + sink, not
-    * by driver ingress. Bit-identical to [[ditherStripsStreamed]]
-    * (same ditherChunk, same order — asserted in PaletteSpec).
-    */
-  def ditherStripsChained(strips: org.apache.spark.sql.Dataset[RGBStrip],
-                          pct: Array[Color],
-                          sink: (Int, Int, Array[Int]) => Unit): Unit = {
-    val spark = strips.sparkSession
-    val sc = spark.sparkContext
-    val colorMapB = sc.broadcast(buildColorMap(pct))
-    val pctB = sc.broadcast(pct)
-    // rank-remap stripIdx so the serial chain visits strips in stripIdx
-    // ORDER even when indices are non-contiguous (filtered/tiled inputs):
-    // partition r holds the strip of rank r, matching the streamed
-    // variant's orderBy(stripIdx) semantics exactly
-    val ranks: Map[Int, Int] = {
-      import spark.implicits._
-      val idxs = strips.select("stripIdx").as[Int].collect().sorted
-      // duplicate stripIdx would collapse to one rank in the map, silently
-      // co-locating both strips in one partition where they'd be dithered
-      // from the same carried-in error line in arbitrary order
-      require(idxs.length == idxs.distinct.length,
-        s"ditherStripsChained: duplicate stripIdx values in input " +
-          s"(${idxs.length} strips, ${idxs.distinct.length} distinct)")
-      idxs.zipWithIndex.toMap
-    }
-    val n = ranks.size
-    if (n == 0) return
-    val ranksB = sc.broadcast(ranks)
-    val byIdx = strips.rdd.map(s => (ranksB.value(s.stripIdx), s))
-      .partitionBy(new org.apache.spark.HashPartitioner(n) {
-        override def getPartition(key: Any): Int = key.asInstanceOf[Int] % n
-      })
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    byIdx.count() // materialize once before the serial chain
-    var err: Array[Int] = null
-    var i = 0
-    while (i < n) {
-      val errIn = err
-      val res = sc.runJob(byIdx, (it: Iterator[(Int, RGBStrip)]) => {
-        var out: Array[Int] = null
-        it.foreach { case (_, s) =>
-          val w = s.r.length / s.height
-          val e = if (errIn == null) new Array[Int]((w + 2) * 3) else errIn.clone()
-          val px = ditherChunk(s.r, s.g, s.b, w, s.height, pctB.value,
-            colorMapB.value, e)
-          sink(s.stripIdx, s.yOff, px)
-          out = e
-        }
-        out
-      }, Seq(i))
-      err = res(0)
-      i += 1
-    }
-    byIdx.unpersist(false)
-  }
-
-  private def asScalaHelper[T](it: java.util.Iterator[T]): Iterator[T] =
-    new Iterator[T] {
-      override def hasNext: Boolean = it.hasNext
-      override def next(): T = it.next()
-    }
-  private implicit class JIter[T](val it: java.util.Iterator[T]) {
-    def asScala: Iterator[T] = asScalaHelper(it)
   }
 
   /** The 5-bit nearest-color cube (pabyColorMap path), shared by the
@@ -387,12 +313,13 @@ object Palette {
   }
 
   /** Dither a chunk of rows, mutating `err` (the carried error line) so
-    * consecutive chunks chain exactly like one continuous scan.
+    * consecutive chunks chain exactly like one continuous scan. `rgb` holds
+    * the red, green and blue planes of `w × h` back to back.
     */
-  private[raster] def ditherChunk(red: Array[Int], green: Array[Int], blue: Array[Int],
-                                  w: Int, h: Int, pct: Array[Color],
+  private[raster] def ditherChunk(rgb: Array[Int], w: Int, h: Int, pct: Array[Color],
                                   colorMap: Array[Int], err: Array[Int]): Array[Int] = {
-    val out = new Array[Int](w * h)
+    val plane = w * h
+    val out = new Array[Int](plane)
     val lineR = new Array[Int](w)
     val lineG = new Array[Int](w)
     val lineB = new Array[Int](w)
@@ -401,9 +328,9 @@ object Palette {
     while (y < h) {
       var i = 0
       while (i < w) {
-        lineR(i) = clamp(red(y * w + i) + err(i * 3 + 3))
-        lineG(i) = clamp(green(y * w + i) + err(i * 3 + 4))
-        lineB(i) = clamp(blue(y * w + i) + err(i * 3 + 5))
+        lineR(i) = clamp(rgb(y * w + i) + err(i * 3 + 3))
+        lineG(i) = clamp(rgb(plane + y * w + i) + err(i * 3 + 4))
+        lineB(i) = clamp(rgb(2 * plane + y * w + i) + err(i * 3 + 5))
         i += 1
       }
       java.util.Arrays.fill(err, 0)

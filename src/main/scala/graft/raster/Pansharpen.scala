@@ -13,12 +13,11 @@ import graft.raster.Dem.DStrip
   * The spectral bands are expected pre-upsampled to the pan grid (use
   * [[Warp]] bilinear for the reference's default upsampling). Strips make
   * the per-pixel fusion embarrassingly parallel.
+  *
+  * Strips are [[Dem.DStrip]]s with `bands = 1 + N`: band 0 is pan, bands
+  * 1..N the spectral bands in weight order (fused on output).
   */
 object Pansharpen {
-
-  /** One aligned strip: pan plus N spectral bands of the same extent. */
-  final case class MultiStrip(stripIdx: Int, yOff: Int, height: Int,
-                              pan: Array[Double], spectral: Array[Array[Double]])
 
   /** Single-strip kernel (the exact reference formula, double work type). */
   def broveyStrip(pan: Array[Double], spectral: Array[Array[Double]],
@@ -54,12 +53,17 @@ object Pansharpen {
     out
   }
 
-  /** Distributed fusion over aligned strips. */
-  def brovey(strips: Dataset[MultiStrip], weights: Array[Double],
-             noData: Double = Double.NaN, maxValue: Double = 0.0): Dataset[MultiStrip] = {
+  /** Distributed fusion over aligned strips: band 0 passes through, bands
+    * 1..N are replaced by their fused planes.
+    */
+  def brovey(strips: Dataset[DStrip], weights: Array[Double],
+             noData: Double = Double.NaN, maxValue: Double = 0.0): Dataset[DStrip] = {
     import strips.sparkSession.implicits._
     strips.map { s =>
-      s.copy(spectral = broveyStrip(s.pan, s.spectral, weights, noData, maxValue))
+      val pan = s.band(0)
+      val fused = broveyStrip(pan, Array.tabulate(s.bands - 1)(b => s.band(b + 1)),
+        weights, noData, maxValue)
+      s.copy(vals = Array.concat(pan +: fused: _*))
     }
   }
 }

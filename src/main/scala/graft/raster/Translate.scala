@@ -273,21 +273,23 @@ object Translate {
   /** `-expand rgb`: paletted single band → RGB planes via the color table
     * (`gdal_translate_lib.cpp` -expand; a pure per-pixel LUT map, fully
     * parallel). Out-of-range indices map to (0,0,0) like a missing entry.
+    * Returns strips with `bands = 3` (red, green, blue), the layout
+    * [[Palette]]'s distributed entries read.
     */
-  def expandRgb(strips: Dataset[IStrip], palette: Array[Palette.Color]): Dataset[Palette.RGBStrip] = {
+  def expandRgb(strips: Dataset[IStrip], palette: Array[Palette.Color]): Dataset[IStrip] = {
     import strips.sparkSession.implicits._
     strips.map { s =>
       val n = s.vals.length
-      val r = new Array[Int](n); val g = new Array[Int](n); val b = new Array[Int](n)
+      val rgb = new Array[Int](3 * n)
       var i = 0
       while (i < n) {
         val idx = s.vals(i)
         if (idx >= 0 && idx < palette.length) {
-          r(i) = palette(idx).r; g(i) = palette(idx).g; b(i) = palette(idx).b
+          rgb(i) = palette(idx).r; rgb(n + i) = palette(idx).g; rgb(2 * n + i) = palette(idx).b
         }
         i += 1
       }
-      Palette.RGBStrip(s.stripIdx, s.yOff, s.height, r, g, b)
+      IStrip(s.stripIdx, s.yOff, s.height, s.width, rgb, bands = 3)
     }
   }
 }

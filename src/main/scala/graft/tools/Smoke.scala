@@ -222,13 +222,13 @@ object Smoke {
       // nearblack: constant-collar frame removed
       val nbStrips = (0 until 8 by 3).zipWithIndex.map { case (y0, i) =>
         val hh = math.min(3, 8 - y0)
-        NearBlack.NBStrip(i, y0, hh, Array(Array.tabulate(hh * 10) { k =>
+        graft.raster.Overview.IStrip(i, y0, hh, 10, Array.tabulate(hh * 10) { k =>
           val x = k % 10; val y = y0 + k / 10
           if (x >= 2 && x < 8 && y >= 2 && y < 6) 120 else 4
-        }))
+        })
       }.toDS()
       val nb = NearBlack(spark, nbStrips, 10, 8, NearBlack.Opts(nearDist = 10, maxNonBlack = 0))
-        .collect().sortBy(_.yOff).flatMap(_.bands(0))
+        .collect().sortBy(_.yOff).flatMap(_.vals)
       assert(nb.count(_ == 120) == 24 && nb.count(_ == 0) == 56, "nearblack collar")
       // RAT histogram + XML round trip
       val ratStrips = (0 until 8 by 3).zipWithIndex.map { case (y0, i) =>

@@ -84,4 +84,49 @@ class GraphKShortestSpec extends AnyFunSuite {
       assert(math.abs(d.getDouble(1) - m.getDouble(1)) < 1e-9)
     }
   }
+
+  /** 0 → 1 → … → 52, unit weights: every shortest path from 0 is as long
+    * as its target id, up to 52 hops.
+    */
+  private def chain = {
+    import spark.implicits._
+    (0L until 52L).map(u => (u, u + 1, 1.0)).toDF("u", "v", "w")
+  }
+
+  test("shortestPaths settles a 52-edge chain") {
+    import spark.implicits._
+    val sp = GraphOps.shortestPaths(chain, col("u"), col("v"), col("w"), 0L)
+      .as[(Long, Double)].collect().toMap
+    assert(sp === (0L to 52L).map(v => v -> v.toDouble).toMap)
+  }
+
+  test("distributed kShortestPaths settles a 52-hop spur search") {
+    import spark.implicits._
+    // plus a direct 0 → 52 edge, so the second level finds a 1-hop path
+    val edges = chain.union(Seq((0L, 52L, 100.0)).toDF("u", "v", "w"))
+    def run() = GraphOps.kShortestPaths(edges, col("u"), col("v"), col("w"),
+      0L, 52L, 2).orderBy("rank").collect().map(_.toSeq).toSeq
+    val dist = DriverRowLimit(1L)(run())
+    assert(dist === Seq(Seq(1, 52.0, 52, (0 to 52).mkString("-")), Seq(2, 100.0, 1, "0-52")))
+    assert(dist === run())
+  }
+
+  test("negative, NaN and null weights are rejected naming the edge") {
+    import spark.implicits._
+    for (bad <- Seq(Some(-1.0), Some(Double.NaN), None)) {
+      val edges = Seq((0L, 1L, Some(1.0)), (1L, 2L, bad)).toDF("u", "v", "w")
+      val runs = Seq[(String, () => Any)](
+        "shortestPaths" -> (() =>
+          GraphOps.shortestPaths(edges, col("u"), col("v"), col("w"), 0L).collect()),
+        "driver kShortestPaths" -> (() =>
+          GraphOps.kShortestPaths(edges, col("u"), col("v"), col("w"), 0L, 2L, 2).collect()),
+        "distributed kShortestPaths" -> (() => DriverRowLimit(1L) {
+          GraphOps.kShortestPaths(edges, col("u"), col("v"), col("w"), 0L, 2L, 2).collect()
+        }))
+      for ((name, run) <- runs) {
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains("edge 1 -> 2 has weight"), s"$name, weight $bad")
+      }
+    }
+  }
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.raster.NearBlack
-import graft.raster.NearBlack.{NBStrip, Opts}
+import graft.raster.NearBlack.Opts
+import graft.raster.Overview.IStrip
 
 /** nearblack collar removal: distributed == serial port across strip
   * layouts, multi-band + near-white variants, tolerance semantics.
@@ -28,7 +29,8 @@ class NearBlackSpec extends AnyFunSuite {
   private def toStrips(bands: Array[Array[Int]], stripH: Int) =
     (0 until H by stripH).zipWithIndex.map { case (y0, idx) =>
       val hh = math.min(stripH, H - y0)
-      NBStrip(idx, y0, hh, bands.map(b => java.util.Arrays.copyOfRange(b, y0 * W, (y0 + hh) * W)))
+      IStrip(idx, y0, hh, W,
+        bands.flatMap(b => java.util.Arrays.copyOfRange(b, y0 * W, (y0 + hh) * W)), bands.length)
     }.toDS()
 
   test("distributed equals the serial port across strip layouts and band counts") {
@@ -38,7 +40,7 @@ class NearBlackSpec extends AnyFunSuite {
       val expect = NearBlack.local(bands, W, H, opts)
       val got = NearBlack(spark, toStrips(bands, stripH), W, H, opts)
         .collect().sortBy(_.yOff)
-      val flat = Array.tabulate(nBands)(b => got.flatMap(_.bands(b)))
+      val flat = Array.tabulate(nBands)(b => got.flatMap(_.band(b)))
       for (b <- 0 until nBands)
         assert(flat(b).toSeq === expect(b).toSeq,
           s"bands=$nBands stripH=$stripH opts=$opts band=$b")
@@ -77,10 +79,10 @@ class NearBlackSpec extends AnyFunSuite {
     // the shielded 3×3 block must SURVIVE in the serial truth
     assert(expect(0)(4 * w9 + 4) === 5, "fixture must shield the block")
     val strips = (0 until h9 by 3).zipWithIndex.map { case (y0, idx) =>
-      NBStrip(idx, y0, 3, Array(java.util.Arrays.copyOfRange(vals, y0 * w9, (y0 + 3) * w9)))
+      IStrip(idx, y0, 3, w9, java.util.Arrays.copyOfRange(vals, y0 * w9, (y0 + 3) * w9))
     }.toDS()
     val got = NearBlack(spark, strips, w9, h9, opts)
-      .collect().sortBy(_.yOff).flatMap(_.bands(0))
+      .collect().sortBy(_.yOff).flatMap(_.vals)
     assert(got.toSeq === expect(0).toSeq)
   }
 
@@ -94,10 +96,10 @@ class NearBlackSpec extends AnyFunSuite {
       val expect = NearBlack.local(Array(vals), w, h, opts)
       val strips = (0 until h by stripH).zipWithIndex.map { case (y0, idx) =>
         val hh = math.min(stripH, h - y0)
-        NBStrip(idx, y0, hh, Array(java.util.Arrays.copyOfRange(vals, y0 * w, (y0 + hh) * w)))
+        IStrip(idx, y0, hh, w, java.util.Arrays.copyOfRange(vals, y0 * w, (y0 + hh) * w))
       }.toDS()
       val got = NearBlack(spark, strips, w, h, opts)
-        .collect().sortBy(_.yOff).flatMap(_.bands(0))
+        .collect().sortBy(_.yOff).flatMap(_.vals)
       assert(got.toSeq === expect(0).toSeq, s"seed=$seed stripH=$stripH")
     }
   }

@@ -2,13 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.raster.{Checksum, Palette}
+import graft.raster.Overview.IStrip
 
 /** Median-cut + dither golden parity (`autotest/alg/dither.py:43-90`):
   * rgbsmall.tif (50×50 RGB, DEFLATE planes extracted) → 8-color table
   * matching the reference entries, dithered band checksum 8803.
   */
 class PaletteSpec extends AnyFunSuite {
-    private val red = graft.fixtures.RasterFixtures.rgbSmallRed
+  private val red = graft.fixtures.RasterFixtures.rgbSmallRed
   private val green = graft.fixtures.RasterFixtures.rgbSmallGreen
   private val blue = graft.fixtures.RasterFixtures.rgbSmallBlue
 
@@ -32,10 +33,7 @@ class PaletteSpec extends AnyFunSuite {
     for (stripH <- Seq(7, 17, 50)) {
       val strips = (0 until 50 by stripH).zipWithIndex.map { case (y0, idx) =>
         val hh = math.min(stripH, 50 - y0)
-        Palette.RGBStrip(idx, y0, hh,
-          java.util.Arrays.copyOfRange(red, y0 * 50, (y0 + hh) * 50),
-          java.util.Arrays.copyOfRange(green, y0 * 50, (y0 + hh) * 50),
-          java.util.Arrays.copyOfRange(blue, y0 * 50, (y0 + hh) * 50))
+        rgbStrip(idx, y0, hh)
       }.toDS()
       val ct = Palette.medianCutStrips(strips, 8)
       assert(ct.map(c => (c.r, c.g, c.b)).toSeq ===
@@ -45,52 +43,28 @@ class PaletteSpec extends AnyFunSuite {
         .toSeq.sortBy(_._2).flatMap(_._3).toArray
       assert(Checksum.finish(Checksum.partialInt(idx, 0, idx.length, 0L)) === 8803,
         s"stripH=$stripH dither checksum")
-
-      // executor-chained variant: pixels go to an executor-side sink,
-      // only error lines cross the driver — must be bit-identical.
-      // (The sink closure is task-serialized even in local mode, so the
-      // spec collects through a JVM-static holder.)
-      DitherSinkHolder.map.clear()
-      Palette.ditherStripsChained(strips, ct,
-        (sIdx, yOff, px) => { DitherSinkHolder.map.put(sIdx, (yOff, px)); () })
-      import scala.jdk.CollectionConverters._
-      val chained = DitherSinkHolder.map.asScala.toSeq
-        .sortBy(_._2._1).flatMap(_._2._2).toArray
-      assert(java.util.Arrays.equals(chained, idx),
-        s"stripH=$stripH chained dither differs from streamed")
     }
   }
 
-  test("chained dither handles non-contiguous strip indices") {
+  test("streamed dither handles non-contiguous strip indices") {
     val spark = SparkTestBase.spark
     import spark.implicits._
-    // stripIdx 0, 2, 4 (as after filtering/tiling) — the chain must still
+    // stripIdx 0, 2, 4 (as after filtering/tiling) — the scan must still
     // visit in stripIdx order with the carried error line intact
     val strips = Seq(0, 2, 4).zipWithIndex.map { case (sIdx, k) =>
       val y0 = k * 17
       val hh = if (k == 2) 16 else 17
-      Palette.RGBStrip(sIdx, y0, hh,
-        java.util.Arrays.copyOfRange(red, y0 * 50, (y0 + hh) * 50),
-        java.util.Arrays.copyOfRange(green, y0 * 50, (y0 + hh) * 50),
-        java.util.Arrays.copyOfRange(blue, y0 * 50, (y0 + hh) * 50))
+      rgbStrip(sIdx, y0, hh)
     }.toDS()
     val ct = Palette.medianCutStrips(strips, 8)
     val streamed = Palette.ditherStripsStreamed(strips, ct)
       .toSeq.sortBy(_._2).flatMap(_._3).toArray
-    DitherSinkHolder.map.clear()
-    Palette.ditherStripsChained(strips, ct,
-      (sIdx, yOff, px) => { DitherSinkHolder.map.put(sIdx, (yOff, px)); () })
-    import scala.jdk.CollectionConverters._
-    val chained = DitherSinkHolder.map.asScala.toSeq
-      .sortBy(_._2._1).flatMap(_._2._2).toArray
-    assert(java.util.Arrays.equals(chained, streamed),
-      "non-contiguous chained dither differs from streamed")
+    assert(java.util.Arrays.equals(streamed, Palette.dither(red, green, blue, 50, 50, ct)),
+      "non-contiguous streamed dither differs from the local dither")
   }
-}
 
-/** JVM-static collection point for the executor-side dither sink (local
-  * mode shares the JVM, so tasks and the spec see the same map).
-  */
-object DitherSinkHolder {
-  val map = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Array[Int])]()
+  /** Rows `y0 until y0 + hh` of rgbsmall as a 3-band strip (r, g, b). */
+  private def rgbStrip(idx: Int, y0: Int, hh: Int): IStrip =
+    IStrip(idx, y0, hh, 50, Array(red, green, blue).flatMap(
+      java.util.Arrays.copyOfRange(_, y0 * 50, (y0 + hh) * 50)), bands = 3)
 }

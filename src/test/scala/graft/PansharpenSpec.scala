@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.raster.Pansharpen
-import graft.raster.Pansharpen.MultiStrip
+import graft.raster.Dem.DStrip
 
 class PansharpenSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -34,14 +34,14 @@ class PansharpenSpec extends AnyFunSuite {
   test("distributed fusion matches the strip kernel") {
     val w = Array(0.25, 0.75)
     val strips = (0 until 4).map { s =>
-      MultiStrip(s, s * 2, 2,
+      DStrip(s, s * 2, 2, Array.concat(
         Array.tabulate(20)(i => 50.0 + s + i),
-        Array(Array.tabulate(20)(i => 10.0 + i), Array.tabulate(20)(i => 30.0 + i)))
+        Array.tabulate(20)(i => 10.0 + i), Array.tabulate(20)(i => 30.0 + i)), bands = 3)
     }
     val got = Pansharpen.brovey(strips.toDS(), w).collect().sortBy(_.stripIdx)
     strips.zip(got).foreach { case (in, res) =>
-      val expect = Pansharpen.broveyStrip(in.pan, in.spectral, w)
-      assert(res.spectral.map(_.toSeq).toSeq === expect.map(_.toSeq).toSeq)
+      val expect = Pansharpen.broveyStrip(in.band(0), Array(in.band(1), in.band(2)), w)
+      assert((1 until res.bands).map(res.band(_).toSeq) === expect.map(_.toSeq).toSeq)
     }
   }
 }

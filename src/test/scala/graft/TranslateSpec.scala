@@ -99,7 +99,10 @@ class TranslateSpec extends AnyFunSuite {
     val idx = strips(4).map(s => s.copy(vals = s.vals.map(_ % 2)))(
       org.apache.spark.sql.Encoders.product[graft.raster.Overview.IStrip])
     val rgb = Translate.expandRgb(idx, pal).collect().sortBy(_.yOff)
-    val flat = rgb.flatMap(s => s.r.indices.map(i => (s.r(i), s.g(i), s.b(i))))
+    val flat = rgb.flatMap { s =>
+      val (r, g, b) = (s.band(0), s.band(1), s.band(2))
+      r.indices.map(i => (r(i), g(i), b(i)))
+    }
     val expect = grid.map(_ % 2).map(i => (pal(i).r, pal(i).g, pal(i).b)).toSeq
     assert(flat.toSeq === expect)
   }
